@@ -20,6 +20,7 @@ from nucliadb_spark.operators import bm25, fusion, knn
 from nucliadb_spark.operators.filters import Expr
 from nucliadb_spark.plans import planner
 from nucliadb_spark.sources import tpch
+from nucliadb_spark.streaming import ingest
 
 FEATURES = ("keyword", "semantic", "graph")
 
@@ -91,9 +92,7 @@ _STATIC_COLS = frozenset(
 # snapshot from the metadata op log (ingest.cdc_meta_log — the
 # fixture's lockdown wave revises security at seq rid+1e6) with the
 # same rid-keyed latest-op-wins every CDC family pays.
-_META_COLS = frozenset(
-    {"security_public", "security_groups", "extra", "source", "language"}
-)
+_META_COLS = frozenset(ingest.META.payload)
 
 # the DERIVED plane (r14 — the last filter rejection lifted):
 # `modified` and `n_chars` are versioned state with NO op log of
@@ -270,7 +269,6 @@ def asof_text_index(
 
     from nucliadb_spark import serving
     from nucliadb_spark.cache import cached_df, cached_names
-    from nucliadb_spark.streaming import ingest
 
     def log_builder() -> DataFrame:
         return ingest.cdc_log(fields)
@@ -284,8 +282,8 @@ def asof_text_index(
             sf_dir,
             "content_text",
             log_builder,
-            ingest.cdc_live_fields,
-            ("rid",),
+            ingest.CONTENT.resolve,
+            ingest.CONTENT.keys,
             seq,
         )
 
@@ -361,7 +359,6 @@ def asof_family_text_index(
 
     from nucliadb_spark import serving
     from nucliadb_spark.cache import cached_df, cached_names
-    from nucliadb_spark.streaming import ingest
 
     slug = key.strip("/").replace("/", "_")
 
@@ -380,8 +377,8 @@ def asof_family_text_index(
                 sf_dir,
                 "fielded_live",
                 log_builder,
-                ingest.cdc_live_fielded,
-                ("rid", "field_id"),
+                ingest.FIELDED.resolve,
+                ingest.FIELDED.keys,
                 seq,
                 log_name="fielded",
             )
@@ -452,9 +449,7 @@ def stub_embed_live(log: DataFrame) -> DataFrame:
     re-embed contract). Module-level so the serving substrate's
     vacuum can fold the family's base with the SAME resolve the
     rephrased find leg serves with."""
-    from nucliadb_spark.streaming import ingest
-
-    return ingest.cdc_live_fields(log).select(
+    return ingest.CONTENT.resolve(log).select(
         "rid",
         models.stub_embedding(F.col("text")).alias("embedding"),
     )
@@ -496,8 +491,6 @@ def asof_live_state(
 
     from nucliadb_spark import serving
     from nucliadb_spark.cache import cached_df, cached_names
-
-    from nucliadb_spark.streaming import ingest
 
     lname = log_name or family
     serving.check_horizon(spark, sf_dir, family, as_of)
@@ -682,8 +675,6 @@ def _build_find_request(
         if planes == {"static"}:
             asof_allowed = fields.filter(filters.to_column()).select("rid")
         else:
-            from nucliadb_spark.streaming import ingest
-
             # each versioned plane the tree reads resolves AS OF the
             # same seq from ITS op log (session-cached + chained via
             # asof_live_state); a mixed tree joins the planes' states
@@ -700,8 +691,8 @@ def _build_find_request(
                     lambda: ingest.cdc_label_log(
                         tpch.fields(spark, sf_dir).select("rid", "labels")
                     ),
-                    ingest.cdc_live_labels,
-                    ("rid",),
+                    ingest.LABELS.resolve,
+                    ingest.LABELS.keys,
                 )
             if "meta" in planes:
                 states["meta"] = asof_live_state(
@@ -710,8 +701,8 @@ def _build_find_request(
                     "meta",
                     as_of,
                     lambda: ingest.cdc_meta_log(fields),
-                    ingest.cdc_live_meta,
-                    ("rid",),
+                    ingest.META.resolve,
+                    ingest.META.keys,
                 )
             if "text" in planes:
                 states["text"] = asof_live_state(
@@ -720,8 +711,8 @@ def _build_find_request(
                     "content_text",
                     as_of,
                     lambda: ingest.cdc_log(fields),
-                    ingest.cdc_live_fields,
-                    ("rid",),
+                    ingest.CONTENT.resolve,
+                    ingest.CONTENT.keys,
                 )
             if "derived" in planes:
                 # modified/n_chars derive from the CONTENT log — the
@@ -734,7 +725,7 @@ def _build_find_request(
                     as_of,
                     lambda: ingest.cdc_log(fields),
                     ingest.cdc_live_derived,
-                    ("rid",),
+                    ingest.CONTENT.keys,
                     log_name="content_text",
                 )
             if len(states) == 1 and "static" not in planes:
@@ -781,16 +772,14 @@ def _build_find_request(
 
         scoped_keys = ["/" + f_ for f_ in normalize_fields(req.fields)]
         if as_of is not None:
-            from nucliadb_spark.streaming import ingest
-
             live_fielded = asof_live_state(
                 spark,
                 sf_dir,
                 "fielded_live",
                 as_of,
                 lambda: ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir)),
-                ingest.cdc_live_fielded,
-                ("rid", "field_id"),
+                ingest.FIELDED.resolve,
+                ingest.FIELDED.keys,
                 log_name="fielded",
             )
             scoped_fields = live_fielded.filter(
@@ -1001,8 +990,6 @@ def _build_find_request(
                 # versions, so untouched rids keep their vectors via
                 # the advance's anti-join — the Arrow UDF pass, the
                 # expensive part, runs over the delta alone)
-                from nucliadb_spark.streaming import ingest
-
                 emb_docs = asof_live_state(
                     spark,
                     sf_dir,
@@ -1010,7 +997,7 @@ def _build_find_request(
                     as_of,
                     lambda: ingest.cdc_log(fields),
                     stub_embed_live,
-                    ("rid",),
+                    ingest.CONTENT.keys,
                     log_name="content_text",
                 )
             else:
@@ -1046,16 +1033,14 @@ def _build_find_request(
                 # chains from the nearest cached one (delta advance),
                 # the first pays the seq-pruned scan + the same max_by
                 # the live vector CDC read pays
-                from nucliadb_spark.streaming import ingest
-
                 vectors = asof_live_state(
                     spark,
                     sf_dir,
                     "vectors",
                     as_of,
                     lambda: ingest.cdc_vector_log(tpch.vectors(spark, sf_dir)),
-                    ingest.cdc_live_vectors,
-                    ("rid",),
+                    ingest.VECTORS.resolve,
+                    ingest.VECTORS.keys,
                 )
             else:
                 vectors = tpch.vectors(spark, sf_dir)
@@ -1094,8 +1079,6 @@ def _build_find_request(
             # read the cached sidecars, a new snapshot chains from
             # the nearest cached one — full-log cost once per
             # (seq, family), not once per request
-            from nucliadb_spark.streaming import ingest
-
             # membership rides the SAME 'content_text' family the
             # text filter plane resolves — one content-log resolution
             # and one cached sidecar per snapshot serve both
@@ -1105,8 +1088,8 @@ def _build_find_request(
                 "content_text",
                 as_of,
                 lambda: ingest.cdc_log(fields),
-                ingest.cdc_live_fields,
-                ("rid",),
+                ingest.CONTENT.resolve,
+                ingest.CONTENT.keys,
             ).select("rid")
             meta_state = asof_live_state(
                 spark,
@@ -1114,8 +1097,8 @@ def _build_find_request(
                 "meta",
                 as_of,
                 lambda: ingest.cdc_meta_log(fields),
-                ingest.cdc_live_meta,
-                ("rid",),
+                ingest.META.resolve,
+                ingest.META.keys,
             )
             gdf = meta_state.join(live_rids, "rid", "semi")
         if filters is not None:
@@ -1152,16 +1135,14 @@ def _build_find_request(
                 # the relation set AS OF the same seq — edge-keyed
                 # max_by over the seq-cut edge op log; a new snapshot
                 # chains from the nearest cached one (delta advance)
-                from nucliadb_spark.streaming import ingest
-
                 rel = asof_live_state(
                     spark,
                     sf_dir,
                     "relations",
                     as_of,
                     lambda: ingest.cdc_relation_log(tpch.relations(spark, sf_dir)),
-                    ingest.cdc_live_relations,
-                    ingest._EDGE_COLS,
+                    ingest.RELATIONS.resolve,
+                    ingest.RELATIONS.keys,
                 )
             else:
                 rel = tpch.relations_index(spark, sf_dir)

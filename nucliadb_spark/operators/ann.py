@@ -163,7 +163,7 @@ def ivf_drift_plan(
     the review artifact the IVF lifecycle reads before retraining a
     CDC-maintained vector index.
 
-    `cdc_vector_ingest` pins cell assignment to a FIXED broadcast
+    `ingest.VECTORS.sink` pins cell assignment to a FIXED broadcast
     centroid sidecar; after enough upsert waves the layout skews and
     probe recall degrades — the failure the reference's vector merge
     avoids by rebuilding segments (nidx/src/scheduler/
@@ -483,7 +483,7 @@ def ivf_live_cells(
     """(rid, seq, cell): every rid's live version with its ingest-rule
     cell — the checkpoint artifact :func:`ivf_drift_plan_incremental`
     consumes. Materially this IS the serving index's key layout
-    (cdc_vector_ingest keeps exactly (rid, seq, cell, vector) live
+    (VECTORS.sink keeps exactly (rid, seq, cell, vector) live
     rows), so a real deployment reads it for free."""
     last = versions.groupBy("rid").agg(
         F.max_by(F.struct("seq", "op", vec_col), "seq").alias("last")

@@ -531,11 +531,11 @@ def segment_merge_plan(spark, sf_dir):
 # segment_merge_plan above grades the exact sequential planner
 # (operators/compaction.py — the nidx plan_merges port); this is the
 # scheduled form wired to the CDC sinks: the inventory derives from
-# the op log's seq-range segments (what cdc_index_ingest actually
+# the op log's seq-range segments (what CONTENT.sink actually
 # appends), the policy runs with nidx's DEFAULT constants (min 4
 # segments, 10M top / 10k bottom buckets — nidx/src/settings.rs:
 # 246-254) as a declarative two-pass plan both engines execute
-# identically, and ingest.autocompact_cdc_index EXECUTES it against a
+# identically, and ingest.CONTENT.autocompact EXECUTES it against a
 # streamed index with the before==after serve-read contract
 # (tests/test_autocompaction.py).
 
@@ -557,7 +557,7 @@ def segment_autocompaction_plan(spark, sf_dir):
     n_dead = superseded versions a merge would physically drop. One
     rid-keyed window + one segment-keyed aggregate — the report is
     segment-count-sized, never corpus-sized. Execution with the
-    serve-reads-identical contract: ingest.autocompact_cdc_index."""
+    serve-reads-identical contract: ingest.CONTENT.autocompact."""
     log = ingest.cdc_log(tpch.fields(spark, sf_dir))
     # materialize the segment-count-sized inventory once: its lineage
     # is the corpus-sized tokenize + supersession window and the plan
@@ -937,7 +937,7 @@ def fielded_compaction_plan(spark, sf_dir):
     per field_key (the '/u/link' family shows the churn: its
     revision and delete waves create all the dead versions, while
     body/title stay 1:1). The destructive half is
-    ingest.compact_fielded_index, results-before==after tested."""
+    ingest.FIELDED.compact, results-before==after tested."""
     from nucliadb_spark.streaming import ingest
 
     return maintenance.fielded_compaction_plan(

@@ -380,8 +380,8 @@ def graph_path_filtered_as_of(spark, sf_dir):
         "relations",
         _GRAPH_ASOF_SEQ,
         lambda: ingest.cdc_relation_log(tpch.relations(spark, sf_dir)),
-        ingest.cdc_live_relations,
-        tuple(ingest._EDGE_COLS),
+        ingest.RELATIONS.resolve,
+        ingest.RELATIONS.keys,
     )
     label_state = api.asof_live_state(
         spark,
@@ -389,8 +389,8 @@ def graph_path_filtered_as_of(spark, sf_dir):
         "labels",
         _GRAPH_ASOF_SEQ,
         lambda: ingest.cdc_label_log(fields.select("rid", "labels")),
-        ingest.cdc_live_labels,
-        ("rid",),
+        ingest.LABELS.resolve,
+        ingest.LABELS.keys,
     )
     meta_state = api.asof_live_state(
         spark,
@@ -398,8 +398,8 @@ def graph_path_filtered_as_of(spark, sf_dir):
         "meta",
         _GRAPH_ASOF_SEQ,
         lambda: ingest.cdc_meta_log(fields),
-        ingest.cdc_live_meta,
-        ("rid",),
+        ingest.META.resolve,
+        ingest.META.keys,
     )
     # the same mixed-plane composition find_request uses: plane
     # states joined by rid, the whole tree evaluated once

@@ -32,7 +32,7 @@ def cdc_search_live(spark, sf_dir):
     the live corpus after a CDC log of inserts, revisions and
     deletes is resolved latest-op-wins. Deleted docs are absent,
     revised docs score on their new text."""
-    live = ingest.cdc_live_fields(ingest.cdc_log(tpch.fields(spark, sf_dir)))
+    live = ingest.CONTENT.resolve(ingest.cdc_log(tpch.fields(spark, sf_dir)))
     return bm25.bm25_search(live, "refreshed revision stream", top_k=20, mode="any")
 
 
@@ -49,7 +49,7 @@ def cdc_vector_search_live(spark, sf_dir):
     (the alive-bitset masking of the reference's vector segments)."""
     from pyspark.sql import functions as F
 
-    live = ingest.cdc_live_vectors(
+    live = ingest.VECTORS.resolve(
         ingest.cdc_vector_log(tpch.vectors(spark, sf_dir))
     )
     qvec = (
@@ -263,7 +263,7 @@ def catalog_facets_as_of(spark, sf_dir):
 
     from nucliadb_spark.operators import catalog as cat
 
-    live = ingest.cdc_live_labels(
+    live = ingest.LABELS.resolve(
         ingest.cdc_label_log(tpch.resources(spark, sf_dir)).filter(
             F.col("seq") <= 1_500_000
         )
@@ -394,10 +394,10 @@ def oplog_vacuum_report(spark, sf_dir):
 
     log = ingest.cdc_log(tpch.fields(spark, sf_dir))
     base, retained, _ = ingest.vacuum_op_log(
-        log, _VACUUM_SEQ, ingest.cdc_live_fields
+        log, _VACUUM_SEQ, ingest.CONTENT.resolve
     )
     head = ingest.advance_live_state(
-        base, retained, ("rid",), ingest.cdc_live_fields
+        base, retained, ingest.CONTENT.keys, ingest.CONTENT.resolve
     )
     folded_c = log.filter(F.col("seq") <= _VACUUM_SEQ).agg(
         F.count("*").cast("long").alias("n_ops_folded")
@@ -455,7 +455,7 @@ def catalog_facets_as_of_dated(spark, sf_dir):
     from nucliadb_spark.operators import catalog as cat
 
     res = tpch.resources(spark, sf_dir)
-    live = ingest.cdc_live_labels(
+    live = ingest.LABELS.resolve(
         ingest.cdc_label_log(res).filter(F.col("seq") <= 1_500_000)
     )
     snap = live.join(res.select("rid", "created"), "rid")
@@ -512,10 +512,10 @@ def catalog_facets_as_of_secured(spark, sf_dir):
 
     res = tpch.resources(spark, sf_dir)
     seq = 1_500_000
-    live = ingest.cdc_live_labels(
+    live = ingest.LABELS.resolve(
         ingest.cdc_label_log(res).filter(F.col("seq") <= seq)
     )
-    sec = ingest.cdc_live_security(
+    sec = ingest.SECURITY.resolve(
         ingest.cdc_security_log(
             res.select("rid", "security_public", "security_groups")
         ).filter(F.col("seq") <= seq)
@@ -637,7 +637,7 @@ def cdc_fielded_search_live(spark, sf_dir):
     same shuffle the resource-grain CDC pays."""
     from pyspark.sql import functions as F
 
-    live = ingest.cdc_live_fielded(
+    live = ingest.FIELDED.resolve(
         ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir))
     )
     link = live.filter(F.col("field_key") == "/u/link").select("rid", "text")
@@ -674,7 +674,7 @@ def cdc_graph_search_live(spark, sf_dir):
     serving-freshness symmetry."""
     from pyspark.sql import functions as F
 
-    live = ingest.cdc_live_relations(
+    live = ingest.RELATIONS.resolve(
         ingest.cdc_relation_log(tpch.relations(spark, sf_dir))
     )
     ents = _REL_CDC_ENTITIES
@@ -691,7 +691,7 @@ def cdc_graph_search_live(spark, sf_dir):
 
 def _cdc_relation_served_index(spark, sf_dir):
     """Session-scoped STREAMED relation index: stage the edge op log
-    once, drain it through cdc_relation_ingest, serve from the
+    once, drain it through RELATIONS.sink, serve from the
     materialized edge segments + oplog — the relation sibling of the
     fielded/vector served indexes."""
     import tempfile
@@ -705,7 +705,7 @@ def _cdc_relation_served_index(spark, sf_dir):
         ingest.cdc_relation_log(rel).repartition(2).write.parquet(
             f"{workdir}/log"
         )
-        ingest.cdc_relation_ingest(
+        ingest.RELATIONS.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
         )
         return workdir
@@ -733,7 +733,7 @@ def cdc_graph_search_served(spark, sf_dir):
     live = cached_df(
         sf_dir,
         "rcdc_live_edges",
-        lambda: ingest.live_relation_segments(edges, oplog),
+        lambda: ingest.RELATIONS.live_segments(edges, oplog),
     )
     ents = _REL_CDC_ENTITIES
     cond = F.col("source_value").isin(ents) | F.col("target_value").isin(ents)
@@ -810,7 +810,7 @@ def knn_as_of(spark, sf_dir):
     from pyspark.sql import functions as F
 
     log = ingest.cdc_vector_log(tpch.vectors(spark, sf_dir))
-    live = ingest.cdc_live_vectors(log.filter(F.col("seq") <= _AS_OF_SEQ))
+    live = ingest.VECTORS.resolve(log.filter(F.col("seq") <= _AS_OF_SEQ))
     qvec = (
         tpch.table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") == 5)
@@ -851,7 +851,7 @@ def graph_as_of(spark, sf_dir):
     from pyspark.sql import functions as F
 
     log = ingest.cdc_relation_log(tpch.relations(spark, sf_dir))
-    live = ingest.cdc_live_relations(log.filter(F.col("seq") <= _AS_OF_SEQ))
+    live = ingest.RELATIONS.resolve(log.filter(F.col("seq") <= _AS_OF_SEQ))
     ents = _REL_CDC_ENTITIES
     cond = F.col("source_value").isin(ents) | F.col("target_value").isin(ents)
     return (
@@ -947,7 +947,7 @@ def _ivf_drift_oracle() -> str:
 
 @register("ivf_drift_plan", _ivf_drift_oracle())
 def ivf_drift_plan(spark, sf_dir):
-    """IVF centroid drift under CDC: `cdc_vector_ingest` assigns
+    """IVF centroid drift under CDC: `VECTORS.sink` assigns
     cells against a FIXED broadcast centroid sidecar, so upsert waves
     (here the rid%6 re-embed wave writing REVERSED vectors) skew the
     cell layout away from the data — the exact failure the
@@ -1035,7 +1035,7 @@ def ivf_drift_plan_incremental(spark, sf_dir):
     version lands in dead counters. Cost ∝ delta: cell assignment
     runs over delta upserts only; the corpus is touched only by a
     rid-semijoin against the live index layout (which
-    cdc_vector_ingest maintains anyway). The geometry half
+    VECTORS.sink maintains anyway). The geometry half
     (Lloyd refresh / would-move) stays with the sampled review —
     nidx's scheduler likewise decides merges from counters and
     reserves geometry for the rebuild (nidx/src/scheduler/
@@ -1085,7 +1085,7 @@ _DRIFT_RETRAIN_SHARE = 0.05  # retrain when ≥5% of live vectors would move
 def _refresh_workdir(spark, sf_dir):
     """Session-scoped REFRESH pipeline run (this query's own index —
     the shared served index is never mutated): stage the vector op
-    log, drain it through cdc_vector_ingest against the base
+    log, drain it through VECTORS.sink against the base
     centroids, snapshot the ingest-time assignment (vectors_v1), then
     apply the drift rule — if the would-move share is ≥ the retrain
     threshold, retrain_vector_index compacts + re-derives centroids +
@@ -1108,9 +1108,9 @@ def _refresh_workdir(spark, sf_dir):
         workdir = tempfile.mkdtemp(prefix="refresh_")
         vlog = ingest.cdc_vector_log(vectors)
         vlog.repartition(2).write.parquet(f"{workdir}/log")
-        ingest.cdc_vector_ingest(
+        ingest.VECTORS.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt",
-            cents,
+            centroids=cents,
         )
         shutil.copytree(f"{workdir}/index/vectors", f"{workdir}/vectors_v1")
         drift = (
@@ -1183,7 +1183,7 @@ def incremental_refresh_report(spark, sf_dir):
     `cdc_incremental_export` (the changed head-version payloads) →
     re-embed (the deterministic pandas_udf stub actually runs over
     the exported texts — n_reembedded counts its output) →
-    `cdc_vector_ingest` (cells_touched = distinct IVF cells the
+    `VECTORS.sink` (cells_touched = distinct IVF cells the
     post-checkpoint upserts landed in, read from the STAGED index's
     ingest-time assignment) → `ivf_drift_plan` (would-move/live
     totals) → conditional `retrain_vector_index` (executed inside
@@ -1403,7 +1403,7 @@ def find_hybrid_fielded_as_of(spark, sf_dir):
     the FIELDED op log cut at the same seq (field-grain MVCC: a link
     field deleted after the snapshot is still in scope, the same
     latest-op-wins (rid, field_id) shuffle the live fielded CDC read
-    pays — ingest.cdc_field_log / cdc_live_fielded), the keyword leg
+    pays — ingest.cdc_field_log / FIELDED.resolve), the keyword leg
     ranks against the scoped family's OWN as-of corpus/stats
     (session-cached per (snapshot, family) like the live sidecars),
     and the vector + relation legs cut their op logs at the same seq
@@ -1560,11 +1560,11 @@ def knn_as_of_incremental(spark, sf_dir):
     # this is already resident); S2 then chains from it
     api.asof_live_state(
         spark, sf_dir, "vectors", _ASOF_INC_BASE,
-        log_builder, ingest.cdc_live_vectors, ("rid",),
+        log_builder, ingest.VECTORS.resolve, ingest.VECTORS.keys,
     )
     live = api.asof_live_state(
         spark, sf_dir, "vectors", _ASOF_INC_HEAD,
-        log_builder, ingest.cdc_live_vectors, ("rid",),
+        log_builder, ingest.VECTORS.resolve, ingest.VECTORS.keys,
     )
     qvec = (
         tpch.table(spark, sf_dir, "embeddings")
@@ -1677,8 +1677,8 @@ def suggest_entities_as_of(spark, sf_dir):
         "relations",
         _AS_OF_SEQ,
         lambda: ingest.cdc_relation_log(tpch.relations(spark, sf_dir)),
-        ingest.cdc_live_relations,
-        tuple(ingest._EDGE_COLS),
+        ingest.RELATIONS.resolve,
+        ingest.RELATIONS.keys,
     )
     return suggest.suggest_entities(rel, "customer:1")
 
@@ -1858,8 +1858,8 @@ def suggest_as_of_filtered(spark, sf_dir):
         "meta",
         _AS_OF_SEQ,
         lambda: ingest.cdc_meta_log(tpch.fields(spark, sf_dir)),
-        ingest.cdc_live_meta,
-        ("rid",),
+        ingest.META.resolve,
+        ingest.META.keys,
     )
     allowed = meta_state.filter(_suggest_asof_sec().to_column()).select("rid")
     return suggest.suggest_paragraphs(
@@ -2729,10 +2729,10 @@ def cdc_live_as_of_vacuumed(spark, sf_dir):
     live reads from)."""
     log = ingest.cdc_log(tpch.fields(spark, sf_dir))
     vacuumed = ingest.vacuum_op_log(
-        log, _VACUUM_HORIZON, ingest.cdc_live_fields
+        log, _VACUUM_HORIZON, ingest.CONTENT.resolve
     )
     return ingest.asof_from_vacuum(
-        vacuumed, _AS_OF_SEQ, ("rid",), ingest.cdc_live_fields
+        vacuumed, _AS_OF_SEQ, ingest.CONTENT.keys, ingest.CONTENT.resolve
     ).orderBy("rid")
 
 
@@ -2765,22 +2765,22 @@ def _substrate_families(spark, sf_dir):
     fields = tpch.fields(spark, sf_dir)
     return [
         ("content_text", "content_text",
-         lambda: ingest.cdc_log(fields), ingest.cdc_live_fields, ("rid",)),
+         lambda: ingest.cdc_log(fields), ingest.CONTENT.resolve, ingest.CONTENT.keys),
         ("stub_embeddings", "content_text",
-         lambda: ingest.cdc_log(fields), api.stub_embed_live, ("rid",)),
+         lambda: ingest.cdc_log(fields), api.stub_embed_live, ingest.CONTENT.keys),
         ("derived", "content_text",
-         lambda: ingest.cdc_log(fields), ingest.cdc_live_derived, ("rid",)),
+         lambda: ingest.cdc_log(fields), ingest.cdc_live_derived, ingest.CONTENT.keys),
         ("labels", "labels",
          lambda: ingest.cdc_label_log(fields.select("rid", "labels")),
-         ingest.cdc_live_labels, ("rid",)),
+         ingest.LABELS.resolve, ingest.LABELS.keys),
         ("meta", "meta",
-         lambda: ingest.cdc_meta_log(fields), ingest.cdc_live_meta, ("rid",)),
+         lambda: ingest.cdc_meta_log(fields), ingest.META.resolve, ingest.META.keys),
         ("vectors", "vectors",
          lambda: ingest.cdc_vector_log(tpch.vectors(spark, sf_dir)),
-         ingest.cdc_live_vectors, ("rid",)),
+         ingest.VECTORS.resolve, ingest.VECTORS.keys),
         ("relations", "relations",
          lambda: ingest.cdc_relation_log(tpch.relations(spark, sf_dir)),
-         ingest.cdc_live_relations, tuple(ingest._EDGE_COLS)),
+         ingest.RELATIONS.resolve, ingest.RELATIONS.keys),
     ]
 
 
@@ -2940,8 +2940,8 @@ def cdc_substrate_stream_served(spark, sf_dir):
             sf_dir,
             log_name,
             None,
-            ingest.cdc_live_fields,
-            ("rid",),
+            ingest.CONTENT.resolve,
+            ingest.CONTENT.keys,
             seq,
         ).select(F.lit(seq).cast("long").alias("cut"), "rid", "text")
 
@@ -2954,7 +2954,7 @@ def cdc_substrate_stream_served(spark, sf_dir):
 
 def _cdc_vector_served_index(spark, sf_dir):
     """Session-scoped STREAMED vector index: stage the vector op log
-    once, drain it through cdc_vector_ingest (upserts get their IVF
+    once, drain it through VECTORS.sink (upserts get their IVF
     cell assigned against the broadcast centroid sidecar at INGEST
     time, seq-tagged segments + oplog appended exactly-once), and
     serve every later call from the materialized parquet — the
@@ -2974,9 +2974,9 @@ def _cdc_vector_served_index(spark, sf_dir):
         ingest.cdc_vector_log(vectors).repartition(2).write.parquet(
             f"{workdir}/log"
         )
-        ingest.cdc_vector_ingest(
+        ingest.VECTORS.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt",
-            centroids,
+            centroids=centroids,
         )
         return workdir
 
@@ -3007,7 +3007,7 @@ def cdc_vector_search_served(spark, sf_dir):
     live = cached_df(
         sf_dir,
         "vcdc_live_segments",
-        lambda: ingest.live_vector_segments(vecs, oplog).select("rid", "vector"),
+        lambda: ingest.VECTORS.live_segments(vecs, oplog).select("rid", "vector"),
     )
     qvec = (
         tpch.table(spark, sf_dir, "embeddings")
@@ -3019,7 +3019,7 @@ def cdc_vector_search_served(spark, sf_dir):
 
 def _cdc_meta_served_index(spark, sf_dir):
     """Session-scoped STREAMED metadata sink: stage the meta op log
-    once, drain it through cdc_meta_ingest (seq-tagged metadata
+    once, drain it through META.sink (seq-tagged metadata
     segments + rid-keyed oplog, exactly-once), and serve every later
     call from the materialized parquet — the metadata-plane sibling
     of _cdc_vector_served_index."""
@@ -3034,7 +3034,7 @@ def _cdc_meta_served_index(spark, sf_dir):
         ingest.cdc_meta_log(fields).repartition(2).write.parquet(
             f"{workdir}/log"
         )
-        ingest.cdc_meta_ingest(
+        ingest.META.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
         )
         return workdir
@@ -3058,8 +3058,8 @@ ORDER BY rid
 def cdc_meta_live_served(spark, sf_dir):
     """The metadata plane SERVED from its maintained CDC sink: the
     streamed seq-tagged segments masked to live versions by the
-    rid-keyed oplog (deletion-list application — cdc_meta_ingest /
-    live_meta_segments), never a per-request log resolution. The
+    rid-keyed oplog (deletion-list application — META.sink /
+    META.live_segments), never a per-request log resolution. The
     head state proves the plane is genuinely versioned: the lockdown
     wave's private/'group-locked' rows serve for every rid%7
     resource, the delete wave's rids are absent, and everything else
@@ -3074,7 +3074,7 @@ def cdc_meta_live_served(spark, sf_dir):
 
     meta, oplog = _cdc_meta_served_index(spark, sf_dir)
     return (
-        ingest.live_meta_segments(meta, oplog)
+        ingest.META.live_segments(meta, oplog)
         .select(
             "rid",
             "security_public",
@@ -3089,7 +3089,7 @@ def cdc_meta_live_served(spark, sf_dir):
 def _cdc_fielded_served_index(spark, sf_dir):
     """Session-scoped STREAMED per-family index: stage the field-grain
     CDC op log once, drain it through the exactly-once streaming
-    ingest (`cdc_fielded_index_ingest` — seq-tagged postings segments
+    ingest (`FIELDED.sink` — seq-tagged postings segments
     PARTITIONED BY field_key + the field-grain oplog), and serve every
     later call from the materialized parquet. This is the serving
     half of the reference indexer's contract: mutate one field →
@@ -3106,7 +3106,7 @@ def _cdc_fielded_served_index(spark, sf_dir):
         workdir = tempfile.mkdtemp(prefix="cdcf_idx_")
         # several files => several arrival micro-batches
         ingest.cdc_field_log(fm).repartition(3).write.parquet(f"{workdir}/log")
-        ingest.cdc_fielded_index_ingest(
+        ingest.FIELDED.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
         )
         return workdir
@@ -3130,7 +3130,7 @@ def _cdc_link_live_index(spark, sf_dir):
     link_live = cached_df(
         sf_dir,
         "cdcf_link_live_postings",
-        lambda: ingest.live_fielded_postings(
+        lambda: ingest.FIELDED.live_segments(
             post.filter(F.col("field_key") == "/u/link"), oplog
         ).select("rid", "term", "tf"),
     )
@@ -3176,7 +3176,7 @@ def _cdc_fielded_compacted_index(spark, sf_dir):
     """Session-scoped streamed per-family index with the SCHEDULED
     AUTOCOMPACTION executed between ingest and serve: stage the
     field-grain op log, drain it through the exactly-once streaming
-    ingest, then run autocompact_fielded_index (the nidx log-bucket
+    ingest, then run FIELDED.autocompact (the nidx log-bucket
     policy — planned segments rewritten with dead rows purged and
     superseded ops dropped, winning deletes retained, crash-safe
     .bak swap). Kept in its OWN workdir: the compaction rewrite swaps
@@ -3191,10 +3191,10 @@ def _cdc_fielded_compacted_index(spark, sf_dir):
     def build() -> str:
         workdir = tempfile.mkdtemp(prefix="cdcfc_idx_")
         ingest.cdc_field_log(fm).repartition(3).write.parquet(f"{workdir}/log")
-        ingest.cdc_fielded_index_ingest(
+        ingest.FIELDED.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
         )
-        ingest.autocompact_fielded_index(spark, f"{workdir}/index")
+        ingest.FIELDED.autocompact(spark, f"{workdir}/index")
         return workdir
 
     wd = cached_scalar(fm, sf_dir, "cdcfc_workdir", build)
@@ -3207,7 +3207,7 @@ def _cdc_fielded_compacted_index(spark, sf_dir):
 def cdc_fielded_search_served_compacted(spark, sf_dir):
     """`cdc_fielded_search_served` with the SCHEDULED AUTOCOMPACTION
     in the pipeline — the r14 'serve from a compacted sink' gate:
-    stream → autocompact_fielded_index → serve, graded against the
+    stream → FIELDED.autocompact → serve, graded against the
     SAME oracle as the uncompacted twin. test_autocompaction proves
     serve-reads-identical locally; this seat closes the loop at the
     driver level: the rewrite physically purged dead per-family
@@ -3227,7 +3227,7 @@ def cdc_fielded_search_served_compacted(spark, sf_dir):
     link_live = cached_df(
         sf_dir,
         "cdcfc_link_live_postings",
-        lambda: ingest.live_fielded_postings(
+        lambda: ingest.FIELDED.live_segments(
             post.filter(F.col("field_key") == "/u/link"), oplog
         ).select("rid", "term", "tf"),
     )

@@ -712,7 +712,7 @@ def trainset_build_as_of(spark, sf_dir):
     live = ingest.cdc_live_as_of(
         ingest.cdc_log(tpch.fields(spark, sf_dir)), _TB_AS_OF
     )
-    src = ingest.cdc_live_meta(
+    src = ingest.META.resolve(
         ingest.cdc_meta_log(tpch.fields(spark, sf_dir)).filter(
             F.col("seq") <= _TB_AS_OF
         )

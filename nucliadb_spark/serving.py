@@ -175,7 +175,7 @@ def stream_maintained_log(
 
     Micro-batch appends leave one file per batch per touched bucket —
     exactly the small-segment accumulation the scheduled
-    autocompaction pass exists to rewrite (ingest._autocompact_index);
+    autocompaction pass exists to rewrite (ingest.OpLogFamily.autocompact);
     the read path is layout-agnostic either way. At 100 TB this is
     the ingestion story: the log is never rebuilt, it is APPENDED in
     arrival order, and seq buckets keep every historical read

@@ -17,6 +17,13 @@ number (ref: nidx/src/indexer.rs:121-298). The Spark-first analog:
 - event-time windowed aggregation with a watermark covers the
   late-data policy the reference lacks (nucliadb has no stream
   semantics — SURVEY §2.12 — so this is engine-added capability).
+- CDC op logs with deletion lists: every op-log family (content,
+  fielded, relations, vectors, labels, meta, security) is one
+  :class:`OpLogFamily` declaration — its keys, payload and segment
+  table — and shares one implementation of the lifecycle:
+  latest-op-wins ``resolve``, the stream ``sink``,
+  ``live_versions`` / ``live_segments`` (the deletion-list mask),
+  the force-merge ``compact`` and the scheduled ``autocompact``.
 
 At scale: the file source lists incrementally; each micro-batch is an
 ordinary Spark job with the same partitioning story as the batch ops;
@@ -29,6 +36,8 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -63,6 +72,25 @@ def stage_arrival_dir(*files: str) -> str:
     for f in files:
         shutil.copy(f, os.path.join(d, os.path.basename(f)))
     return d
+
+
+def _drain(spark: SparkSession, path: str, each_batch, checkpoint_path: str) -> None:
+    """Drain a parquet file (staged into an arrival dir) or arrival
+    dir through ``each_batch`` (foreachBatch, availableNow).
+    Exactly-once per file via the file source's tracking + the
+    checkpoint, mirroring the reference's seq guard."""
+    schema = spark.read.parquet(path).schema
+    if os.path.isfile(path):
+        path = stage_arrival_dir(path)
+    q = (
+        spark.readStream.schema(schema)
+        .parquet(path)
+        .writeStream.foreachBatch(each_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def _events_stream(spark: SparkSession, arrival_dir: str, schema) -> DataFrame:
@@ -156,10 +184,6 @@ def incremental_index_ingest(
     checkpoint; idempotent re-derivation per batch mirrors the
     reference's seq guard.
     """
-    batch_schema = spark.read.parquet(docs_path).schema
-    if os.path.isfile(docs_path):
-        docs_path = stage_arrival_dir(docs_path)
-    stream = spark.readStream.schema(batch_schema).parquet(docs_path)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         fields = batch_df.select(
@@ -168,13 +192,7 @@ def incremental_index_ingest(
         bm25.postings(fields).write.mode("append").parquet(f"{index_path}/postings")
         bm25.doc_stats(fields).write.mode("append").parquet(f"{index_path}/docstats")
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, docs_path, upsert, checkpoint_path)
 
 
 # --- CDC ingest with deletion lists (S1 updates/deletes) --------------------
@@ -323,19 +341,6 @@ SELECT rid, text FROM (
 """
 
 
-def cdc_live_fields(log: DataFrame) -> DataFrame:
-    """Latest-op-wins live corpus (rid, text) from an op log — the
-    batch twin of stream-ingest + deletion-list application. One
-    shuffle keyed rid; max_by keeps the aggregation map-side
-    combinable (no row_number sort)."""
-    return (
-        log.groupBy("rid")
-        .agg(F.max_by(F.struct("op", "text"), "seq").alias("last"))
-        .filter(F.col("last.op") == "upsert")
-        .select("rid", F.col("last.text").alias("text"))
-    )
-
-
 def cdc_live_derived(log: DataFrame) -> DataFrame:
     """(rid, modified, n_chars) — the DERIVED metadata plane: both
     attributes are pure functions of the content op log, so they
@@ -396,7 +401,7 @@ def cdc_live_as_of(log: DataFrame, seq: int) -> DataFrame:
     op log is parquet partitioned by seq range, so this is partition
     pruning); the resolution is the same one map-side-combinable
     max_by shuffle as the fully-live read."""
-    return cdc_live_fields(log.filter(F.col("seq") <= seq))
+    return CONTENT.resolve(log.filter(F.col("seq") <= seq))
 
 
 def advance_text_index(
@@ -437,7 +442,7 @@ def advance_text_index(
     touched = delta_log.select("rid").distinct()
     kept_post = prior_post.join(touched, "rid", "left_anti")
     kept_stats = prior_stats.join(touched, "rid", "left_anti")
-    new_docs = cdc_live_fields(delta_log)  # final delta version per rid
+    new_docs = CONTENT.resolve(delta_log)  # final delta version per rid
     added_post = bm25.postings(new_docs)
     added_stats = bm25.doc_stats_from_postings(added_post)
     return (
@@ -461,11 +466,10 @@ def advance_live_state(
     touched keys resolve over the DELTA alone (a delete as the final
     op simply contributes no row).
 
-    `keys` is the family's identity (vectors/labels: ``("rid",)``,
-    fielded: ``("rid", "field_id")``, relations: the edge triple);
-    `resolve` is the family's live function (cdc_live_vectors,
-    cdc_live_fielded, …) applied to the delta log — its output
-    columns ARE the state schema, so kept ∪ added unions cleanly.
+    `keys` and `resolve` are the family's (:class:`OpLogFamily`
+    ``keys`` and ``resolve``, e.g. ``VECTORS.keys, VECTORS.resolve``);
+    `resolve` applies to the delta log — its output columns ARE the
+    state schema, so kept ∪ added unions cleanly.
 
     At scale this converts a new snapshot's cold cost from
     full-log-sized (scan every version ever written + one
@@ -514,8 +518,8 @@ def vacuum_op_log(log: DataFrame, base_seq: int, resolve) -> VacuumedLog:
     - as-of reads BELOW the horizon are genuinely gone — the policy
       decision vacuum encodes (pinned snapshots must stay above it).
 
-    `resolve` is the family's live function (cdc_live_fields,
-    cdc_live_vectors, ...); its output schema IS the base-state
+    `resolve` is the family's live function (``CONTENT.resolve``,
+    ``VECTORS.resolve``, ...); its output schema IS the base-state
     schema, so the base doubles as the family's serving sidecar at
     the horizon. This completes the op-log lifecycle next to
     compaction: compact_facet_counters folds DERIVED deltas,
@@ -596,86 +600,8 @@ SELECT rid, text FROM (
 """
 
 
-def cdc_index_ingest(
-    spark: SparkSession,
-    log_path: str,
-    index_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Stream a CDC op log into the text index: upserts append
-    seq-tagged postings segments, every op appends to the oplog
-    (the deletion list). Exactly-once per file via the source's
-    tracking + checkpoint, mirroring the reference's seq guard."""
-    schema = spark.read.parquet(log_path).schema
-    if os.path.isfile(log_path):
-        log_path = stage_arrival_dir(log_path)
-    stream = spark.readStream.schema(schema).parquet(log_path)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        ups = batch_df.filter(F.col("op") == "upsert")
-        post = (
-            ups.select(
-                "rid", "seq", F.explode(tokenize("text")).alias("term")
-            )
-            .groupBy("rid", "seq", "term")
-            .agg(F.count("*").cast("double").alias("tf"))
-        )
-        post.write.mode("append").parquet(f"{index_path}/postings")
-        batch_df.select("rid", "seq", "op").write.mode("append").parquet(
-            f"{index_path}/oplog"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def live_doc_versions(oplog: DataFrame) -> DataFrame:
-    """(rid, seq) of live docs — latest op per rid where it's an
-    upsert. This IS the deletion-list application, expressed as one
-    partial-aggregatable groupBy instead of per-segment bitsets."""
-    return (
-        oplog.groupBy("rid")
-        .agg(F.max_by("op", "seq").alias("op"), F.max("seq").alias("seq"))
-        .filter(F.col("op") == "upsert")
-        .select("rid", "seq")
-    )
-
-
-def live_postings(post: DataFrame, oplog: DataFrame) -> DataFrame:
-    """Postings restricted to live doc versions: (rid, term, tf).
-    Equi-join on (rid, seq) — dead segments' rows drop out exactly
-    like tantivy's alive-bitset masking at search time."""
-    return post.join(live_doc_versions(oplog), ["rid", "seq"]).select(
-        "rid", "term", "tf"
-    )
-
-
-def compact_cdc_index(spark: SparkSession, index_path: str) -> None:
-    """Physically purge dead postings + truncate the oplog (the
-    reference's deletion-purging force merge, log_merge.rs:59-110).
-    Search results before == after; only the storage shrinks."""
-    post = spark.read.parquet(f"{index_path}/postings")
-    oplog = spark.read.parquet(f"{index_path}/oplog")
-    live = live_doc_versions(oplog)
-    kept_post = post.join(live, ["rid", "seq"])
-    tmp = tempfile.mkdtemp(prefix="compact_")
-    kept_post.write.mode("overwrite").parquet(f"{tmp}/postings")
-    live.withColumn("op", F.lit("upsert")).write.mode("overwrite").parquet(
-        f"{tmp}/oplog"
-    )
-    for t in ("postings", "oplog"):
-        shutil.rmtree(f"{index_path}/{t}")
-        shutil.move(f"{tmp}/{t}", f"{index_path}/{t}")
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
 # --- scheduled segment autocompaction (the nidx log-merge policy) ------------
-# The force-merge trio above compacts EVERYTHING on demand; a
+# The force merge (OpLogFamily.compact) rewrites EVERYTHING on demand; a
 # long-running CDC sink instead wants the reference's scheduled
 # log-bucket policy (nidx/src/settings.rs:246-254 defaults +
 # nidx/src/scheduler/log_merge.rs:59-110 plan_merges): group segments
@@ -773,7 +699,7 @@ def autocompaction_plan(
     # thrice — purge_deletions_plan and the registered plan queries
     # do; this function stays cut-free because tiny literal
     # inventories (property tests, the collect-path in
-    # autocompact_cdc_index) would pay an eager job for nothing.
+    # OpLogFamily.autocompact) would pay an eager job for nothing.
     large = inventory.filter(F.col("records") > top_max).select(
         "segment_id",
         "records",
@@ -868,158 +794,281 @@ ORDER BY segment_id
 """
 
 
-def _autocompact_index(
-    spark: SparkSession,
-    index_path: str,
-    data_name: str,
-    keys: tuple[str, ...],
-    partition_cols: tuple[str, ...] = (),
-    seg_bucket: int = SEG_BUCKET,
-    min_segments: int = MERGE_MIN_SEGMENTS,
-    top_max: int = MERGE_TOP_MAX_RECORDS,
-    bottom: int = MERGE_BOTTOM_THRESHOLD,
-) -> DataFrame:
-    """Family-generic autocompaction core: execute the scheduled plan
-    against a streamed index's (data, oplog) pair. `keys` is the
-    family's op identity (text: rid; fielded: (rid, field_id);
-    vectors: rid), `data_name` the segment table. Segments the policy
-    marks merge/purge are rewritten with their dead rows dropped and
-    their superseded ops removed; every other segment's files are
-    untouched. Winning ops are kept EVEN when they are deletes — a
-    winning delete in a merged segment still masks older rows in
-    unplanned segments, so dropping it would resurrect them. Serve
-    reads (live_* masking) are identical before and after — the
-    crash-safe write-tmp-then-swap contract of the force-merge trio,
-    applied to the planned subset only. Returns the executed plan."""
-    from pyspark.sql import Window
+# --- op-log families (one lifecycle for every CDC plane) --------------------
+# Every CDC plane advances the way the reference's indexer advances
+# each index (nidx/src/indexer.rs:121-253): each op appends
+# ``(*keys, seq, op)`` to the family's oplog (the deletion list), each
+# upsert appends seq-tagged rows to its segment table, a read masks
+# the segments to the latest op per key, and merges purge dead
+# versions (nidx/src/scheduler/log_merge.rs:59-110). A family differs
+# from another only in its OpLogFamily declaration below; each
+# operation is written once.
 
-    data = spark.read.parquet(f"{index_path}/{data_name}")
-    oplog = spark.read.parquet(f"{index_path}/oplog")
-    seg = F.floor(F.col("seq") / F.lit(seg_bucket)).cast("long")
-    # streamed-index inventory: records = data rows per segment (the
-    # built segment's actual size), dead = superseded upsert versions
-    w = Window.partitionBy(*keys).orderBy(F.col("seq").desc())
-    ranked = oplog.withColumn("rn", F.row_number().over(w)).withColumn(
-        "segment_id", seg
-    )
-    records = (
-        data.withColumn("segment_id", seg)
-        .groupBy("segment_id")
-        .agg(F.count("*").cast("long").alias("records"))
-    )
-    inv = (
-        ranked.groupBy("segment_id")
-        .agg(
-            F.count("*").cast("long").alias("n_ops"),
-            F.count(
-                F.when((F.col("op") == "upsert") & (F.col("rn") > 1), True)
-            ).cast("long").alias("n_dead"),
-        )
-        .join(records, "segment_id", "left")
-        .fillna(0, subset=["records"])
-    )
-    # collect the segment-count-sized plan ONCE (it is the scheduler's
-    # decision table, tiny by construction) — the rewrite jobs below
-    # then join a broadcast literal frame instead of re-evaluating the
-    # whole inventory→plan pipeline per write
-    plan = autocompaction_plan(inv, min_segments, top_max, bottom)
-    plan_rows = plan.collect()
-    from nucliadb_spark.functions import frames
 
-    planned = frames.literal_frame(
-        spark,
-        [(r.segment_id,) for r in plan_rows if r.action in ("merge", "purge")],
-        "segment_id long",
-    )
-    live = ranked.filter((F.col("rn") == 1) & (F.col("op") == "upsert")).select(
-        *keys, "seq"
-    )
-    data_seg = data.withColumn("segment_id", seg)
-    kept_data = (
-        data_seg.join(planned, "segment_id", "left_anti")
-        .unionByName(
-            data_seg.join(planned, "segment_id", "left_semi").join(
-                live, [*keys, "seq"], "left_semi"
-            )
-        )
-        .drop("segment_id")
-    )
-    kept_ops = (
-        ranked.join(planned, "segment_id", "left_anti")
-        .unionByName(
-            ranked.join(planned, "segment_id", "left_semi").filter(
-                F.col("rn") == 1  # the key's winner — upsert OR delete
-            )
-        )
-        .select(*oplog.columns)
-    )
-    tmp = tempfile.mkdtemp(prefix="autocompact_")
-    writer = kept_data.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(f"{tmp}/{data_name}")
-    kept_ops.write.mode("overwrite").parquet(f"{tmp}/oplog")
-    # crash-safe swap: the old table moves ASIDE (not away) before
-    # the new one moves in, so a crash at any point leaves either the
-    # original table or the new one plus a recoverable .bak — never
-    # neither (the rmtree-then-move form has a lose-both window)
-    for t in (data_name, "oplog"):
-        bak = f"{index_path}/{t}.bak"
+def _swap_in(tmp: str, index_path: str, tables) -> None:
+    """Move freshly written tables from ``tmp`` over ``index_path``'s.
+    The old table moves ASIDE to ``<table>.bak`` before the new one
+    moves in, so a crash at any point leaves either the original
+    table or its ``.bak`` — never neither."""
+    for t in tables:
+        cur, bak = f"{index_path}/{t}", f"{index_path}/{t}.bak"
         shutil.rmtree(bak, ignore_errors=True)
-        shutil.move(f"{index_path}/{t}", bak)
-        shutil.move(f"{tmp}/{t}", f"{index_path}/{t}")
+        shutil.move(cur, bak)
+        shutil.move(f"{tmp}/{t}", cur)
         shutil.rmtree(bak, ignore_errors=True)
     shutil.rmtree(tmp, ignore_errors=True)
-    return frames.literal_frame(spark, plan_rows, plan.schema)
 
 
-def autocompact_cdc_index(spark: SparkSession, index_path: str, **kw) -> DataFrame:
-    """Scheduled autocompaction of the streamed TEXT index
-    (cdc_index_ingest's postings + rid-keyed oplog); see
-    :func:`_autocompact_index` for the contract."""
-    return _autocompact_index(spark, index_path, "postings", ("rid",), **kw)
+@dataclass(frozen=True)
+class OpLogFamily:
+    """One CDC op-log family. ``keys`` is the op identity (the grain
+    of the deletion list), ``payload`` the columns an op carries,
+    ``table`` the segment table under an index directory,
+    ``partition_by`` that table's on-disk partitioning, and
+    ``segment`` the per-micro-batch transform from upserted ops to
+    segment rows (None: the ops themselves, minus ``op``). The live
+    state's columns are ``(*partition_by, *keys, *other payload)`` —
+    a partition column leads, as in the segment layout it prunes."""
+
+    name: str
+    keys: tuple[str, ...]
+    payload: tuple[str, ...]
+    table: str
+    partition_by: tuple[str, ...] = ()
+    segment: Callable[..., DataFrame] | None = None
+
+    def _lead(self, cols: list[str]) -> list[str]:
+        return [*self.partition_by, *[c for c in cols if c not in self.partition_by]]
+
+    def resolve(self, log: DataFrame) -> DataFrame:
+        """Latest-op-wins live state from an op log — the batch twin
+        of stream ingest + deletion-list application. One shuffle
+        keyed by ``keys``; max_by keeps the aggregation map-side
+        combinable (no row_number sort). Cut the log first
+        (``seq <= S``) for the snapshot read."""
+        last = {c: F.col(f"last.{c}").alias(c) for c in self.payload}
+        return (
+            log.groupBy(*self.keys)
+            .agg(F.max_by(F.struct("op", *self.payload), "seq").alias("last"))
+            .filter(F.col("last.op") == "upsert")
+            .select(*[last.get(c, c) for c in self._lead([*self.keys, *last])])
+        )
+
+    def live_versions(self, oplog: DataFrame) -> DataFrame:
+        """``(*keys, seq)`` of live versions — the latest op per key
+        where it is an upsert. This IS the deletion-list application,
+        one partial-aggregatable groupBy instead of per-segment
+        bitsets."""
+        return (
+            oplog.groupBy(*self.keys)
+            .agg(F.max_by("op", "seq").alias("op"), F.max("seq").alias("seq"))
+            .filter(F.col("op") == "upsert")
+            .select(*self.keys, "seq")
+        )
+
+    def live_segments(self, data: DataFrame, oplog: DataFrame) -> DataFrame:
+        """Segment rows restricted to live versions, ``seq`` dropped.
+        The equi-join on ``(*keys, seq)`` drops dead segments' rows
+        exactly like tantivy's alive-bitset masking at search time."""
+        live = data.join(self.live_versions(oplog), [*self.keys, "seq"])
+        return live.select(*self._lead([c for c in live.columns if c != "seq"]))
+
+    def sink(
+        self,
+        spark: SparkSession,
+        log_path: str,
+        index_path: str,
+        checkpoint_path: str,
+        **segment_kw,
+    ) -> None:
+        """Stream an op log into the family's index: upserts append
+        seq-tagged segment rows (``segment(self, ups, **segment_kw)``
+        per micro-batch), every op appends to the oplog."""
+
+        def upsert(batch_df: DataFrame, batch_id: int) -> None:
+            ups = batch_df.filter(F.col("op") == "upsert")
+            rows = self.segment(self, ups, **segment_kw) if self.segment else ups.drop("op")
+            rows.write.mode("append").partitionBy(*self.partition_by).parquet(
+                f"{index_path}/{self.table}"
+            )
+            batch_df.select(*self.keys, "seq", "op").write.mode("append").parquet(
+                f"{index_path}/oplog"
+            )
+
+        _drain(spark, log_path, upsert, checkpoint_path)
+
+    def _live_rows(self, spark: SparkSession, index_path: str):
+        """The force merge's output, unwritten: (segment rows of live
+        versions, ``seq`` kept; the oplog truncated to those
+        versions)."""
+        data = spark.read.parquet(f"{index_path}/{self.table}")
+        live = self.live_versions(spark.read.parquet(f"{index_path}/oplog"))
+        kept = data.join(live, [*self.keys, "seq"])
+        return kept, live.withColumn("op", F.lit("upsert"))
+
+    def _rewrite(self, index_path: str, data: DataFrame, ops: DataFrame) -> None:
+        """Write the new segment table and oplog to a temp dir, then
+        swap both in (:func:`_swap_in`)."""
+        tmp = tempfile.mkdtemp(prefix=f"compact_{self.name}_")
+        data.write.mode("overwrite").partitionBy(*self.partition_by).parquet(
+            f"{tmp}/{self.table}"
+        )
+        ops.write.mode("overwrite").parquet(f"{tmp}/oplog")
+        _swap_in(tmp, index_path, (self.table, "oplog"))
+
+    def compact(self, spark: SparkSession, index_path: str) -> None:
+        """Force merge: physically purge dead segment rows and
+        truncate the oplog to the live versions (the reference's
+        deletion-purging force merge, log_merge.rs:59-110). The
+        rewrite keeps ``partition_by``, so pruning keeps working on
+        the compacted layout. Reads before == after; only the storage
+        shrinks."""
+        self._rewrite(index_path, *self._live_rows(spark, index_path))
+
+    def autocompact(
+        self,
+        spark: SparkSession,
+        index_path: str,
+        seg_bucket: int = SEG_BUCKET,
+        min_segments: int = MERGE_MIN_SEGMENTS,
+        top_max: int = MERGE_TOP_MAX_RECORDS,
+        bottom: int = MERGE_BOTTOM_THRESHOLD,
+    ) -> DataFrame:
+        """Scheduled autocompaction: execute the log-bucket plan
+        (:func:`autocompaction_plan`) against the streamed index's
+        (segment table, oplog) pair. Segments the policy marks
+        merge/purge are rewritten with their dead rows dropped and
+        their superseded ops removed; every other segment's rows are
+        kept as they are. Winning ops are kept EVEN when they are
+        deletes — a winning delete in a merged segment still masks
+        older rows in unplanned segments, so dropping it would
+        resurrect them. Serve reads (:meth:`live_segments`) are
+        identical before and after. Returns the executed plan."""
+        from pyspark.sql import Window
+
+        from nucliadb_spark.functions import frames
+
+        data = spark.read.parquet(f"{index_path}/{self.table}")
+        oplog = spark.read.parquet(f"{index_path}/oplog")
+        seg = F.floor(F.col("seq") / F.lit(seg_bucket)).cast("long")
+        # streamed-index inventory: records = data rows per segment (the
+        # built segment's actual size), dead = superseded upsert versions
+        w = Window.partitionBy(*self.keys).orderBy(F.col("seq").desc())
+        ranked = oplog.withColumn("rn", F.row_number().over(w)).withColumn(
+            "segment_id", seg
+        )
+        records = (
+            data.withColumn("segment_id", seg)
+            .groupBy("segment_id")
+            .agg(F.count("*").cast("long").alias("records"))
+        )
+        inv = (
+            ranked.groupBy("segment_id")
+            .agg(
+                F.count("*").cast("long").alias("n_ops"),
+                F.count(
+                    F.when((F.col("op") == "upsert") & (F.col("rn") > 1), True)
+                ).cast("long").alias("n_dead"),
+            )
+            .join(records, "segment_id", "left")
+            .fillna(0, subset=["records"])
+        )
+        # collect the segment-count-sized plan ONCE (it is the scheduler's
+        # decision table, tiny by construction) — the rewrite jobs below
+        # then join a broadcast literal frame instead of re-evaluating the
+        # whole inventory→plan pipeline per write
+        plan = autocompaction_plan(inv, min_segments, top_max, bottom)
+        plan_rows = plan.collect()
+        planned = frames.literal_frame(
+            spark,
+            [(r.segment_id,) for r in plan_rows if r.action in ("merge", "purge")],
+            "segment_id long",
+        )
+        live = ranked.filter((F.col("rn") == 1) & (F.col("op") == "upsert")).select(
+            *self.keys, "seq"
+        )
+        data_seg = data.withColumn("segment_id", seg)
+        kept_data = (
+            data_seg.join(planned, "segment_id", "left_anti")
+            .unionByName(
+                data_seg.join(planned, "segment_id", "left_semi").join(
+                    live, [*self.keys, "seq"], "left_semi"
+                )
+            )
+            .drop("segment_id")
+        )
+        kept_ops = (
+            ranked.join(planned, "segment_id", "left_anti")
+            .unionByName(
+                ranked.join(planned, "segment_id", "left_semi").filter(
+                    F.col("rn") == 1  # the key's winner — upsert OR delete
+                )
+            )
+            .select(*oplog.columns)
+        )
+        self._rewrite(index_path, kept_data, kept_ops)
+        return frames.literal_frame(spark, plan_rows, plan.schema)
 
 
-def autocompact_fielded_index(
-    spark: SparkSession, index_path: str, **kw
-) -> DataFrame:
-    """Scheduled autocompaction of the streamed FIELDED index
-    (cdc_fielded_index_ingest): op identity (rid, field_id), rewrite
-    preserves the field_key partitioning so family pruning keeps
-    working on the compacted layout."""
-    return _autocompact_index(
-        spark,
-        index_path,
-        "postings",
-        ("rid", "field_id"),
-        partition_cols=("field_key",),
-        **kw,
+def _tokenized(fam: OpLogFamily, ups: DataFrame) -> DataFrame:
+    """Segment transform of the text families: seq-tagged postings
+    ``(*partition_by, *keys, seq, term, tf)``."""
+    cols = [*fam.partition_by, *fam.keys, "seq"]
+    return (
+        ups.select(*cols, F.explode(tokenize("text")).alias("term"))
+        .groupBy(*cols, "term")
+        .agg(F.count("*").cast("double").alias("tf"))
     )
 
 
-def autocompact_vector_index(
-    spark: SparkSession, index_path: str, **kw
-) -> DataFrame:
-    """Scheduled autocompaction of the streamed VECTOR index
-    (cdc_vector_ingest): dead vector versions in planned segments
-    purge, ingest-assigned cell labels ride along untouched."""
-    return _autocompact_index(spark, index_path, "vectors", ("rid",), **kw)
+def _cell_assigned(fam: OpLogFamily, ups: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Segment transform of the vector family: each upserted vector
+    gets its IVF cell against the broadcast centroid sidecar
+    (``ann.assign_cells``) — ``(*keys, seq, vector, cluster_label)``."""
+    from nucliadb_spark.operators import ann as ann_ops
+
+    return ann_ops.assign_cells(ups, centroids, keys=(*fam.keys, "seq"))
 
 
-def autocompact_relation_index(
-    spark: SparkSession, index_path: str, seg_bucket: int = 20_000, **kw
-) -> DataFrame:
-    """Scheduled autocompaction of the streamed RELATION index
-    (cdc_relation_ingest): op identity is the edge triple, superseded
-    provenance revisions in planned segments purge — all four CDC
-    sinks now share the scheduled policy. The edge log's base seqs
-    are hash-spread over [0, 1e6) (md5-derived schedule), so the
-    default segment bucket is coarser than the dense rid-derived
-    logs' — same op count per segment either way."""
-    return _autocompact_index(
-        spark, index_path, "edges", tuple(_EDGE_COLS),
-        seg_bucket=seg_bucket, **kw
-    )
+# resource-grain text: the op log cdc_log derives from documents
+CONTENT = OpLogFamily("content", ("rid",), ("text",), "postings", segment=_tokenized)
+# field-grain text (cdc_field_log): deleting a resource's link field
+# leaves its text and title fields live; postings are partitioned by
+# field_key, so a scoped query's family prune is partition pruning
+FIELDED = OpLogFamily(
+    "fielded", ("rid", "field_id"), ("field_key", "text"), "postings",
+    partition_by=("field_key",), segment=_tokenized,
+)
+# knowledge-graph edges (cdc_relation_log): the op identity is the
+# edge triple, the payload its node types and provenance paragraph
+RELATIONS = OpLogFamily(
+    "relations",
+    ("source_value", "relation_label", "target_value"),
+    ("source_type", "source_subtype", "target_type", "target_subtype", "paragraph_id"),
+    "edges",
+)
+# embeddings (cdc_vector_log); segments carry their ingest-time cell
+VECTORS = OpLogFamily("vectors", ("rid",), ("vector",), "vectors", segment=_cell_assigned)
+# classification labels (cdc_label_log); its maintained sink is the
+# facet counter sidecar (cdc_facet_counter_ingest)
+LABELS = OpLogFamily("labels", ("rid",), ("labels",), "labels")
+# PATCHable resource metadata (cdc_meta_log): security/extra/origin
+META = OpLogFamily(
+    "meta", ("rid",),
+    ("security_public", "security_groups", "extra", "source", "language"),
+    "meta",
+)
+# the catalog plane's security twin (cdc_security_log)
+SECURITY = OpLogFamily(
+    "security", ("rid",), ("security_public", "security_groups"), "security"
+)
+FAMILIES = {
+    f.name: f for f in (CONTENT, FIELDED, RELATIONS, VECTORS, LABELS, META, SECURITY)
+}
+
+# module-level name of the content resolve, for callers that pass the
+# resolve of the content family by name
+cdc_live_fields = CONTENT.resolve
 
 
 # --- deletion-list purge plan (the OTHER half of scheduled maintenance) ----
@@ -1218,23 +1267,6 @@ def cdc_field_log(fields_multi: DataFrame) -> DataFrame:
     return base.unionByName(upd).unionByName(dele)
 
 
-def cdc_live_fielded(log: DataFrame) -> DataFrame:
-    """Latest-op-wins live FIELDED corpus (field_key, rid, field_id,
-    text) — deletion-list application at field grain. One shuffle
-    keyed (rid, field_id); max_by keeps it partial-aggregatable."""
-    return (
-        log.groupBy("rid", "field_id")
-        .agg(F.max_by(F.struct("op", "field_key", "text"), "seq").alias("last"))
-        .filter(F.col("last.op") == "upsert")
-        .select(
-            F.col("last.field_key").alias("field_key"),
-            "rid",
-            "field_id",
-            F.col("last.text").alias("text"),
-        )
-    )
-
-
 def cdc_field_log_sql(fields_multi_sql: str) -> str:
     """DuckDB twin of cdc_field_log — the raw field-grain op log
     (rid, field_id, field_key, seq, op, text)."""
@@ -1260,7 +1292,7 @@ def cdc_fielded_live_sql(
     field_key: str | None = None,
     as_of: int | None = None,
 ) -> str:
-    """DuckDB twin of cdc_field_log → cdc_live_fielded, optionally
+    """DuckDB twin of cdc_field_log → FIELDED.resolve, optionally
     pre-filtered to one family and/or resolved AS OF a log seq (the
     fielded MVCC read the snapshot-scoped find pipeline pays)."""
     key_and = f"AND field_key = '{field_key}'" if field_key else ""
@@ -1273,110 +1305,6 @@ SELECT field_key, rid, field_id, text FROM (
 ) WHERE rn = 1 AND op = 'upsert' {key_and}
 """
 
-
-def cdc_fielded_index_ingest(
-    spark: SparkSession,
-    log_path: str,
-    index_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Stream a FIELD-grain CDC op log into the per-family serving
-    sidecars: upsert batches append seq-tagged postings segments
-    PARTITIONED BY field_key (the on-disk layout _fielded_text_index
-    assumes at scale — a scoped query's family prune is partition
-    pruning over these files), every op appends to the field-grain
-    oplog. Same exactly-once file-source + checkpoint contract as
-    cdc_index_ingest; the reference's indexer likewise
-    delete-then-reindexes exactly the mutated field's paragraphs
-    (nidx/src/indexer.rs)."""
-    schema = spark.read.parquet(log_path).schema
-    if os.path.isfile(log_path):
-        log_path = stage_arrival_dir(log_path)
-    stream = spark.readStream.schema(schema).parquet(log_path)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        ups = batch_df.filter(F.col("op") == "upsert")
-        post = (
-            ups.select(
-                "field_key",
-                "rid",
-                "field_id",
-                "seq",
-                F.explode(tokenize("text")).alias("term"),
-            )
-            .groupBy("field_key", "rid", "field_id", "seq", "term")
-            .agg(F.count("*").cast("double").alias("tf"))
-        )
-        post.write.mode("append").partitionBy("field_key").parquet(
-            f"{index_path}/postings"
-        )
-        batch_df.select("rid", "field_id", "seq", "op").write.mode(
-            "append"
-        ).parquet(f"{index_path}/oplog")
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def live_field_versions(oplog: DataFrame) -> DataFrame:
-    """(rid, field_id, seq) of live field versions — the field-grain
-    deletion-list application as one partial-aggregatable groupBy."""
-    return (
-        oplog.groupBy("rid", "field_id")
-        .agg(F.max_by("op", "seq").alias("op"), F.max("seq").alias("seq"))
-        .filter(F.col("op") == "upsert")
-        .select("rid", "field_id", "seq")
-    )
-
-
-def live_fielded_postings(post: DataFrame, oplog: DataFrame) -> DataFrame:
-    """Streamed postings restricted to live field versions:
-    (field_key, rid, field_id, term, tf). The live-version frame is
-    one (rid, field_id)-keyed aggregation; the equi-join on
-    (rid, field_id, seq) masks dead segments exactly like the
-    resource-grain live_postings."""
-    return post.join(live_field_versions(oplog), ["rid", "field_id", "seq"]).select(
-        "field_key", "rid", "field_id", "term", "tf"
-    )
-
-
-def compact_fielded_index(spark: SparkSession, index_path: str) -> None:
-    """Physically purge dead per-family postings segments + truncate
-    the field-grain oplog (the deletion-purging force merge applied
-    to the streamed fielded index; search results before == after,
-    only storage shrinks). The rewrite preserves the field_key
-    partitioning, so family pruning keeps working on the compacted
-    layout."""
-    post = spark.read.parquet(f"{index_path}/postings")
-    oplog = spark.read.parquet(f"{index_path}/oplog")
-    live = live_field_versions(oplog)
-    kept = post.join(live, ["rid", "field_id", "seq"])
-    tmp = tempfile.mkdtemp(prefix="compactf_")
-    kept.write.mode("overwrite").partitionBy("field_key").parquet(
-        f"{tmp}/postings"
-    )
-    live.withColumn("op", F.lit("upsert")).write.mode("overwrite").parquet(
-        f"{tmp}/oplog"
-    )
-    for t in ("postings", "oplog"):
-        shutil.rmtree(f"{index_path}/{t}")
-        shutil.move(f"{tmp}/{t}", f"{index_path}/{t}")
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-# --- vector-index CDC (S1 vector path + V1 ingest-time assignment) ----------
-#
-# The reference's indexer also maintains the vector segments per
-# message (insert into HNSW, deletions masked by the alive bitset).
-# Same oplog design as the text CDC; new vectors additionally get
-# their IVF cell assigned at ingest via the broadcast centroid
-# sidecar (ann.assign_cells) — centroid drift is repaired by periodic
-# index rebuild, which is the reference's merge/rebuild story too.
 
 # --- relation-index CDC (S1 relation path) ----------------------------------
 #
@@ -1396,7 +1324,7 @@ def compact_fielded_index(spark: SparkSession, index_path: str) -> None:
 # hitting both rules is deleted — delete wins at the higher seq).
 
 _EDGE_SALT = "relcdc:"
-_EDGE_COLS = ["source_value", "relation_label", "target_value"]
+_EDGE_COLS = RELATIONS.keys
 
 
 def _edge_md5():
@@ -1440,24 +1368,8 @@ def cdc_relation_log(relations: DataFrame) -> DataFrame:
     return base.unionByName(rev).unionByName(dele)
 
 
-def cdc_live_relations(log: DataFrame) -> DataFrame:
-    """Latest-op-wins live relation set — deletion-list application
-    at edge grain. One shuffle keyed by the edge identity; max_by
-    keeps it partial-aggregatable."""
-    rest = [c for c in log.columns if c not in (*_EDGE_COLS, "seq")]
-    return (
-        log.groupBy(*_EDGE_COLS)
-        .agg(F.max_by(F.struct(*rest), "seq").alias("last"))
-        .filter(F.col("last.op") == "upsert")
-        .select(
-            *_EDGE_COLS,
-            *[F.col(f"last.{c}").alias(c) for c in rest if c != "op"],
-        )
-    )
-
-
 def cdc_relations_live_sql(relations_sql: str) -> str:
-    """DuckDB twin of cdc_relation_log → cdc_live_relations."""
+    """DuckDB twin of cdc_relation_log → RELATIONS.resolve."""
     h = _edge_md5_sql()
     return f"""
 SELECT source_value, relation_label, target_value,
@@ -1484,76 +1396,14 @@ FROM (
 """
 
 
-def cdc_relation_ingest(
-    spark: SparkSession,
-    log_path: str,
-    index_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Stream a relation op log into searchable edge segments:
-    upsert batches append seq-tagged edge rows, every op appends to
-    the edge-grain oplog — the relation-index sibling of
-    cdc_index_ingest / cdc_vector_ingest (the reference's indexer
-    maintains nidx_relation segments + deletion lists per message).
-    Same exactly-once file-source + checkpoint contract."""
-    schema = spark.read.parquet(log_path).schema
-    if os.path.isfile(log_path):
-        log_path = stage_arrival_dir(log_path)
-    stream = spark.readStream.schema(schema).parquet(log_path)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.filter(F.col("op") == "upsert").drop("op").write.mode(
-            "append"
-        ).parquet(f"{index_path}/edges")
-        batch_df.select(*_EDGE_COLS, "seq", "op").write.mode("append").parquet(
-            f"{index_path}/oplog"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def live_edge_versions(oplog: DataFrame) -> DataFrame:
-    """(edge identity, seq) of live edges — the edge-grain
-    deletion-list application as one partial-aggregatable groupBy."""
-    return (
-        oplog.groupBy(*_EDGE_COLS)
-        .agg(F.max_by("op", "seq").alias("op"), F.max("seq").alias("seq"))
-        .filter(F.col("op") == "upsert")
-        .select(*_EDGE_COLS, "seq")
-    )
-
-
-def live_relation_segments(edges: DataFrame, oplog: DataFrame) -> DataFrame:
-    """Edge segments restricted to live versions — deletion-list
-    application at edge grain: one edge-keyed aggregation over the
-    oplog, joined back on (edge identity, seq)."""
-    return edges.join(live_edge_versions(oplog), [*_EDGE_COLS, "seq"]).drop("seq")
-
-
-def compact_relation_index(spark: SparkSession, index_path: str) -> None:
-    """Force-merge the streamed relation index: dead edge versions
-    physically purged, oplog truncated to live edges. Search results
-    before == after."""
-    edges = spark.read.parquet(f"{index_path}/edges")
-    oplog = spark.read.parquet(f"{index_path}/oplog")
-    live = live_edge_versions(oplog)
-    kept = edges.join(live, [*_EDGE_COLS, "seq"])
-    tmp = tempfile.mkdtemp(prefix="compactr_")
-    kept.write.mode("overwrite").parquet(f"{tmp}/edges")
-    live.withColumn("op", F.lit("upsert")).write.mode("overwrite").parquet(
-        f"{tmp}/oplog"
-    )
-    for t in ("edges", "oplog"):
-        shutil.rmtree(f"{index_path}/{t}")
-        shutil.move(f"{tmp}/{t}", f"{index_path}/{t}")
-    shutil.rmtree(tmp, ignore_errors=True)
-
+# --- vector-index CDC (S1 vector path + V1 ingest-time assignment) ----------
+#
+# The reference's indexer also maintains the vector segments per
+# message (insert into HNSW, deletions masked by the alive bitset).
+# Same oplog design as the text CDC; new vectors additionally get
+# their IVF cell assigned at ingest via the broadcast centroid
+# sidecar (ann.assign_cells) — centroid drift is repaired by periodic
+# index rebuild, which is the reference's merge/rebuild story too.
 
 # deterministic vector CDC: rid%6==0 revised to the reversed
 # embedding at seq=rid+1e6; rid%9==0 deleted at seq=rid+2e6.
@@ -1601,78 +1451,6 @@ SELECT rid, vector FROM (
 """
 
 
-def cdc_live_vectors(log: DataFrame) -> DataFrame:
-    """Latest-op-wins live vectors (rid, vector)."""
-    return (
-        log.groupBy("rid")
-        .agg(F.max_by(F.struct("op", "vector"), "seq").alias("last"))
-        .filter(F.col("last.op") == "upsert")
-        .select("rid", F.col("last.vector").alias("vector"))
-    )
-
-
-def cdc_vector_ingest(
-    spark: SparkSession,
-    log_path: str,
-    index_path: str,
-    checkpoint_path: str,
-    centroids: DataFrame,
-) -> None:
-    """Stream a vector op log into the IVF index: upserts get their
-    cell assigned against the broadcast centroid sidecar and append
-    as seq-tagged segments; every op appends to the oplog."""
-    from nucliadb_spark.operators import ann as ann_ops
-
-    schema = spark.read.parquet(log_path).schema
-    if os.path.isfile(log_path):
-        log_path = stage_arrival_dir(log_path)
-    stream = spark.readStream.schema(schema).parquet(log_path)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        ups = batch_df.filter(F.col("op") == "upsert")
-        assigned = ann_ops.assign_cells(ups, centroids, keys=("rid", "seq"))
-        assigned.write.mode("append").parquet(f"{index_path}/vectors")
-        batch_df.select("rid", "seq", "op").write.mode("append").parquet(
-            f"{index_path}/oplog"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def live_vector_segments(vecs: DataFrame, oplog: DataFrame) -> DataFrame:
-    """Vector segments restricted to live versions:
-    (rid, vector, cluster_label)."""
-    return vecs.join(live_doc_versions(oplog), ["rid", "seq"]).select(
-        "rid", "vector", "cluster_label"
-    )
-
-
-def compact_vector_index(spark: SparkSession, index_path: str) -> None:
-    """Force-merge the streamed vector index: dead vector versions
-    physically purged (the alive-bitset becomes a no-op), oplog
-    truncated to live versions; ingest-assigned cell labels ride
-    along untouched. Search results before == after."""
-    vecs = spark.read.parquet(f"{index_path}/vectors")
-    oplog = spark.read.parquet(f"{index_path}/oplog")
-    live = live_doc_versions(oplog)
-    kept = vecs.join(live, ["rid", "seq"])
-    tmp = tempfile.mkdtemp(prefix="compactv_")
-    kept.write.mode("overwrite").parquet(f"{tmp}/vectors")
-    live.withColumn("op", F.lit("upsert")).write.mode("overwrite").parquet(
-        f"{tmp}/oplog"
-    )
-    for t in ("vectors", "oplog"):
-        shutil.rmtree(f"{index_path}/{t}")
-        shutil.move(f"{tmp}/{t}", f"{index_path}/{t}")
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
 def retrain_vector_index(spark: SparkSession, index_path: str) -> DataFrame:
     """Compact + RETRAIN the streamed IVF layout: re-derive centroids
     from the LIVE vectors (one Lloyd refresh of the per-cell means)
@@ -1680,7 +1458,7 @@ def retrain_vector_index(spark: SparkSession, index_path: str) -> DataFrame:
     — the CDC answer to centroid drift (`ann.ivf_drift_plan` is the
     trigger report; the reference's vector merge rebuilds segments
     the same way, nidx/src/scheduler/vector_merge.rs). Dead versions
-    purge and the oplog truncates exactly like compact_vector_index;
+    purge and the oplog truncates exactly like ``VECTORS.compact``;
     exact search results are unchanged by construction (cells don't
     enter exact scoring) and probe recall is re-gated on the
     clustered corpus in tests/test_cdc_ingest.py.
@@ -1689,28 +1467,14 @@ def retrain_vector_index(spark: SparkSession, index_path: str) -> DataFrame:
     republishes it to the ingest assigner, closing the lifecycle
     loop (assign against v2 centroids from here on).
     """
+    from nucliadb_spark.functions import frames
     from nucliadb_spark.operators import ann as ann_ops
 
-    vecs = spark.read.parquet(f"{index_path}/vectors")
-    oplog = spark.read.parquet(f"{index_path}/oplog")
-    live = live_doc_versions(oplog)
-    kept = vecs.join(live, ["rid", "seq"])
+    kept, live_ops = VECTORS._live_rows(spark, index_path)
     refreshed = ann_ops.cell_centroids(kept)
-    reassigned = ann_ops.assign_cells(
-        kept.select("rid", "seq", "vector"), refreshed, keys=("rid", "seq")
-    )
-    tmp = tempfile.mkdtemp(prefix="retrainv_")
-    reassigned.write.mode("overwrite").parquet(f"{tmp}/vectors")
-    live.withColumn("op", F.lit("upsert")).write.mode("overwrite").parquet(
-        f"{tmp}/oplog"
-    )
     cents = refreshed.collect()  # tiny: n_cells rows, republished sidecar
-    for t in ("vectors", "oplog"):
-        shutil.rmtree(f"{index_path}/{t}")
-        shutil.move(f"{tmp}/{t}", f"{index_path}/{t}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    from nucliadb_spark.functions import frames
-
+    reassigned = _cell_assigned(VECTORS, kept.select("rid", "seq", "vector"), refreshed)
+    VECTORS._rewrite(index_path, reassigned, live_ops)
     return frames.literal_frame(spark, cents, refreshed.schema)
 
 
@@ -2161,19 +1925,6 @@ def cdc_label_log(resources: DataFrame) -> DataFrame:
     return base.unionByName(upd).unionByName(dele)
 
 
-def cdc_live_labels(log: DataFrame) -> DataFrame:
-    """(rid, labels) latest-op-wins live label state from a label op
-    log — the same rid-keyed max_by resolution every other CDC plane
-    pays. Cut the log at a seq first (``.filter(seq <= S)``) for the
-    snapshot read (catalog_facets_as_of, as-of label prefilters)."""
-    return (
-        log.groupBy("rid")
-        .agg(F.max_by(F.struct("op", "labels"), "seq").alias("last"))
-        .filter(F.col("last.op") == "upsert")
-        .select("rid", F.col("last.labels").alias("labels"))
-    )
-
-
 def cdc_labels_live_sql(resources_sql: str, as_of: int | None = None) -> str:
     """DuckDB twin of cdc_label_log → latest-op-wins: the LIVE
     labels corpus (rid, labels) the batch facet aggregation sees —
@@ -2224,7 +1975,7 @@ SELECT rid, labels FROM (
 # every cut).
 
 _LOCK_GROUP = "group-locked"
-_META_COLS = ("security_public", "security_groups", "extra", "source", "language")
+_META_COLS = META.payload
 
 
 def cdc_meta_log(fields: DataFrame) -> DataFrame:
@@ -2260,22 +2011,8 @@ def cdc_meta_log(fields: DataFrame) -> DataFrame:
     return base.unionByName(upd).unionByName(dele)
 
 
-def cdc_live_meta(log: DataFrame) -> DataFrame:
-    """(rid, security_public, security_groups, extra, source,
-    language) latest-op-wins resource-metadata state — one rid-keyed
-    map-side-combinable max_by, identical in shape to every other
-    CDC plane's live read. Cut the log at a seq first for the
-    snapshot read (as-of security/KV/origin filter planes)."""
-    return (
-        log.groupBy("rid")
-        .agg(F.max_by(F.struct("op", *_META_COLS), "seq").alias("last"))
-        .filter(F.col("last.op") == "upsert")
-        .select("rid", *[F.col(f"last.{c}").alias(c) for c in _META_COLS])
-    )
-
-
 def cdc_meta_live_sql(fields_sql: str, as_of: int | None = None) -> str:
-    """DuckDB twin of cdc_meta_log → cdc_live_meta, optionally
+    """DuckDB twin of cdc_meta_log → META.resolve, optionally
     resolved AS OF a log seq (the metadata plane's snapshot read)."""
     seq_where = f"WHERE seq <= {as_of}" if as_of is not None else ""
     return f"""
@@ -2297,53 +2034,6 @@ SELECT rid, security_public, security_groups, extra, source, language FROM (
   ) {seq_where}
 ) WHERE rn = 1 AND op = 'upsert'
 """
-
-
-def cdc_meta_ingest(
-    spark: SparkSession,
-    log_path: str,
-    index_path: str,
-    checkpoint_path: str,
-) -> None:
-    """Stream the resource-metadata op log into a maintained sink:
-    upserts append seq-tagged metadata segments, every op appends to
-    the rid-keyed oplog — the metadata-plane sibling of
-    cdc_index_ingest (the reference maintains the catalog/security
-    state transactionally per write; the streamed analog is the same
-    exactly-once file-source + checkpoint contract as every other
-    sink). Serving masks segments to live versions
-    (live_meta_segments), so a security/extra/origin read never
-    resolves the raw log per request."""
-    schema = spark.read.parquet(log_path).schema
-    if os.path.isfile(log_path):
-        log_path = stage_arrival_dir(log_path)
-    stream = spark.readStream.schema(schema).parquet(log_path)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.filter(F.col("op") == "upsert").drop("op").write.mode(
-            "append"
-        ).parquet(f"{index_path}/meta")
-        batch_df.select("rid", "seq", "op").write.mode("append").parquet(
-            f"{index_path}/oplog"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def live_meta_segments(meta: DataFrame, oplog: DataFrame) -> DataFrame:
-    """Metadata segments restricted to live versions — the rid-keyed
-    deletion-list application over the maintained metadata sink:
-    (rid, security_public, security_groups, extra, source,
-    language)."""
-    return meta.join(live_doc_versions(oplog), ["rid", "seq"]).select(
-        "rid", *_META_COLS
-    )
 
 
 # the CATALOG plane's security twin: the pg catalog keys security by
@@ -2384,28 +2074,8 @@ def cdc_security_log(resources: DataFrame) -> DataFrame:
     return base.unionByName(upd).unionByName(dele)
 
 
-def cdc_live_security(log: DataFrame) -> DataFrame:
-    """(rid, security_public, security_groups) latest-op-wins
-    security state — cut the log at a seq first for the snapshot
-    read."""
-    return (
-        log.groupBy("rid")
-        .agg(
-            F.max_by(
-                F.struct("op", "security_public", "security_groups"), "seq"
-            ).alias("last")
-        )
-        .filter(F.col("last.op") == "upsert")
-        .select(
-            "rid",
-            F.col("last.security_public").alias("security_public"),
-            F.col("last.security_groups").alias("security_groups"),
-        )
-    )
-
-
 def cdc_security_live_sql(resources_sql: str, as_of: int | None = None) -> str:
-    """DuckDB twin of cdc_security_log → cdc_live_security."""
+    """DuckDB twin of cdc_security_log → SECURITY.resolve."""
     seq_where = f"WHERE seq <= {as_of}" if as_of is not None else ""
     return f"""
 SELECT rid, security_public, security_groups FROM (
@@ -2456,10 +2126,6 @@ def cdc_facet_counter_ingest(
     replays from the log. Bucket count is bounded by the log's seq
     range / seq_bucket, so the sidecar stays facet-cardinality ×
     bucket-count sized — independent of corpus row count."""
-    schema = spark.read.parquet(log_path).schema
-    if os.path.isfile(log_path):
-        log_path = stage_arrival_dir(log_path)
-    stream = spark.readStream.schema(schema).parquet(log_path)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         cols = [F.explode("labels").alias("facet")]
@@ -2488,13 +2154,7 @@ def cdc_facet_counter_ingest(
             .parquet(f"{counters_path}/batch={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, log_path, fold, checkpoint_path)
 
 
 def live_facet_counters(partials: DataFrame) -> DataFrame:
@@ -2567,7 +2227,7 @@ def compact_facet_counters(spark: SparkSession, counters_path: str) -> None:
     and monotonic, so post-compaction batches land beside the
     compacted base and the next compaction folds them in. The folded
     rows land on DISK (a temp directory) before any partial is
-    removed — the write-tmp-then-swap pattern compact_cdc_index uses
+    removed — the write-tmp-then-swap pattern OpLogFamily.compact uses
     — so a crash at any point leaves either the original partials or
     the compacted base recoverable, never neither.
     live_facet_counters reads are identical before and after

@@ -77,7 +77,7 @@ def run_arm(spark, tag, chained):
         for seq in LADDER:
             t0 = time.perf_counter()
             srv.state_as_of(
-                spark, SF, fam, lb, ingest.cdc_live_fields, ("rid",), seq,
+                spark, SF, fam, lb, ingest.CONTENT.resolve, ingest.CONTENT.keys, seq,
                 log_name="probe_log",
             )
             times.append(round(time.perf_counter() - t0, 2))

@@ -98,19 +98,19 @@ def main() -> None:
         )
         # (a) the prior snapshot's live state (exists in production)
         t0 = time.perf_counter()
-        prior = ingest.cdc_live_vectors(cut_s1).persist()
+        prior = ingest.VECTORS.resolve(cut_s1).persist()
         prior.count()
         t_base = round(time.perf_counter() - t0, 2)
         # (b) the incremental advance (key anti-join + delta resolve)
         t0 = time.perf_counter()
         adv = ingest.advance_live_state(
-            prior, delta, ("rid",), ingest.cdc_live_vectors
+            prior, delta, ingest.VECTORS.keys, ingest.VECTORS.resolve
         )
         n_adv = adv.count()
         t_adv = round(time.perf_counter() - t0, 2)
         # (c) the from-scratch S2 resolution (full-log scan + shuffle)
         t0 = time.perf_counter()
-        scratch = ingest.cdc_live_vectors(
+        scratch = ingest.VECTORS.resolve(
             log.filter((F.col("seq_bucket") <= b2) & (F.col("seq") <= S2))
         )
         n_scr = scratch.count()

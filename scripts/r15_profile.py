@@ -92,12 +92,6 @@ def main() -> None:
     if only:
         names = [n for n in names if n in only]
 
-    tag = os.environ.get("R15_TAG", "")
-    plan_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15"
-    )
-    os.makedirs(plan_dir, exist_ok=True)
-
     walls: dict[str, float] = {}
     construct: dict[str, float] = {}
     for name in names:
@@ -110,17 +104,6 @@ def main() -> None:
             df.collect()
             walls[name] = round(time.perf_counter() - t0, 3)
             construct[name] = round(t1 - t0, 3)
-            if tag:
-                plan = df._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
-                    )
-                )
-                with open(os.path.join(plan_dir, f"{name}_{tag}.txt"), "w") as fo:
-                    fo.write(
-                        f"# {name} @ {SF_DIR} tag={tag} warm-run={walls[name]}s\n"
-                    )
-                    fo.write(plan)
         except Exception as exc:  # noqa: BLE001
             walls[name] = -1.0
             print(f"# {name} FAILED: {exc}", file=sys.stderr)

@@ -77,7 +77,7 @@ def build(spark) -> None:
     # the vacuum's base state: the family sidecar at the horizon,
     # materialized once (in production this IS the serving artifact)
     full = spark.read.parquet(os.path.join(OUT, "log.parquet"))
-    base_state = ingest.cdc_live_fields(
+    base_state = ingest.CONTENT.resolve(
         full.filter(F.col("seq_bucket") <= HORIZON // 1_000_000 - 1)
     )
     base_state.write.mode("overwrite").parquet(os.path.join(OUT, "base.parquet"))
@@ -99,7 +99,7 @@ def main() -> None:
     head = (WAVES + 1) * 1_000_000
 
     def full_resolve():
-        grade(ingest.cdc_live_fields(log.filter(F.col("seq") <= head)))
+        grade(ingest.CONTENT.resolve(log.filter(F.col("seq") <= head)))
 
     def vacuumed_serve():
         retained = log.filter(F.col("seq_bucket") >= HORIZON // 1_000_000)
@@ -108,7 +108,7 @@ def main() -> None:
             HORIZON,
         )
         grade(
-            ingest.asof_from_vacuum(vac, head, ("rid",), ingest.cdc_live_fields)
+            ingest.asof_from_vacuum(vac, head, ingest.CONTENT.keys, ingest.CONTENT.resolve)
         )
 
     full_resolve(); vacuumed_serve()  # warm

@@ -85,25 +85,25 @@ def test_autocompact_streamed_index_serve_reads_identical(spark, sf_dir):
     workdir = tempfile.mkdtemp(prefix="autocompact_test_")
     log = ingest.cdc_log(tpch.fields(spark, sf_dir))
     log.repartition(3).write.parquet(f"{workdir}/log")
-    ingest.cdc_index_ingest(
+    ingest.CONTENT.sink(
         spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
     )
     post = spark.read.parquet(f"{workdir}/index/postings")
     oplog = spark.read.parquet(f"{workdir}/index/oplog")
     before = sorted(
-        tuple(r) for r in ingest.live_postings(post, oplog).collect()
+        tuple(r) for r in ingest.CONTENT.live_segments(post, oplog).collect()
     )
     n_post_before = post.count()
     n_ops_before = oplog.count()
 
-    plan = ingest.autocompact_cdc_index(spark, f"{workdir}/index")
+    plan = ingest.CONTENT.autocompact(spark, f"{workdir}/index")
     merged = {r.segment_id for r in plan.collect() if r.action in ("merge", "purge")}
     assert merged, "the fixture must plan at least one merge"
 
     post2 = spark.read.parquet(f"{workdir}/index/postings")
     oplog2 = spark.read.parquet(f"{workdir}/index/oplog")
     after = sorted(
-        tuple(r) for r in ingest.live_postings(post2, oplog2).collect()
+        tuple(r) for r in ingest.CONTENT.live_segments(post2, oplog2).collect()
     )
     assert before == after
     # storage shrank: dead postings rows / superseded ops in merged
@@ -128,25 +128,25 @@ def test_autocompact_fielded_index_serve_reads_identical(spark, sf_dir):
     workdir = tempfile.mkdtemp(prefix="autocompactf_test_")
     log = ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir))
     log.repartition(3).write.parquet(f"{workdir}/log")
-    ingest.cdc_fielded_index_ingest(
+    ingest.FIELDED.sink(
         spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
     )
     post = spark.read.parquet(f"{workdir}/index/postings")
     oplog = spark.read.parquet(f"{workdir}/index/oplog")
     before = sorted(
         tuple(r)
-        for r in ingest.live_fielded_postings(post, oplog).collect()
+        for r in ingest.FIELDED.live_segments(post, oplog).collect()
     )
     n_before = post.count()
 
-    plan = ingest.autocompact_fielded_index(spark, f"{workdir}/index")
+    plan = ingest.FIELDED.autocompact(spark, f"{workdir}/index")
     assert any(r.action == "merge" for r in plan.collect())
 
     post2 = spark.read.parquet(f"{workdir}/index/postings")
     oplog2 = spark.read.parquet(f"{workdir}/index/oplog")
     after = sorted(
         tuple(r)
-        for r in ingest.live_fielded_postings(post2, oplog2).collect()
+        for r in ingest.FIELDED.live_segments(post2, oplog2).collect()
     )
     assert before == after
     assert post2.count() < n_before
@@ -167,26 +167,26 @@ def test_autocompact_vector_index_serve_reads_identical(spark, sf_dir):
     ingest.cdc_vector_log(vectors).repartition(2).write.parquet(
         f"{workdir}/log"
     )
-    ingest.cdc_vector_ingest(
+    ingest.VECTORS.sink(
         spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt",
-        centroids,
+        centroids=centroids,
     )
     vecs = spark.read.parquet(f"{workdir}/index/vectors")
     oplog = spark.read.parquet(f"{workdir}/index/oplog")
     before = sorted(
         (r.rid, tuple(r.vector), r.cluster_label)
-        for r in ingest.live_vector_segments(vecs, oplog).collect()
+        for r in ingest.VECTORS.live_segments(vecs, oplog).collect()
     )
     n_before = vecs.count()
 
-    plan = ingest.autocompact_vector_index(spark, f"{workdir}/index")
+    plan = ingest.VECTORS.autocompact(spark, f"{workdir}/index")
     assert any(r.action == "merge" for r in plan.collect())
 
     vecs2 = spark.read.parquet(f"{workdir}/index/vectors")
     oplog2 = spark.read.parquet(f"{workdir}/index/oplog")
     after = sorted(
         (r.rid, tuple(r.vector), r.cluster_label)
-        for r in ingest.live_vector_segments(vecs2, oplog2).collect()
+        for r in ingest.VECTORS.live_segments(vecs2, oplog2).collect()
     )
     assert before == after
     assert vecs2.count() < n_before
@@ -200,24 +200,30 @@ def test_autocompact_relation_index_serve_reads_identical(spark, sf_dir):
     ingest.cdc_relation_log(tpch.relations(spark, sf_dir)).repartition(
         2
     ).write.parquet(f"{workdir}/log")
-    ingest.cdc_relation_ingest(
+    ingest.RELATIONS.sink(
         spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
     )
     edges = spark.read.parquet(f"{workdir}/index/edges")
     oplog = spark.read.parquet(f"{workdir}/index/oplog")
     before = sorted(
-        tuple(r) for r in ingest.live_relation_segments(edges, oplog).collect()
+        tuple(r) for r in ingest.RELATIONS.live_segments(edges, oplog).collect()
     )
     n_before = edges.count()
 
-    plan = ingest.autocompact_relation_index(spark, f"{workdir}/index")
+    # the edge log's base seqs are hash-spread over [0, 1e6)
+    # (cdc_relation_log's md5 schedule), so its segment bucket is
+    # coarser than the dense rid-derived logs' — same op count per
+    # segment either way
+    plan = ingest.RELATIONS.autocompact(
+        spark, f"{workdir}/index", seg_bucket=20_000
+    )
     assert any(r.action == "merge" for r in plan.collect())
 
     edges2 = spark.read.parquet(f"{workdir}/index/edges")
     oplog2 = spark.read.parquet(f"{workdir}/index/oplog")
     after = sorted(
         tuple(r)
-        for r in ingest.live_relation_segments(edges2, oplog2).collect()
+        for r in ingest.RELATIONS.live_segments(edges2, oplog2).collect()
     )
     assert before == after
     assert edges2.count() < n_before

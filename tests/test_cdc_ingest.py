@@ -8,6 +8,7 @@ seq-tagged postings segments + latest-op-wins resolution at read,
 physical purge at compaction.
 """
 
+import os
 import shutil
 import tempfile
 
@@ -26,7 +27,7 @@ def fields(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def live(fields):
-    return ingest.cdc_live_fields(ingest.cdc_log(fields))
+    return ingest.CONTENT.resolve(ingest.cdc_log(fields))
 
 
 def test_deleted_docs_absent(live):
@@ -66,24 +67,24 @@ def test_stream_ingest_equals_batch_and_compaction_purges(spark, fields, live):
     try:
         # several files => several arrival events for the file source
         log.repartition(3).write.parquet(f"{workdir}/log")
-        ingest.cdc_index_ingest(
+        ingest.CONTENT.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
         )
         post = spark.read.parquet(f"{workdir}/index/postings")
         oplog = spark.read.parquet(f"{workdir}/index/oplog")
-        streamed = ingest.live_postings(post, oplog)
+        streamed = ingest.CONTENT.live_segments(post, oplog)
         batch = bm25.postings(live)
         assert sorted(streamed.collect()) == sorted(batch.collect())
 
         raw_rows = post.count()
-        n_live_versions = ingest.live_doc_versions(oplog).count()
-        ingest.compact_cdc_index(spark, f"{workdir}/index")
+        n_live_versions = ingest.CONTENT.live_versions(oplog).count()
+        ingest.CONTENT.compact(spark, f"{workdir}/index")
         post2 = spark.read.parquet(f"{workdir}/index/postings")
         oplog2 = spark.read.parquet(f"{workdir}/index/oplog")
         assert post2.count() < raw_rows  # dead versions purged
         # deletion-list application is a no-op after the purge:
         # results identical before/after
-        after = ingest.live_postings(post2, oplog2)
+        after = ingest.CONTENT.live_segments(post2, oplog2)
         assert sorted(after.collect()) == sorted(batch.collect())
         # oplog truncated to exactly the live versions
         assert oplog2.count() == n_live_versions
@@ -101,18 +102,18 @@ def test_vector_cdc_stream_equals_batch_and_ivf_serves(spark, sf_dir):
     vectors = tpch.vectors(spark, sf_dir)
     centroids = ann.cell_centroids(vectors)
     log = ingest.cdc_vector_log(vectors)
-    live = ingest.cdc_live_vectors(log)
+    live = ingest.VECTORS.resolve(log)
 
     workdir = tempfile.mkdtemp(prefix="vcdc_")
     try:
         log.repartition(2).write.parquet(f"{workdir}/log")
-        ingest.cdc_vector_ingest(
+        ingest.VECTORS.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt",
-            centroids,
+            centroids=centroids,
         )
         vecs = spark.read.parquet(f"{workdir}/index/vectors")
         oplog = spark.read.parquet(f"{workdir}/index/oplog")
-        streamed = ingest.live_vector_segments(vecs, oplog)
+        streamed = ingest.VECTORS.live_segments(vecs, oplog)
 
         # deleted rids absent; revised rids carry the new embedding
         assert streamed.filter(F.col("rid") % 9 == 0).count() == 0
@@ -139,7 +140,7 @@ def test_field_level_delete_leaves_sibling_fields_live(spark, sf_dir):
     rid's link field must NOT touch its body/title fields, and a
     link revision must replace only the link text."""
     fm = tpch.fields_multi(spark, sf_dir)
-    live = ingest.cdc_live_fielded(ingest.cdc_field_log(fm))
+    live = ingest.FIELDED.resolve(ingest.cdc_field_log(fm))
 
     # a rid with a deleted link field (rid%9==0, rid%3==0 owns one)
     victim = 9
@@ -177,14 +178,14 @@ def test_fielded_index_stream_ingest_equals_batch(spark, sf_dir):
     workdir = tempfile.mkdtemp(prefix="ffcdc_")
     try:
         log.repartition(2).write.parquet(f"{workdir}/log")
-        ingest.cdc_fielded_index_ingest(
+        ingest.FIELDED.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
         )
         post = spark.read.parquet(f"{workdir}/index/postings")
         oplog = spark.read.parquet(f"{workdir}/index/oplog")
-        streamed = ingest.live_fielded_postings(post, oplog)
+        streamed = ingest.FIELDED.live_segments(post, oplog)
 
-        live = ingest.cdc_live_fielded(log)
+        live = ingest.FIELDED.resolve(log)
         batch = (
             live.select(
                 "field_key", "rid", "field_id",
@@ -240,7 +241,7 @@ def test_search_as_of_snapshot_semantics(spark, sf_dir, fields):
 
     log = ingest.cdc_log(fields)
     asof = ingest.cdc_live_as_of(log, 1_500_000)
-    live = ingest.cdc_live_fields(log)
+    live = ingest.CONTENT.resolve(log)
     # deleted-at-2M docs are present as of 1.5M, absent fully-live
     assert asof.filter(F.col("rid") % 11 == 0).count() > 0
     assert live.filter(F.col("rid") % 11 == 0).count() == 0
@@ -267,7 +268,7 @@ def test_relation_cdc_semantics(spark, sf_dir):
 
     rel = tpch.relations(spark, sf_dir)
     log = ingest.cdc_relation_log(rel)
-    live = ingest.cdc_live_relations(log)
+    live = ingest.RELATIONS.resolve(log)
 
     h = ingest._edge_md5()
     n_base = rel.count()
@@ -320,25 +321,25 @@ def test_fielded_compaction_purges_and_preserves(spark, sf_dir):
     workdir = tempfile.mkdtemp(prefix="ffcomp_")
     try:
         log.repartition(2).write.parquet(f"{workdir}/log")
-        ingest.cdc_fielded_index_ingest(
+        ingest.FIELDED.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt"
         )
         post = spark.read.parquet(f"{workdir}/index/postings")
         oplog = spark.read.parquet(f"{workdir}/index/oplog")
-        before = sorted(ingest.live_fielded_postings(post, oplog).collect())
+        before = sorted(ingest.FIELDED.live_segments(post, oplog).collect())
         raw_rows = post.count()
         plan = {
             r.field_key: r for r in maintenance.fielded_compaction_plan(log).collect()
         }
-        n_live_versions = ingest.live_field_versions(oplog).count()
+        n_live_versions = ingest.FIELDED.live_versions(oplog).count()
         assert n_live_versions == sum(r.n_fields_live for r in plan.values())
 
-        ingest.compact_fielded_index(spark, f"{workdir}/index")
+        ingest.FIELDED.compact(spark, f"{workdir}/index")
         post2 = spark.read.parquet(f"{workdir}/index/postings")
         oplog2 = spark.read.parquet(f"{workdir}/index/oplog")
         assert post2.count() < raw_rows  # dead versions purged
         assert oplog2.count() == n_live_versions
-        after = sorted(ingest.live_fielded_postings(post2, oplog2).collect())
+        after = sorted(ingest.FIELDED.live_segments(post2, oplog2).collect())
         assert after == before
         # the family layout survives the rewrite
         parts = {p for p in os.listdir(f"{workdir}/index/postings")
@@ -366,26 +367,26 @@ def test_vector_and_relation_compaction_preserve_results(spark, sf_dir):
         ingest.cdc_vector_log(vectors).repartition(2).write.parquet(
             f"{vworkdir}/log"
         )
-        ingest.cdc_vector_ingest(
+        ingest.VECTORS.sink(
             spark, f"{vworkdir}/log", f"{vworkdir}/index", f"{vworkdir}/ckpt",
-            centroids,
+            centroids=centroids,
         )
         vecs = spark.read.parquet(f"{vworkdir}/index/vectors")
         voplog = spark.read.parquet(f"{vworkdir}/index/oplog")
         v_before = sorted(
             (r.rid, tuple(r.vector), r.cluster_label)
-            for r in ingest.live_vector_segments(vecs, voplog).collect()
+            for r in ingest.VECTORS.live_segments(vecs, voplog).collect()
         )
         v_raw = vecs.count()
-        v_live_versions = ingest.live_doc_versions(voplog).count()
-        ingest.compact_vector_index(spark, f"{vworkdir}/index")
+        v_live_versions = ingest.CONTENT.live_versions(voplog).count()
+        ingest.VECTORS.compact(spark, f"{vworkdir}/index")
         vecs2 = spark.read.parquet(f"{vworkdir}/index/vectors")
         voplog2 = spark.read.parquet(f"{vworkdir}/index/oplog")
         assert vecs2.count() < v_raw
         assert voplog2.count() == v_live_versions
         v_after = sorted(
             (r.rid, tuple(r.vector), r.cluster_label)
-            for r in ingest.live_vector_segments(vecs2, voplog2).collect()
+            for r in ingest.VECTORS.live_segments(vecs2, voplog2).collect()
         )
         assert v_after == v_before
 
@@ -393,20 +394,20 @@ def test_vector_and_relation_compaction_preserve_results(spark, sf_dir):
         ingest.cdc_relation_log(rel).repartition(2).write.parquet(
             f"{rworkdir}/log"
         )
-        ingest.cdc_relation_ingest(
+        ingest.RELATIONS.sink(
             spark, f"{rworkdir}/log", f"{rworkdir}/index", f"{rworkdir}/ckpt"
         )
         edges = spark.read.parquet(f"{rworkdir}/index/edges")
         roplog = spark.read.parquet(f"{rworkdir}/index/oplog")
-        r_before = sorted(ingest.live_relation_segments(edges, roplog).collect())
+        r_before = sorted(ingest.RELATIONS.live_segments(edges, roplog).collect())
         r_raw = edges.count()
-        r_live_versions = ingest.live_edge_versions(roplog).count()
-        ingest.compact_relation_index(spark, f"{rworkdir}/index")
+        r_live_versions = ingest.RELATIONS.live_versions(roplog).count()
+        ingest.RELATIONS.compact(spark, f"{rworkdir}/index")
         edges2 = spark.read.parquet(f"{rworkdir}/index/edges")
         roplog2 = spark.read.parquet(f"{rworkdir}/index/oplog")
         assert edges2.count() < r_raw
         assert roplog2.count() == r_live_versions
-        r_after = sorted(ingest.live_relation_segments(edges2, roplog2).collect())
+        r_after = sorted(ingest.RELATIONS.live_segments(edges2, roplog2).collect())
         assert r_after == r_before
     finally:
         shutil.rmtree(vworkdir, ignore_errors=True)
@@ -424,8 +425,8 @@ def test_as_of_family_semantics(spark, sf_dir):
     from nucliadb_spark.streaming import ingest
 
     vlog = ingest.cdc_vector_log(tpch.vectors(spark, sf_dir))
-    v_asof = ingest.cdc_live_vectors(vlog.filter(F.col("seq") <= 1_500_000))
-    v_live = ingest.cdc_live_vectors(vlog)
+    v_asof = ingest.VECTORS.resolve(vlog.filter(F.col("seq") <= 1_500_000))
+    v_live = ingest.VECTORS.resolve(vlog)
     assert v_asof.filter(F.col("rid") % 9 == 0).count() > 0
     assert v_live.filter(F.col("rid") % 9 == 0).count() == 0
     # revisions (at +1M) already serve the reversed embedding
@@ -438,8 +439,8 @@ def test_as_of_family_semantics(spark, sf_dir):
     assert a == b
 
     rlog = ingest.cdc_relation_log(tpch.relations(spark, sf_dir))
-    r_asof = ingest.cdc_live_relations(rlog.filter(F.col("seq") <= 1_500_000))
-    r_live = ingest.cdc_live_relations(rlog)
+    r_asof = ingest.RELATIONS.resolve(rlog.filter(F.col("seq") <= 1_500_000))
+    r_live = ingest.RELATIONS.resolve(rlog)
     h = ingest._edge_md5()
     assert r_asof.filter(h % 9 == 0).count() > 0  # deletes not yet applied
     assert r_live.filter(h % 9 == 0).count() == 0
@@ -503,13 +504,13 @@ def test_ivf_drift_detected_and_retrain_recovers(spark):
     workdir = tempfile.mkdtemp(prefix="retrain_")
     try:
         log.drop("lbl").repartition(2).write.parquet(f"{workdir}/log")
-        ingest.cdc_vector_ingest(
+        ingest.VECTORS.sink(
             spark, f"{workdir}/log", f"{workdir}/index", f"{workdir}/ckpt",
-            base_cents,
+            centroids=base_cents,
         )
         vecs = spark.read.parquet(f"{workdir}/index/vectors")
         oplog = spark.read.parquet(f"{workdir}/index/oplog")
-        live_before = ingest.live_vector_segments(vecs, oplog)
+        live_before = ingest.VECTORS.live_segments(vecs, oplog)
         qvec = spark.createDataFrame(
             [([float(x) for x in new_center],)], "qvec array<double>"
         )
@@ -523,7 +524,7 @@ def test_ivf_drift_detected_and_retrain_recovers(spark):
         refreshed = ingest.retrain_vector_index(spark, f"{workdir}/index")
         vecs2 = spark.read.parquet(f"{workdir}/index/vectors")
         oplog2 = spark.read.parquet(f"{workdir}/index/oplog")
-        live_after = ingest.live_vector_segments(vecs2, oplog2)
+        live_after = ingest.VECTORS.live_segments(vecs2, oplog2)
         assert vecs2.count() == live_after.count()  # dead versions purged
         exact_after = [
             (r.id, r.score)
@@ -664,8 +665,8 @@ def test_incremental_refresh_results_equal_batch_rebuild(spark, sf_dir):
 
     vecs = spark.read.parquet(f"{wd}/index/vectors")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
-    served = ingest.live_vector_segments(vecs, oplog).select("rid", "vector")
-    batch = ingest.cdc_live_vectors(
+    served = ingest.VECTORS.live_segments(vecs, oplog).select("rid", "vector")
+    batch = ingest.VECTORS.resolve(
         ingest.cdc_vector_log(tpch.vectors(spark, sf_dir))
     )
     a = {r.rid: tuple(r.vector) for r in served.collect()}
@@ -821,45 +822,44 @@ def test_advance_text_index_equals_from_scratch(spark, sf_dir):
         assert {tuple(r) for r in adv_stats.collect()} == scratch_stats, s1
 
 
-@pytest.mark.parametrize(
-    "family",
-    ["vectors", "relations", "labels", "fielded"],
-)
+def family_log(spark, sf_dir, family: str):
+    """The op log of one CDC family, from its fixture builder (each
+    builder encodes its own data schedule). The family tests
+    parametrize over ingest.FAMILIES, so a new family fails them
+    until it has a builder here."""
+    fields = tpch.fields(spark, sf_dir)
+    return {
+        "content": lambda: ingest.cdc_log(fields),
+        "fielded": lambda: ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir)),
+        "relations": lambda: ingest.cdc_relation_log(tpch.relations(spark, sf_dir)),
+        "vectors": lambda: ingest.cdc_vector_log(tpch.vectors(spark, sf_dir)),
+        "labels": lambda: ingest.cdc_label_log(fields.select("rid", "labels")),
+        "meta": lambda: ingest.cdc_meta_log(fields),
+        "security": lambda: ingest.cdc_security_log(tpch.resources(spark, sf_dir)),
+    }[family]()
+
+
+@pytest.mark.parametrize("family", list(ingest.FAMILIES))
 def test_advance_live_state_equals_from_scratch(spark, sf_dir, family):
     """advance_live_state (the generic latest-op-wins advance) must
     yield EXACTLY the from-scratch seq-cut resolution for every CDC
-    family the find API reads at a snapshot — at multiple S1 cuts
-    including mid-wave, so kept/touched/deleted keys all exercise."""
-    if family == "vectors":
-        log = ingest.cdc_vector_log(
-            tpch.vectors(spark, sf_dir)
-        )
-        keys, resolve = ("rid",), ingest.cdc_live_vectors
-    elif family == "relations":
-        log = ingest.cdc_relation_log(tpch.relations(spark, sf_dir))
-        keys, resolve = tuple(ingest._EDGE_COLS), ingest.cdc_live_relations
-    elif family == "labels":
-        log = ingest.cdc_label_log(
-            tpch.fields(spark, sf_dir).select("rid", "labels")
-        )
-        keys, resolve = ("rid",), ingest.cdc_live_labels
-    else:
-        log = ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir))
-        keys, resolve = ("rid", "field_id"), ingest.cdc_live_fielded
-
+    family — at multiple S1 cuts including mid-wave, so
+    kept/touched/deleted keys all exercise."""
+    fam = ingest.FAMILIES[family]
+    log = family_log(spark, sf_dir, family)
     s2 = 3_000_000
     scratch = {
         tuple(map(str, r))
-        for r in resolve(log.filter(F.col("seq") <= s2)).collect()
+        for r in fam.resolve(log.filter(F.col("seq") <= s2)).collect()
     }
     assert scratch
     for s1 in (500_000, 1_000_100, 1_500_000):
-        prior = resolve(log.filter(F.col("seq") <= s1))
+        prior = fam.resolve(log.filter(F.col("seq") <= s1))
         adv = ingest.advance_live_state(
             prior,
             log.filter((F.col("seq") > s1) & (F.col("seq") <= s2)),
-            keys,
-            resolve,
+            fam.keys,
+            fam.resolve,
         )
         assert {tuple(map(str, r)) for r in adv.collect()} == scratch, s1
 
@@ -901,7 +901,7 @@ def test_facet_counters_as_of_equals_batch_at_every_cut(spark, sf_dir):
         }
 
     def batch(seq):
-        live = ingest.cdc_live_labels(log.filter(F.col("seq") <= seq))
+        live = ingest.LABELS.resolve(log.filter(F.col("seq") <= seq))
         return {
             r.facet: r.n
             for r in live.select(F.explode("labels").alias("facet"))
@@ -949,7 +949,7 @@ def test_vacuum_preserves_reads_at_and_above_horizon(spark, sf_dir):
     horizon = 1_000_123
     log = ingest.cdc_log(tpch.fields(spark, sf_dir))
     base, retained, _ = ingest.vacuum_op_log(
-        log, horizon, ingest.cdc_live_fields
+        log, horizon, ingest.CONTENT.resolve
     )
 
     def rows(df):
@@ -961,56 +961,60 @@ def test_vacuum_preserves_reads_at_and_above_horizon(spark, sf_dir):
         vacuumed = ingest.advance_live_state(
             base,
             retained.filter(F.col("seq") <= s),
-            ("rid",),
-            ingest.cdc_live_fields,
+            ingest.CONTENT.keys,
+            ingest.CONTENT.resolve,
         )
         assert rows(vacuumed) == rows(ingest.cdc_live_as_of(log, s)), s
 
 
 @pytest.mark.slow  # r15 slow tier: multi-cut equality sweep (>12 s measured)
-def test_vacuum_works_for_every_cdc_family(spark, sf_dir):
-    """vacuum_op_log is family-generic: for the vector / relation /
-    label / fielded planes, the vacuumed read (base at the horizon +
-    retained ops through the advance algebra) equals the full-log
-    resolution at a later cut AND at the head — the same family
-    table the snapshot-chaining test pins, run through the vacuum."""
-    from pyspark.sql import functions as F
-
-    from nucliadb_spark.sources import tpch
-    from nucliadb_spark.streaming import ingest
-
-    fams = {
-        "vectors": (
-            ingest.cdc_vector_log(tpch.vectors(spark, sf_dir)),
-            ingest.cdc_live_vectors,
-            ("rid",),
-        ),
-        "relations": (
-            ingest.cdc_relation_log(tpch.relations(spark, sf_dir)),
-            ingest.cdc_live_relations,
-            tuple(ingest._EDGE_COLS),
-        ),
-        "labels": (
-            ingest.cdc_label_log(
-                tpch.fields(spark, sf_dir).select("rid", "labels")
-            ),
-            ingest.cdc_live_labels,
-            ("rid",),
-        ),
-        "fielded": (
-            ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir)),
-            ingest.cdc_live_fielded,
-            ("rid", "field_id"),
-        ),
-    }
+@pytest.mark.parametrize("family", list(ingest.FAMILIES))
+def test_vacuum_works_for_every_cdc_family(spark, sf_dir, family):
+    """vacuum_op_log is family-generic: for every CDC family, the
+    vacuumed read (base at the horizon + retained ops through the
+    advance algebra) equals the full-log resolution at a later cut
+    AND at the head — the same family table the snapshot-chaining
+    test pins, run through the vacuum."""
+    fam = ingest.FAMILIES[family]
+    log = family_log(spark, sf_dir, family)
     horizon = 1_000_123
-    for fam, (log, resolve, keys) in fams.items():
-        base, retained, _ = ingest.vacuum_op_log(log, horizon, resolve)
-        for s in (1_500_000, 9_999_999):
-            vacuumed = ingest.advance_live_state(
-                base, retained.filter(F.col("seq") <= s), keys, resolve
-            )
-            scratch = resolve(log.filter(F.col("seq") <= s))
-            assert {tuple(map(str, r)) for r in vacuumed.collect()} == {
-                tuple(map(str, r)) for r in scratch.collect()
-            }, (fam, s)
+    base, retained, _ = ingest.vacuum_op_log(log, horizon, fam.resolve)
+    for s in (1_500_000, 9_999_999):
+        vacuumed = ingest.advance_live_state(
+            base, retained.filter(F.col("seq") <= s), fam.keys, fam.resolve
+        )
+        scratch = fam.resolve(log.filter(F.col("seq") <= s))
+        assert {tuple(map(str, r)) for r in vacuumed.collect()} == {
+            tuple(map(str, r)) for r in scratch.collect()
+        }, s
+
+
+def test_force_merge_swap_survives_a_crash_between_moves(spark, tmp_path, monkeypatch):
+    """A crash between moving the old table aside and moving the
+    merged one in must leave every table's original rows on disk —
+    in place or as ``<table>.bak``, never neither (a delete-then-move
+    swap loses both)."""
+    idx = str(tmp_path / "index")
+    post = [(1, 1, "a", 1.0), (1, 2, "b", 1.0), (2, 3, "c", 1.0)]
+    ops = [(1, 1, "upsert"), (1, 2, "upsert"), (2, 3, "upsert")]
+    spark.createDataFrame(post, "rid long, seq long, term string, tf double").write.parquet(
+        f"{idx}/postings"
+    )
+    spark.createDataFrame(ops, "rid long, seq long, op string").write.parquet(f"{idx}/oplog")
+    real_move, moves = shutil.move, []
+
+    def crash_on_second_move(src, dst):
+        moves.append(src)
+        if len(moves) == 2:
+            raise OSError("simulated crash")
+        return real_move(src, dst)
+
+    monkeypatch.setattr(shutil, "move", crash_on_second_move)
+    with pytest.raises(OSError, match="simulated crash"):
+        ingest.CONTENT.compact(spark, idx)
+    monkeypatch.undo()
+    for table, rows in (("postings", post), ("oplog", ops)):
+        kept = [p for p in (f"{idx}/{table}", f"{idx}/{table}.bak") if os.path.isdir(p)]
+        assert any(
+            sorted(tuple(r) for r in spark.read.parquet(p).collect()) == rows for p in kept
+        ), (table, kept)

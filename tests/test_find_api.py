@@ -233,7 +233,7 @@ def test_fielded_scope_resolves_at_snapshot(spark, sf_dir):
     def scope_rids(as_of):
         return {
             r.rid
-            for r in ingest.cdc_live_fielded(log.filter(F.col("seq") <= as_of))
+            for r in ingest.FIELDED.resolve(log.filter(F.col("seq") <= as_of))
             .filter(F.col("field_key") == "/u/link")
             .select("rid")
             .distinct()
@@ -311,7 +311,7 @@ def test_as_of_filter_resolves_label_state_at_the_seq(spark, sf_dir):
     def allowed(lg):
         return {
             r.rid
-            for r in ingest.cdc_live_labels(lg)
+            for r in ingest.LABELS.resolve(lg)
             .filter(filt.to_column())
             .select("rid")
             .collect()
@@ -436,7 +436,7 @@ def test_as_of_security_filter_resolves_meta_state_at_the_seq(spark, sf_dir):
         filters=sec,
     )
     hits = {r.id for r in api.find_request(spark, sf_dir, req).collect()}
-    meta = ingest.cdc_live_meta(
+    meta = ingest.META.resolve(
         ingest.cdc_meta_log(tpch.fields(spark, sf_dir)).filter(
             F.col("seq") <= seq
         )
@@ -488,7 +488,7 @@ def test_as_of_mixed_plane_tree_equals_manual_intersection(spark, sf_dir):
 
     mixed = ids(And([label_tree, sec]))
     label_only = ids(label_tree)
-    meta = ingest.cdc_live_meta(
+    meta = ingest.META.resolve(
         ingest.cdc_meta_log(tpch.fields(spark, sf_dir)).filter(
             F.col("seq") <= seq
         )
@@ -527,7 +527,7 @@ def test_as_of_filters_fields_triple_composes(spark, sf_dir):
     labeled = tpch.fields(spark, sf_dir).select("rid", "labels")
     allowed = {
         r.rid
-        for r in ingest.cdc_live_labels(
+        for r in ingest.LABELS.resolve(
             ingest.cdc_label_log(labeled).filter(F.col("seq") <= _AS_OF_SEQ)
         )
         .filter(filt.to_column())
@@ -536,7 +536,7 @@ def test_as_of_filters_fields_triple_composes(spark, sf_dir):
     }
     scope = {
         r.rid
-        for r in ingest.cdc_live_fielded(
+        for r in ingest.FIELDED.resolve(
             ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir)).filter(
                 F.col("seq") <= _AS_OF_SEQ
             )
@@ -725,7 +725,7 @@ def test_asof_family_index_chains_from_nearest_cached_snapshot(spark, sf_dir):
         F.col("field_key") == "/u/link"
     )
     scratch = bm25_ops.postings(
-        ingest.cdc_live_fielded(flog.filter(F.col("seq") <= s2)).select(
+        ingest.FIELDED.resolve(flog.filter(F.col("seq") <= s2)).select(
             "rid", "text"
         )
     )
@@ -749,40 +749,40 @@ def test_asof_live_state_chains_for_every_family(spark, sf_dir):
     fams = {
         "vectors": (
             lambda: ingest.cdc_vector_log(tpch.vectors(spark, sf_dir)),
-            ingest.cdc_live_vectors,
-            ("rid",),
+            ingest.VECTORS.resolve,
+            ingest.VECTORS.keys,
         ),
         "relations": (
             lambda: ingest.cdc_relation_log(tpch.relations(spark, sf_dir)),
-            ingest.cdc_live_relations,
-            tuple(ingest._EDGE_COLS),
+            ingest.RELATIONS.resolve,
+            ingest.RELATIONS.keys,
         ),
         "labels": (
             lambda: ingest.cdc_label_log(
                 tpch.fields(spark, sf_dir).select("rid", "labels")
             ),
-            ingest.cdc_live_labels,
-            ("rid",),
+            ingest.LABELS.resolve,
+            ingest.LABELS.keys,
         ),
         "fielded_live": (
             lambda: ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir)),
-            ingest.cdc_live_fielded,
-            ("rid", "field_id"),
+            ingest.FIELDED.resolve,
+            ingest.FIELDED.keys,
         ),
         # the rephrase sidecar: embeddings are pure functions of text
         # versions, so the embed pass advances like any live state
         "stub_embeddings": (
             lambda: ingest.cdc_log(tpch.fields(spark, sf_dir)),
-            lambda log: ingest.cdc_live_fields(log).select(
+            lambda log: ingest.CONTENT.resolve(log).select(
                 "rid", models.stub_embedding(F.col("text")).alias("embedding")
             ),
-            ("rid",),
+            ingest.CONTENT.keys,
         ),
         # the r13 metadata plane (security/extra/origin) chains too
         "meta": (
             lambda: ingest.cdc_meta_log(tpch.fields(spark, sf_dir)),
-            ingest.cdc_live_meta,
-            ("rid",),
+            ingest.META.resolve,
+            ingest.META.keys,
         ),
     }
     import re
@@ -1009,7 +1009,7 @@ def test_as_of_fields_meta_filter_quadruple_composes(spark, sf_dir):
     )
     hits = {r.id for r in api.find_request(spark, sf_dir, req).collect()}
     assert hits
-    meta = ingest.cdc_live_meta(
+    meta = ingest.META.resolve(
         ingest.cdc_meta_log(tpch.fields(spark, sf_dir)).filter(
             F.col("seq") <= seq
         )
@@ -1022,7 +1022,7 @@ def test_as_of_fields_meta_filter_quadruple_composes(spark, sf_dir):
     )
     scoped = {
         r.rid
-        for r in ingest.cdc_live_fielded(flog.filter(F.col("seq") <= seq))
+        for r in ingest.FIELDED.resolve(flog.filter(F.col("seq") <= seq))
         .select("rid")
         .collect()
     }

@@ -15,7 +15,7 @@ from nucliadb_spark.streaming import ingest
 
 
 def _meta_at(spark, sf_dir, seq):
-    return ingest.cdc_live_meta(
+    return ingest.META.resolve(
         ingest.cdc_meta_log(tpch.fields(spark, sf_dir)).filter(
             F.col("seq") <= seq
         )
@@ -183,13 +183,13 @@ def test_plane_logs_share_one_write_schedule(spark, sf_dir):
     for seq in (300, 999_999, 1_500_000, 3_000_000):
         content = {
             r.rid
-            for r in ingest.cdc_live_fields(
+            for r in ingest.CONTENT.resolve(
                 ingest.cdc_log(fields).filter(F.col("seq") <= seq)
             ).select("rid").collect()
         }
         labels = {
             r.rid
-            for r in ingest.cdc_live_labels(
+            for r in ingest.LABELS.resolve(
                 ingest.cdc_label_log(fields.select("rid", "labels")).filter(
                     F.col("seq") <= seq
                 )

@@ -942,3 +942,32 @@ def test_cdc_catalog_facets_as_of_served_boundary_only_replay(spark, sf_dir):
     # no latest-op-wins resolution: the live/as-of label read's
     # max_by(struct(op, labels), seq) never enters this plan
     assert "max_by" not in plan, plan[:3000]
+
+
+def test_family_resolve_is_partial_max_by_without_window(spark):
+    """Every op-log family's latest-op-wins resolve is the contract
+    its docstring promises: one map-side-combinable max_by grouped on
+    the family's keys, no row_number window sort. A one-row op log
+    per family keeps the plan to the resolve's own operators."""
+    from nucliadb_spark.streaming import ingest
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    for fam in ingest.FAMILIES.values():
+        cols = [*fam.keys, "seq", "op", *fam.payload]
+        row = tuple(1 if c == "seq" else "upsert" if c == "op" else "x" for c in cols)
+        schema = ", ".join(f"{c} {'long' if c == 'seq' else 'string'}" for c in cols)
+        df = fam.resolve(spark.createDataFrame([row], schema))
+        plan = df._jdf.queryExecution().explainString(mode)
+        assert "Window" not in plan, (fam.name, plan)
+        partial = [
+            b for b in plan.split("\n\n")
+            if re.search(r"^Functions \[1\]: \[partial_max_by\(", b, re.M)
+        ]
+        assert len(partial) == 1, (fam.name, plan)
+        keys = re.search(r"^Keys \[\d+\]: \[(.*)\]$", partial[0], re.M).group(1)
+        assert [k.split("#")[0] for k in keys.split(", ")] == list(fam.keys), (
+            fam.name,
+            plan,
+        )

@@ -36,7 +36,7 @@ def iso_dir(tmp_path_factory, sf_dir):
 
 def _content(spark, sf):
     fields = tpch.fields(spark, sf)
-    return (lambda: ingest.cdc_log(fields)), ingest.cdc_live_fields
+    return (lambda: ingest.cdc_log(fields)), ingest.CONTENT.resolve
 
 
 def _rows(df):
@@ -65,7 +65,7 @@ def test_state_as_of_matches_in_memory_resolution(spark, iso_dir):
     log = lb()
     for seq in (1_000_030, 1_500_000, 3_000_000):
         served = serving.state_as_of(
-            spark, iso_dir, "content_text", lb, res, ("rid",), seq
+            spark, iso_dir, "content_text", lb, res, ingest.CONTENT.keys, seq
         )
         assert _rows(served) == _rows(ingest.cdc_live_as_of(log, seq))
 
@@ -83,12 +83,12 @@ def test_purge_refuses_when_a_family_is_behind(spark, iso_dir):
         "stub_embeddings",
         lb,
         api.stub_embed_live,
-        ("rid",),
+        ingest.CONTENT.keys,
         1_500_000,
         log_name="content_text",
     )
     serving.vacuum_family(
-        spark, iso_dir, "content_text", lb, res, ("rid",), H
+        spark, iso_dir, "content_text", lb, res, ingest.CONTENT.keys, H
     )
     with pytest.raises(ValueError, match="cannot purge"):
         serving.purge_log(spark, iso_dir, "content_text", H)
@@ -104,11 +104,11 @@ def test_vacuum_purge_serves_above_and_raises_below(spark, iso_dir):
         for seq in (H, 1_500_000, 3_000_000)
     }
     serving.vacuum_family(
-        spark, iso_dir, "content_text", lb, res, ("rid",), H
+        spark, iso_dir, "content_text", lb, res, ingest.CONTENT.keys, H
     )
     serving.vacuum_family(
         spark, iso_dir, "stub_embeddings", lb, api.stub_embed_live,
-        ("rid",), H, log_name="content_text",
+        ingest.CONTENT.keys, H, log_name="content_text",
     )
     deleted = serving.purge_log(spark, iso_dir, "content_text", H)
     assert deleted >= 1
@@ -123,12 +123,12 @@ def test_vacuum_purge_serves_above_and_raises_below(spark, iso_dir):
     assert buckets and min(buckets) >= 2, buckets
     for seq, exp in expected.items():
         served = serving.state_as_of(
-            spark, iso_dir, "content_text", lb, res, ("rid",), seq
+            spark, iso_dir, "content_text", lb, res, ingest.CONTENT.keys, seq
         )
         assert _rows(served) == exp, f"seq {seq} diverged post-vacuum"
     with pytest.raises(ValueError, match="below the vacuum horizon"):
         serving.state_as_of(
-            spark, iso_dir, "content_text", lb, res, ("rid",), 100_000
+            spark, iso_dir, "content_text", lb, res, ingest.CONTENT.keys, 100_000
         )
 
 
@@ -176,7 +176,7 @@ def test_late_family_on_purged_log_raises(spark, iso_dir):
             "late_family",
             lb,
             ingest.cdc_live_derived,
-            ("rid",),
+            ingest.CONTENT.keys,
             1_500_000,
             log_name="content_text",
         )
@@ -223,8 +223,8 @@ def test_stream_maintained_log_serves_and_advances(spark, tmp_path):
     ).write.mode("append").parquet(arrivals)
     serving.stream_maintained_log(spark, key_dir, "stream_t", arrivals, ckpt)
     mid = serving.state_as_of(
-        spark, key_dir, "stream_t", None, ingest.cdc_live_fields,
-        ("rid",), 400_000,
+        spark, key_dir, "stream_t", None, ingest.CONTENT.resolve,
+        ingest.CONTENT.keys, 400_000,
     )
     assert _rows(mid) == [(1, "alpha revised"), (2, "beta two")]
 
@@ -233,15 +233,15 @@ def test_stream_maintained_log_serves_and_advances(spark, tmp_path):
     ).parquet(arrivals)
     serving.stream_maintained_log(spark, key_dir, "stream_t", arrivals, ckpt)
     live = serving.state_as_of(
-        spark, key_dir, "stream_t", None, ingest.cdc_live_fields,
-        ("rid",), 700_000,
+        spark, key_dir, "stream_t", None, ingest.CONTENT.resolve,
+        ingest.CONTENT.keys, 700_000,
     )
     assert _rows(live) == [(1, "alpha revised")]
     # the pinned earlier snapshot still serves from its artifact
     assert _rows(
         serving.state_as_of(
-            spark, key_dir, "stream_t", None, ingest.cdc_live_fields,
-            ("rid",), 400_000,
+            spark, key_dir, "stream_t", None, ingest.CONTENT.resolve,
+            ingest.CONTENT.keys, 400_000,
         )
     ) == [(1, "alpha revised"), (2, "beta two")]
 
@@ -278,7 +278,7 @@ def test_unfed_stream_log_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="stream_maintained_log"):
         serving.state_as_of(
             spark, str(tmp_path), "never_fed", None,
-            ingest.cdc_live_fields, ("rid",), 10,
+            ingest.CONTENT.resolve, ingest.CONTENT.keys, 10,
         )
 
 
@@ -306,8 +306,8 @@ def test_new_snapshot_chains_from_nearest_artifact(spark, tmp_path,
     lb = lambda: log  # noqa: E731
 
     first = serving.state_as_of(
-        spark, key_dir, "chain_t", lb, ingest.cdc_live_fields,
-        ("rid",), 400_000,
+        spark, key_dir, "chain_t", lb, ingest.CONTENT.resolve,
+        ingest.CONTENT.keys, 400_000,
     )
     assert _rows(first) == [(1, "alpha revised"), (2, "beta two")]
 
@@ -328,15 +328,15 @@ def test_new_snapshot_chains_from_nearest_artifact(spark, tmp_path,
     monkeypatch.setattr(serving.ingest, "asof_from_vacuum",
                         counting_vacuum)
     second = serving.state_as_of(
-        spark, key_dir, "chain_t", lb, ingest.cdc_live_fields,
-        ("rid",), 700_000,
+        spark, key_dir, "chain_t", lb, ingest.CONTENT.resolve,
+        ingest.CONTENT.keys, 700_000,
     )
     assert calls == {"advance": 1, "vacuum": 0}
     monkeypatch.undo()
 
     control = serving.state_as_of(
-        spark, key_dir, "chain_ctl", lb, ingest.cdc_live_fields,
-        ("rid",), 700_000, log_name="chain_t",
+        spark, key_dir, "chain_ctl", lb, ingest.CONTENT.resolve,
+        ingest.CONTENT.keys, 700_000, log_name="chain_t",
     )
     assert _rows(second) == _rows(control)
     assert _rows(second) == [(1, "alpha revised"), (3, "gamma three")]
@@ -360,15 +360,15 @@ def test_chain_start_respects_vacuum_horizon(spark, tmp_path):
     lb = lambda: log  # noqa: E731
 
     serving.state_as_of(
-        spark, key_dir, "hz_t", lb, ingest.cdc_live_fields, ("rid",), 100,
+        spark, key_dir, "hz_t", lb, ingest.CONTENT.resolve, ingest.CONTENT.keys, 100,
     )  # artifact at seq 100 — below the horizon set next
     serving.vacuum_family(
-        spark, key_dir, "hz_t", lb, ingest.cdc_live_fields, ("rid",),
+        spark, key_dir, "hz_t", lb, ingest.CONTENT.resolve, ingest.CONTENT.keys,
         400_000,
     )
     out = serving.state_as_of(
-        spark, key_dir, "hz_t", lb, ingest.cdc_live_fields,
-        ("rid",), 700_000,
+        spark, key_dir, "hz_t", lb, ingest.CONTENT.resolve,
+        ingest.CONTENT.keys, 700_000,
     )
     assert _rows(out) == [
         (1, "alpha revised"), (2, "beta two"), (3, "gamma three")
@@ -396,8 +396,8 @@ def test_stream_log_vacuum_purge_and_late_arrival_guard(spark, tmp_path):
     ).write.mode("append").parquet(arrivals)
     serving.stream_maintained_log(spark, key_dir, "slate_t", arrivals, ckpt)
     serving.vacuum_family(
-        spark, key_dir, "slate_t", None, ingest.cdc_live_fields,
-        ("rid",), 249_999,
+        spark, key_dir, "slate_t", None, ingest.CONTENT.resolve,
+        ingest.CONTENT.keys, 249_999,
     )
     assert serving.purge_log(spark, key_dir, "slate_t", 249_999) == 1
 
@@ -416,8 +416,8 @@ def test_stream_log_vacuum_purge_and_late_arrival_guard(spark, tmp_path):
     assert "seq_bucket=0" not in os.listdir(log_dir)  # not re-created
 
     live = serving.state_as_of(
-        spark, key_dir, "slate_t", None, ingest.cdc_live_fields,
-        ("rid",), 350_000,
+        spark, key_dir, "slate_t", None, ingest.CONTENT.resolve,
+        ingest.CONTENT.keys, 350_000,
     )
     assert _rows(live) == [
         (1, "alpha revised"), (2, "beta two"), (3, "gamma three")
