@@ -10,11 +10,11 @@ fusion skip R3, legacy filter translation F8, reranker R5).
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nucliadb_spark.cache import cached_df, cached_names, memo, request_key
 from nucliadb_spark.functions import frames, models
 from nucliadb_spark.operators import bm25, fusion, knn
 from nucliadb_spark.operators.filters import Expr
@@ -268,7 +268,6 @@ def asof_text_index(
     import re
 
     from nucliadb_spark import serving
-    from nucliadb_spark.cache import cached_df, cached_names
 
     def log_builder() -> DataFrame:
         return ingest.cdc_log(fields)
@@ -294,7 +293,7 @@ def asof_text_index(
     def build_post() -> DataFrame:
         priors = [
             int(m.group(1))
-            for n in cached_names(spark, sf_dir)
+            for n in cached_names(sf_dir)
             if (m := re.fullmatch(r"asof(\d+)_text_post", n))
             and hzn <= int(m.group(1)) < as_of
         ]
@@ -304,13 +303,11 @@ def asof_text_index(
                 sf_dir,
                 f"asof{s1}_text_post",
                 lambda: bm25.postings(corpus_at(s1)),
-                spark=spark,
             )
             prior_stats = cached_df(
                 sf_dir,
                 f"asof{s1}_text_stats",
                 lambda: bm25.doc_stats_from_postings(prior_post),
-                spark=spark,
             )
             post2, stats2 = ingest.advance_text_index(
                 prior_post,
@@ -327,18 +324,16 @@ def asof_text_index(
             return post2
         return bm25.postings(corpus_at(as_of))
 
-    post = cached_df(sf_dir, f"asof{as_of}_text_post", build_post, spark=spark)
+    post = cached_df(sf_dir, f"asof{as_of}_text_post", build_post)
     stats = cached_df(
         sf_dir,
         f"asof{as_of}_text_stats",
         lambda: advanced.get("stats") or bm25.doc_stats_from_postings(post),
-        spark=spark,
     )
     corpus = cached_df(
         sf_dir,
         f"asof{as_of}_text_corpus",
         lambda: bm25.corpus_stats(stats),
-        spark=spark,
     )
     return post, stats, corpus
 
@@ -358,7 +353,6 @@ def asof_family_text_index(
     import re
 
     from nucliadb_spark import serving
-    from nucliadb_spark.cache import cached_df, cached_names
 
     slug = key.strip("/").replace("/", "_")
 
@@ -400,7 +394,7 @@ def asof_family_text_index(
         pat = re.compile(rf"asof(\d+)_f{re.escape(slug)}_post")
         priors = [
             int(m.group(1))
-            for n in cached_names(spark, sf_dir)
+            for n in cached_names(sf_dir)
             if (m := pat.fullmatch(n)) and hzn <= int(m.group(1)) < as_of
         ]
         if priors:
@@ -409,13 +403,11 @@ def asof_family_text_index(
                 sf_dir,
                 f"asof{s1}_f{slug}_post",
                 lambda: bm25.postings(fam_at(s1)),
-                spark=spark,
             )
             prior_stats = cached_df(
                 sf_dir,
                 f"asof{s1}_f{slug}_stats",
                 lambda: bm25.doc_stats_from_postings(prior_post),
-                spark=spark,
             )
             post2, stats2 = ingest.advance_text_index(
                 prior_post,
@@ -426,18 +418,16 @@ def asof_family_text_index(
             return post2
         return bm25.postings(fam_at(as_of))
 
-    post = cached_df(sf_dir, f"asof{as_of}_f{slug}_post", build_post, spark=spark)
+    post = cached_df(sf_dir, f"asof{as_of}_f{slug}_post", build_post)
     stats = cached_df(
         sf_dir,
         f"asof{as_of}_f{slug}_stats",
         lambda: advanced.get("stats") or bm25.doc_stats_from_postings(post),
-        spark=spark,
     )
     corpus = cached_df(
         sf_dir,
         f"asof{as_of}_f{slug}_corpus",
         lambda: bm25.corpus_stats(stats),
-        spark=spark,
     )
     return post, stats, corpus
 
@@ -490,7 +480,6 @@ def asof_live_state(
     import re
 
     from nucliadb_spark import serving
-    from nucliadb_spark.cache import cached_df, cached_names
 
     lname = log_name or family
     serving.check_horizon(spark, sf_dir, family, as_of)
@@ -506,15 +495,12 @@ def asof_live_state(
         hzn = serving.horizon(spark, sf_dir, family)
         priors = [
             int(m.group(1))
-            for n in cached_names(spark, sf_dir)
+            for n in cached_names(sf_dir)
             if (m := pat.fullmatch(n)) and hzn <= int(m.group(1)) < as_of
         ]
         if priors:
             s1 = max(priors)  # nearest earlier snapshot → smallest delta
-            prior = cached_df(
-                sf_dir, f"asof{s1}_{family}", lambda: state_at(s1),
-                spark=spark,
-            )
+            prior = cached_df(sf_dir, f"asof{s1}_{family}", lambda: state_at(s1))
             return ingest.advance_live_state(
                 prior,
                 serving.log_between(
@@ -525,35 +511,22 @@ def asof_live_state(
             )
         return state_at(as_of)
 
-    return cached_df(sf_dir, f"asof{as_of}_{family}", build, spark=spark)
-
-
-# Request-plan memo (r15, guide §5 driver overhead): building a
-# flagship request's DataFrame costs 50-200 ms of pure driver work
-# (plane classification, scope resolution, leg assembly, analysis) —
-# at ~1 s serving latencies that is 10-20% fixed overhead paid again
-# for every repeat of the SAME request. The memo stores the BUILT
-# plan handle keyed on the full request VALUE (dataclass repr — every
-# field of FindRequest and its nested filter/prequery trees), the
-# sf_dir and the Spark application id, so it works for any request
-# shape, never outlives the session, and never stores results: every
-# collect() re-executes the plan against the parquet inputs.
-_REQUEST_MEMO: OrderedDict[tuple[str, str, str], DataFrame] = OrderedDict()
-_REQUEST_MEMO_MAX = 256
+    return cached_df(sf_dir, f"asof{as_of}_{family}", build)
 
 
 def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFrame:
-    """Execute a FindRequest → (id, score, matched_sources)."""
-    key = (spark.sparkContext.applicationId, sf_dir, repr(req))
-    hit = _REQUEST_MEMO.get(key)
-    if hit is not None:
-        _REQUEST_MEMO.move_to_end(key)
-        return hit
-    df = _build_find_request(spark, sf_dir, req)
-    _REQUEST_MEMO[key] = df
-    while len(_REQUEST_MEMO) > _REQUEST_MEMO_MAX:
-        _REQUEST_MEMO.popitem(last=False)
-    return df
+    """Execute a FindRequest → (id, score, matched_sources).
+
+    Building a flagship request's plan costs 50-200 ms of pure driver
+    work (plane classification, scope resolution, leg assembly,
+    analysis), so the built plan handle is memoized per session on the
+    request's value (``cache.request_key``); a repeat re-executes it."""
+    return memo(
+        "find_request",
+        request_key(sf_dir, req),
+        lambda: _build_find_request(spark, sf_dir, req),
+        bound=256,
+    )
 
 
 def _build_find_request(
@@ -768,8 +741,6 @@ def _build_find_request(
     scoped_keys: list[str] | None = None
     scope_rids = None
     if req.fields:
-        from nucliadb_spark.cache import cached_df
-
         scoped_keys = ["/" + f_ for f_ in normalize_fields(req.fields)]
         if as_of is not None:
             live_fielded = asof_live_state(
@@ -804,7 +775,6 @@ def _build_find_request(
             sf_dir,
             scope_name,
             lambda: scoped_fields.select("rid").distinct(),
-            spark=spark,
             pinned=scope_pinned,
         )
 

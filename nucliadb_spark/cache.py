@@ -1,42 +1,58 @@
-"""Session-scoped index cache.
+"""Session store: everything the engine keeps for one Spark application.
 
 A search engine doesn't re-tokenize its corpus per query: tantivy
 serves from built segments (SURVEY §2.1 S3). The batch analog is a
-cached/persisted derived table per (corpus, index) pair. Queries go
-through `cached_df`, so the first query of a session builds and
-persists (MEMORY_AND_DISK — spills cleanly), and every later query
-reuses the materialized index. On a real cluster these would be
-parquet tables written by `bm25.build_index` / `ann.build_ivf` and
-read back with bucketing; the in-session cache gives the same
-plan shape without filesystem management in the test harness.
+persisted derived table per (corpus, index) pair, built by a session's
+first query and reused by every later one. This module holds that
+state, and every other per-session memo of the engine, behind one
+path: look the key up, and build only on a miss. A hit never calls
+the builder, so it never constructs, lists files for, or persists a
+plan it would throw away.
 
-Correctness is unaffected: the cache stores exactly the DataFrame the
-builder returns, keyed by (sf_dir, name).
+App keying. Every key starts with the id of the live application,
+read here from ``SparkSession.active()`` and nowhere else: a restarted
+or different session rebuilds instead of serving frames of a dead
+context.
 
-The cache is a bounded LRU. The bound is expressed in BYTES (r15 —
-the r14 entry-count bound of 512 was sized to one workload's tour;
-a byte budget is the policy that transfers to any tenant mix): each
-entry's size is probed once from the optimizer's statistics after it
-has had a chance to materialize, and when the known total exceeds
-``MAX_BYTES`` the least-recently-used unpinned entries are evicted.
-Eviction unpersists the entry — dropping storage only; any plan still
-holding the frame recomputes it lazily, so eviction can never change
-results. Hot shared index artifacts (the live text index, centroids,
-the relations index — built once per session, read by every request)
-are inserted with ``pinned=True`` and never evicted; the unbounded
-families (per-snapshot as-of sidecars keyed by seq) are unpinned and
-age out. Single-threaded by design: Spark driver-side query
-construction in this engine happens on one thread; the counters are
-plain ints.
+Regions.
+
+- ``cached_df``: persisted index sidecars (``_CACHE``, keys
+  ``(app, sf_dir, name)``), bounded in BYTES. Each entry's size is
+  probed once from the optimizer's statistics after it has had a
+  chance to materialize; when the known unpinned total exceeds
+  ``MAX_BYTES`` the least-recently-used unpinned entries are evicted.
+  Eviction unpersists the entry — dropping storage only; any plan
+  still holding the frame recomputes it lazily, so eviction can never
+  change results. Hot shared index artifacts (the live text index,
+  centroids, the relations index) are inserted with ``pinned=True``
+  and never evicted; the unbounded families (per-snapshot as-of
+  sidecars keyed by seq) are unpinned and age out.
+- ``memo(region, key, build, bound)``: one LRU dict per named region.
+  The two plan memos (``api.find_request``, ``find.find``) hold built
+  plan handles — never results: every collect() re-executes against
+  the parquet inputs — and keep their 256 most recent requests. The
+  other regions are unbounded, since their keys are table names,
+  paths and fixed sidecar names: ``cached_scalar``'s index-build
+  statistics, ``tpch.table``'s parquet reader frames, the streaming
+  readStream schemas and the package-zip registration.
+
+Plan memos key a request with ``request_key``, built from canonical
+values only, so two different requests can never share a key.
+
+``clear()`` empties every region. Single-threaded by design: Spark
+driver-side query construction in this engine happens on one thread;
+the counters are plain ints.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import datetime
 import os
 from collections import OrderedDict
-from collections.abc import Callable
+from collections.abc import Callable, Hashable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 # Byte budget for UNPINNED entries (the snapshot-keyed families).
@@ -71,9 +87,17 @@ _CACHE: OrderedDict[tuple[str, str, str], _Entry] = OrderedDict()
 _INSERTS = 0
 
 # observability: evictions in a session with a right-sized budget
-# should be ~0; a growing count is the thrash signal the r14 profile
-# caught (scripts/r14_profile.py prints it after a sweep)
+# should be ~0; a growing count is the thrash signal (perfbench
+# reports it per run as cache.evictions)
 EVICTIONS = 0
+
+# region name -> LRU dict of (app, key) -> value
+_REGIONS: dict[str, OrderedDict] = {}
+_MISSING = object()
+
+
+def _app() -> str:
+    return SparkSession.active().sparkContext.applicationId
 
 
 def reset_stats() -> None:
@@ -97,12 +121,12 @@ def _probe_size(df: DataFrame) -> int:
     return raw
 
 
-def cached_names(spark, sf_dir: str) -> list[str]:
+def cached_names(sf_dir: str) -> list[str]:
     """Names currently cached for this (application, sf_dir) —
     lets builders CHAIN from existing sidecars (e.g. the as-of text
     index advances the nearest cached earlier snapshot instead of
     building from scratch). Read-only; does not touch LRU order."""
-    app = spark.sparkContext.applicationId
+    app = _app()
     return [n for (a, s, n) in _CACHE if a == app and s == sf_dir]
 
 
@@ -110,29 +134,13 @@ def cached_df(
     sf_dir: str,
     name: str,
     builder: Callable[[], DataFrame],
-    spark=None,
     pinned: bool = False,
 ) -> DataFrame:
-    # with the session in hand the hit path never invokes the
-    # builder: chained as-of builders construct (and would persist)
-    # a PRIOR snapshot's whole plan, so building on a hit could
-    # re-insert an evicted prior entry and evict a hot sidecar for
-    # a frame that is never computed or used
-    if spark is not None:
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        hit = _CACHE.get(key)
-        if hit is not None:
-            hit.pinned = hit.pinned or pinned
-            _CACHE.move_to_end(key)
-            return hit.df
-    df = builder()
-    # key on the Spark application: a restarted/different session must
-    # rebuild, not serve DataFrames of a dead context
-    app = df.sparkSession.sparkContext.applicationId
-    key = (app, sf_dir, name)
+    key = (_app(), sf_dir, name)
     entry = _CACHE.get(key)
     if entry is None:
         global _INSERTS
+        df = builder()
         _INSERTS += 1
         entry = _Entry(
             df.persist(StorageLevel.MEMORY_AND_DISK), pinned, _INSERTS
@@ -172,24 +180,83 @@ def _enforce_budget() -> None:
             pass  # dead context — storage is already gone
 
 
+def memo(
+    region: str,
+    key: Hashable | None,
+    build: Callable[[], object],
+    bound: int | None = None,
+):
+    """The value stored under ``key`` in ``region`` for the live
+    application, built (and stored) only on a miss. A ``None`` key —
+    a request ``request_key`` cannot canonicalize — is built fresh and
+    not stored. With a ``bound`` the region keeps that many most
+    recently used entries."""
+    if key is None:
+        return build()
+    store = _REGIONS.setdefault(region, OrderedDict())
+    key = (_app(), key)
+    value = store.get(key, _MISSING)
+    if value is _MISSING:
+        value = store[key] = build()
+        while bound is not None and len(store) > bound:
+            store.popitem(last=False)
+    else:
+        store.move_to_end(key)
+    return value
+
+
+def cached_scalar(sf_dir: str, name: str, compute: Callable[[], object]):
+    """Session-scoped scalar sidecar (e.g. the corpus doc count used
+    by the prefilter All/None fast path) — an index-build statistic,
+    not per-query work."""
+    return memo("scalars", (sf_dir, name), compute)
+
+
+# scalars are keyed by type and repr, which for these types carries
+# the whole value and no address (and tells 0.0 from -0.0)
+_SCALAR_TYPES = frozenset(
+    (type(None), bool, int, float, str, bytes, datetime.date, datetime.datetime)
+)
+
+
+class _NoKey(Exception):
+    """A value without a canonical form."""
+
+
+def _canon(v) -> Hashable:
+    t = type(v)
+    if t in _SCALAR_TYPES:
+        return (t, repr(v))
+    if t is list or t is tuple:
+        return (t, tuple(_canon(x) for x in v))
+    if t is dict:
+        return (t, tuple((_canon(k), _canon(x)) for k, x in v.items()))
+    if isinstance(v, DataFrame):
+        # identity: the key holds the frame, so its id is never reused
+        return v
+    if dataclasses.is_dataclass(v) and not isinstance(v, type):
+        # the class itself, not its name: two classes defined by one
+        # function body share a qualified name
+        return (t, tuple(_canon(getattr(v, f.name)) for f in dataclasses.fields(v)))
+    raise _NoKey
+
+
+def request_key(*values) -> Hashable | None:
+    """Plan-memo key of a request's values, or None (do not memoize)
+    when any value — e.g. a filter node that is not a dataclass —
+    has no canonical form."""
+    try:
+        return tuple(_canon(v) for v in values)
+    except _NoKey:
+        return None
+
+
 def clear() -> None:
+    """Empty every region (unpersisting the cached frames)."""
     for e in _CACHE.values():
         try:
             e.df.unpersist()
         except Exception:
             pass
     _CACHE.clear()
-
-
-_SCALARS: dict[tuple[str, str, str], object] = {}
-
-
-def cached_scalar(df: DataFrame, sf_dir: str, name: str, compute: Callable[[], object]):
-    """Session-scoped scalar sidecar (e.g. the corpus doc count used
-    by the prefilter All/None fast path) — an index-build statistic,
-    not per-query work."""
-    app = df.sparkSession.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    if key not in _SCALARS:
-        _SCALARS[key] = compute()
-    return _SCALARS[key]
+    _REGIONS.clear()

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from nucliadb_spark.cache import cached_df
+from nucliadb_spark.cache import cached_df, memo, request_key
 from nucliadb_spark.operators import ann as ann_ops
 from nucliadb_spark.operators import bm25, fusion, knn
 from nucliadb_spark.operators.filters import Expr, _sql_quote
@@ -56,42 +56,17 @@ def stub_embedding_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Request-plan memo (r15, guide §5 — the twin of api._REQUEST_MEMO
-# for the operator-level find() entrypoint): building the three-leg
-# plan costs real driver time per request; repeats of the SAME
-# request reuse the built handle. Value args key by repr (all are
-# primitives/dataclasses), DataFrame args (prebuilt index sidecars)
-# key by object IDENTITY — the session cache returns the same frame
-# object per (sf_dir, name), so repeats hit; the memoized entry holds
-# strong references to those frames so a recycled id() can never
-# alias a different frame. Plan handles only — every collect()
-# re-executes against the parquet inputs.
-from collections import OrderedDict as _OrderedDict
-
-_FIND_MEMO: _OrderedDict = _OrderedDict()
-_FIND_MEMO_MAX = 256
-
-
 def find(spark: SparkSession, sf_dir: str, query: str, **kw) -> DataFrame:
-    parts = [("query", repr(query))]
-    frames_held = []
-    for nm in sorted(kw):
-        v = kw[nm]
-        if isinstance(v, DataFrame):
-            parts.append((nm, "df", id(v)))
-            frames_held.append(v)
-        else:
-            parts.append((nm, repr(v)))
-    key = (spark.sparkContext.applicationId, sf_dir, tuple(parts))
-    hit = _FIND_MEMO.get(key)
-    if hit is not None:
-        _FIND_MEMO.move_to_end(key)
-        return hit[0]
-    df = _build_find(spark, sf_dir, query, **kw)
-    _FIND_MEMO[key] = (df, tuple(frames_held))
-    while len(_FIND_MEMO) > _FIND_MEMO_MAX:
-        _FIND_MEMO.popitem(last=False)
-    return df
+    """Memoized ``_build_find``: repeats of the same call reuse the
+    built plan handle. DataFrame arguments (prebuilt index sidecars)
+    key by identity — the session cache returns the same frame per
+    (sf_dir, name), so repeats hit."""
+    return memo(
+        "find",
+        request_key(sf_dir, query, sorted(kw.items())),
+        lambda: _build_find(spark, sf_dir, query, **kw),
+        bound=256,
+    )
 
 
 def _build_find(

@@ -641,12 +641,8 @@ def dedup_span_removal(spark, sf_dir):
     from nucliadb_spark.cache import cached_df
 
     corpus = _planted(spark, sf_dir)
-    toks = cached_df(
-        sf_dir, "span_toks", lambda: dedup.span_token_stream(corpus), spark=spark
-    )
-    pg = cached_df(
-        sf_dir, "span_grams8", lambda: dedup.span_gram_stream(toks, 8), spark=spark
-    )
+    toks = cached_df(sf_dir, "span_toks", lambda: dedup.span_token_stream(corpus))
+    pg = cached_df(sf_dir, "span_grams8", lambda: dedup.span_gram_stream(toks, 8))
     return dedup.remove_dup_spans(corpus, n=8, toks=toks, pg=pg)
 
 

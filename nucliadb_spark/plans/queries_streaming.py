@@ -120,7 +120,7 @@ def _cdc_facet_counter_sidecar(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(res, sf_dir, "fctr_workdir", build)
+    wd = cached_scalar(sf_dir, "fctr_workdir", build)
     return cached_df(
         sf_dir,
         "fctr_counters",
@@ -224,7 +224,7 @@ def facet_counter_compaction(spark, sf_dir):
         ingest.compact_facet_counters(spark, f"{workdir}/counters")
         return workdir
 
-    wd = cached_scalar(res, sf_dir, "fctr_cmp_workdir", build)
+    wd = cached_scalar(sf_dir, "fctr_cmp_workdir", build)
     compacted = spark.read.parquet(f"{wd}/counters")
     return compacted.agg(
         F.count("*").cast("long").alias("n_facet_rows_compacted"),
@@ -300,7 +300,7 @@ def _fctr_asof_sidecar(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(res, sf_dir, "fctr_asof_workdir", build)
+    wd = cached_scalar(sf_dir, "fctr_asof_workdir", build)
     partials = cached_df(
         sf_dir,
         "fctr_asof_partials",
@@ -710,7 +710,7 @@ def _cdc_relation_served_index(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(rel, sf_dir, "rcdc_workdir", build)
+    wd = cached_scalar(sf_dir, "rcdc_workdir", build)
     edges = spark.read.parquet(f"{wd}/index/edges")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return edges, oplog
@@ -1125,7 +1125,7 @@ def _refresh_workdir(spark, sf_dir):
             v2.write.parquet(f"{workdir}/centroids_v2")
         return workdir
 
-    return cached_scalar(vectors, sf_dir, "refresh_workdir", build)
+    return cached_scalar(sf_dir, "refresh_workdir", build)
 
 
 def _refresh_report_oracle() -> str:
@@ -1850,7 +1850,6 @@ def suggest_as_of_filtered(spark, sf_dir):
         sf_dir,
         f"asof{_AS_OF_SEQ}_text_vocab",
         lambda: bm25.vocabulary(post),
-        spark=spark,
     )
     meta_state = api.asof_live_state(
         spark,
@@ -2832,8 +2831,6 @@ def find_hybrid_as_of_vacuumed(spark, sf_dir):
     from nucliadb_spark import api, serving
     from nucliadb_spark.cache import cached_scalar
 
-    fields = tpch.fields(spark, sf_dir)
-
     def make_private_corpus() -> str:
         # corpus-sized: tracked so the atexit hook reclaims it — /tmp
         # is not cleaned between sessions and repeated bench/probe
@@ -2851,7 +2848,7 @@ def find_hybrid_as_of_vacuumed(spark, sf_dir):
                 shutil.copy(src, os.path.join(d, f))
         return d
 
-    vdir = cached_scalar(fields, sf_dir, "vac_twin_dir", make_private_corpus)
+    vdir = cached_scalar(sf_dir, "vac_twin_dir", make_private_corpus)
     for fam, lname, lb, res, keys in _substrate_families(spark, vdir):
         serving.vacuum_family(
             spark, vdir, fam, lb, res, keys, _SERVE_VACUUM_H,
@@ -2932,7 +2929,7 @@ def cdc_substrate_stream_served(spark, sf_dir):
         serving.stream_maintained_log(spark, sf_dir, log_name, arrivals, ckpt)
         return True
 
-    cached_scalar(fields, sf_dir, "substrate_stream_maintained", maintain)
+    cached_scalar(sf_dir, "substrate_stream_maintained", maintain)
 
     def state(seq: int):
         return serving.state_as_of(
@@ -2980,7 +2977,7 @@ def _cdc_vector_served_index(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(vectors, sf_dir, "vcdc_workdir", build)
+    wd = cached_scalar(sf_dir, "vcdc_workdir", build)
     vecs = spark.read.parquet(f"{wd}/index/vectors")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return vecs, oplog
@@ -3039,7 +3036,7 @@ def _cdc_meta_served_index(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(fields, sf_dir, "mcdc_workdir", build)
+    wd = cached_scalar(sf_dir, "mcdc_workdir", build)
     meta = spark.read.parquet(f"{wd}/index/meta")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return meta, oplog
@@ -3111,7 +3108,7 @@ def _cdc_fielded_served_index(spark, sf_dir):
         )
         return workdir
 
-    wd = cached_scalar(fm, sf_dir, "cdcf_workdir", build)
+    wd = cached_scalar(sf_dir, "cdcf_workdir", build)
     post = spark.read.parquet(f"{wd}/index/postings")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return post, oplog
@@ -3197,7 +3194,7 @@ def _cdc_fielded_compacted_index(spark, sf_dir):
         ingest.FIELDED.autocompact(spark, f"{workdir}/index")
         return workdir
 
-    wd = cached_scalar(fm, sf_dir, "cdcfc_workdir", build)
+    wd = cached_scalar(sf_dir, "cdcfc_workdir", build)
     post = spark.read.parquet(f"{wd}/index/postings")
     oplog = spark.read.parquet(f"{wd}/index/oplog")
     return post, oplog

@@ -781,7 +781,6 @@ def graph_pagerank(spark, sf_dir):
         sf_dir,
         "graph_edges",
         lambda: graph_adjacency(rel)[0],
-        spark=spark,
         pinned=True,
     )
     nodes = cached_df(
@@ -790,17 +789,15 @@ def graph_pagerank(spark, sf_dir):
         lambda: e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
         .distinct(),
-        spark=spark,
         pinned=True,
     )
     out = cached_df(
         sf_dir,
         "graph_outdeg",
         lambda: e.groupBy("a").agg(F.count("*").cast("double").alias("deg")),
-        spark=spark,
         pinned=True,
     )
-    n = cached_scalar(nodes, sf_dir, "graph_n_nodes", lambda: nodes.count())
+    n = cached_scalar(sf_dir, "graph_n_nodes", lambda: nodes.count())
     return pagerank(rel, adjacency=(e, nodes, out), n_nodes=n)
 
 

@@ -113,17 +113,6 @@ def _key(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, str, str]:
     return (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
 
 
-def reset() -> None:
-    """Forget all substrate state (test isolation helper). On-disk
-    artifacts are session-temp directories, deleted by the atexit
-    hook (not by this — a live session may still hold readers)."""
-    _LOG_DIRS.clear()
-    _HORIZONS.clear()
-    _FAM_DIRS.clear()
-    _LOG_FAMILIES.clear()
-    _PURGE_FLOORS.clear()
-
-
 def physical_log(
     spark: SparkSession, sf_dir: str, log_name: str, log_builder
 ) -> DataFrame:

@@ -22,7 +22,7 @@ import os
 import tempfile
 import zipfile
 
-_SHIPPED: set[int] = set()
+from nucliadb_spark.cache import memo
 
 
 def _package_zip() -> str:
@@ -50,9 +50,4 @@ def _package_zip() -> str:
 
 def ensure_shipped(spark) -> None:
     """Idempotently register the package zip on this session's context."""
-    sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED:
-        return
-    sc.addPyFile(_package_zip())
-    _SHIPPED.add(key)
+    memo("shipped", "pyfiles", lambda: spark.sparkContext.addPyFile(_package_zip()))

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nucliadb_spark.cache import cached_df, memo
+
 TABLES = [
     "region",
     "nation",
@@ -75,30 +77,23 @@ _TEMPORAL_COLS = {
 }
 
 
-# (applicationId, sf_dir, name) -> reader frame. spark.read.parquet
-# builds a fresh InMemoryFileIndex per call — re-listing the table and
-# re-reading footers as a 1-task job during QUERY CONSTRUCTION (the
-# r14 baseline profile shows repeated "parquet at <unknown>" jobs in
-# nearly every query's construct phase). The reader frame is a plan
-# handle, not data: memoizing it per session removes the repeated
-# listing/footer work (guide §6 — file listing is a per-session cache
-# concern) without caching any rows. The testdata tables are
-# immutable inputs; anything the engine writes lives outside sf_dir.
-_READER_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    hit = _READER_MEMO.get(key)
-    if hit is not None:
-        return hit
-    if name in _TEMPORAL_COLS:
-        ensure_nanos_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in _TEMPORAL_COLS.get(name, ()):
-        df = normalize_ts(df, col)
-    _READER_MEMO[key] = df
-    return df
+    """The reader frame of a testdata table, memoized per session.
+    spark.read.parquet builds a fresh InMemoryFileIndex per call —
+    re-listing the table and re-reading footers as a 1-task job during
+    query construction. The reader frame is a plan handle, not data,
+    so memoizing it caches no rows; the testdata tables are immutable
+    inputs (anything the engine writes lives outside sf_dir)."""
+
+    def read() -> DataFrame:
+        if name in _TEMPORAL_COLS:
+            ensure_nanos_conf(spark)
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        for col in _TEMPORAL_COLS.get(name, ()):
+            df = normalize_ts(df, col)
+        return df
+
+    return memo("readers", (sf_dir, name), read)
 
 
 # ---------------------------------------------------------------------
@@ -434,15 +429,12 @@ def relations_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet table with row-group min-max pruning. Row order is an
     index property only — every consumer aggregates or orders its own
     output, so results are unchanged."""
-    from nucliadb_spark.cache import cached_df
-
     return cached_df(
         sf_dir,
         "relations",
         lambda: relations(spark, sf_dir)
         .repartitionByRange(32, "source_value")
         .sortWithinPartitions("source_value"),
-        spark=spark,
         pinned=True,
     )
 

@@ -42,26 +42,20 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nucliadb_spark.cache import cached_df, memo
 from nucliadb_spark.functions.text import tokenize
 from nucliadb_spark.operators import bm25
 
 
-# (applicationId, path) -> parquet schema for IMMUTABLE testdata
-# files. Each `spark.read.parquet(p).schema` call builds a fresh
-# InMemoryFileIndex and re-reads footers as a driver-visible job at
-# query-construction time (guide §6); the streaming seats pay it on
-# every invocation just to declare the readStream schema. Memoized
-# per session like sources.tpch._READER_MEMO; per-call staged arrival
-# dirs keep reading their own schema (unique paths, mutable content).
-_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
-
-
 def _stable_schema(spark: SparkSession, path: str):
-    key = (spark.sparkContext.applicationId, path)
-    hit = _SCHEMA_MEMO.get(key)
-    if hit is None:
-        hit = _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
-    return hit
+    """Parquet schema of an IMMUTABLE testdata file, memoized per
+    session. Each `spark.read.parquet(p).schema` call builds a fresh
+    InMemoryFileIndex and re-reads footers as a driver-visible job at
+    query-construction time; the streaming seats would pay it on every
+    invocation just to declare the readStream schema. Per-call staged
+    arrival dirs keep reading their own schema (unique paths, mutable
+    content)."""
+    return memo("schemas", path, lambda: spark.read.parquet(path).schema)
 
 
 def stage_arrival_dir(*files: str) -> str:
@@ -2331,7 +2325,6 @@ def stream_neardup_gate(
     arrivals-vs-base LSH exactly (the registered oracle)."""
     from pyspark.sql import functions as F
 
-    from nucliadb_spark.cache import cached_df
     from nucliadb_spark.functions.text import tokenize, word_shingles_from_tokens
     from nucliadb_spark.operators import dedup
     from nucliadb_spark.sources import tpch

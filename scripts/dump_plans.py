@@ -7,8 +7,11 @@ Every registered query whose name matches one of the shell-style
 globs (``fnmatch``) is built once against the test corpus
 (``NUCLIADB_SPARK_TEST_SF``, the same default as the test suite) and
 its ``explain("formatted")`` is written to ``plans/<tag>/<name>.txt``.
-Expression ids (``#N``), plan ids (``plan_id=N``), the corpus
-directory (``<sf_dir>``) and the random suffix of temp directories
+Expression ids (``#N``), plan ids (``plan_id=N``), the numeric
+suffix of higher-order-function lambda variables (``lambda x_N``,
+drawn from a process-wide counter, so it moves with every lambda
+column built earlier in the process), the corpus directory
+(``<sf_dir>``) and the random suffix of temp directories
 (``tempfile.mkdtemp``, 8 characters) are normalized, so dumps taken
 from two checkouts compare with a plain ``diff -r``.
 Seats are built in sorted name order, so session caches are in the
@@ -30,6 +33,7 @@ sys.path.insert(0, ROOT)
 _NORMALIZE = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"(lambda [A-Za-z]\w*?)_\d+#"), r"\1_N#"),
     (
         re.compile(re.escape(tempfile.gettempdir()) + r"/([^/\s\],]*)[a-z0-9_]{8}(?=[/\]\s,])"),
         r"<tmp>/\1XXXXXXXX",

@@ -7,10 +7,10 @@ without bound (VERDICT r9 hygiene item; the bound became bytes-based
 with pinning in r15). Eviction drops STORAGE only — results never
 change, the frame just recomputes."""
 
-from nucliadb_spark import cache
+from nucliadb_spark import api, cache
 
 
-def test_cache_byte_budget_lru_eviction_unpersists(spark, monkeypatch):
+def test_cache_byte_budget_lru_eviction_unpersists(spark, sf_dir, monkeypatch):
     cache.clear()
     cache.reset_stats()
     # deterministic sizing: every entry bills 100 bytes, budget 250 —
@@ -45,8 +45,28 @@ def test_cache_byte_budget_lru_eviction_unpersists(spark, monkeypatch):
     again = cache.cached_df("sf", "entry5", lambda: spark.range(99))
     assert again.count() == 10
 
+    # lookup before build: a hit never calls the builder
+    calls = []
+
+    def counted():
+        calls.append(1)
+        return spark.range(6, 16)
+
+    for _ in range(3):
+        cache.cached_df("sf", "entry6", counted)
+    assert len(calls) == 1
+
+    # one reset: clear() empties every region, the request-plan memo
+    # included, so a repeated request builds a new plan
+    req = lambda: api.FindRequest(  # noqa: E731 — fresh object each call
+        query="europe asia shipment", features=["keyword"], top_k=5
+    )
+    first = api.find_request(spark, sf_dir, req())
+    assert api.find_request(spark, sf_dir, req()) is first
     cache.clear()
     assert not cache._CACHE
+    assert api.find_request(spark, sf_dir, req()) is not first
+    cache.clear()
 
 
 def test_cache_pinned_entries_survive_eviction(spark, monkeypatch):
@@ -72,9 +92,7 @@ def test_cache_pinned_entries_survive_eviction(spark, monkeypatch):
     assert "asof2" in held  # the newcomer always survives
 
     # a later hit keeps (and can upgrade) pinning
-    cache.cached_df(
-        "sf", "live_index", lambda: spark.range(100, 120), spark=spark
-    )
+    cache.cached_df("sf", "live_index", lambda: spark.range(100, 120))
     key = (spark.sparkContext.applicationId, "sf", "live_index")
     assert cache._CACHE[key].pinned
 
@@ -85,3 +103,21 @@ def test_cache_reset_stats():
     cache.EVICTIONS = 7
     cache.reset_stats()
     assert cache.EVICTIONS == 0
+
+
+def test_app_keying_lives_in_the_session_store():
+    """Only the session store (cache.py) and the durable serving
+    substrate (serving.py) read the application id: every other
+    module keys its session state through cache.memo/cached_df."""
+    import pathlib
+
+    import nucliadb_spark
+
+    root = pathlib.Path(nucliadb_spark.__file__).parent
+    offenders = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if p.relative_to(root).as_posix() not in ("cache.py", "serving.py")
+        and "applicationId" in p.read_text()
+    )
+    assert offenders == []

@@ -3,9 +3,11 @@ legacy filters, reranker window — the planner rules working together
 in the real pipeline."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from nucliadb_spark import api
 from nucliadb_spark.operators import bm25
+from nucliadb_spark.operators.filters import Expr
 from nucliadb_spark.plans import planner
 from nucliadb_spark.sources import tpch
 
@@ -632,7 +634,7 @@ def test_asof_text_index_chains_from_nearest_cached_snapshot(spark, sf_dir):
     # smaller delta; assert the plan carries exactly that watermark
     priors = [
         int(m.group(1))
-        for n in cached_names(spark, sf_dir)
+        for n in cached_names(sf_dir)
         if (m := re.fullmatch(r"asof(\d+)_text_post", n)) and int(m.group(1)) < s2
     ]
     nearest = max(priors)
@@ -714,7 +716,7 @@ def test_asof_family_index_chains_from_nearest_cached_snapshot(spark, sf_dir):
     api.asof_family_text_index(spark, sf_dir, "/u/link", s1)  # seed
     nearest = max(
         int(m.group(1))
-        for n in cached_names(spark, sf_dir)
+        for n in cached_names(sf_dir)
         if (m := re.fullmatch(r"asof(\d+)_fu_link_post", n))
         and int(m.group(1)) < s2
     )
@@ -798,7 +800,7 @@ def test_asof_live_state_chains_for_every_family(spark, sf_dir):
         # tests/queries in the session may have cached one between
         nearest = max(
             int(m.group(1))
-            for n in cached_names(spark, sf_dir)
+            for n in cached_names(sf_dir)
             if (m := re.fullmatch(rf"asof(\d+)_{re.escape(fam)}", n))
             and int(m.group(1)) < s2
         )
@@ -1050,3 +1052,40 @@ def test_request_plan_memo_reuses_plan_not_results(spark, sf_dir):
     assert a.collect() == api._build_find_request(
         spark, sf_dir, req()
     ).collect()
+
+
+class _RidParity(Expr):
+    """A filter node that is not a dataclass. Every instance has the
+    same repr, the way two default (address-bearing) reprs collide
+    once a freed address is reused."""
+
+    def __init__(self, parity: int):
+        self.parity = parity
+
+    def to_column(self):
+        return F.col("rid") % 2 == self.parity
+
+    def to_sql(self) -> str:
+        return f"rid % 2 = {self.parity}"
+
+    def __repr__(self) -> str:
+        return "_RidParity()"
+
+
+def test_request_memo_keys_cannot_alias_equal_repr_filters(spark, sf_dir):
+    """Two requests whose filters print alike but select different
+    rows must not share a memoized plan."""
+    reqs = [
+        api.FindRequest(
+            query="europe asia shipment", top_k=5, filters=_RidParity(p)
+        )
+        for p in (0, 1)
+    ]
+    assert repr(reqs[0]) == repr(reqs[1])
+    got = []
+    for req in reqs:
+        rows = [(r.id, r.score) for r in api.find_request(spark, sf_dir, req).collect()]
+        fresh = api._build_find_request(spark, sf_dir, req).collect()
+        assert rows == [(r.id, r.score) for r in fresh]
+        got.append(rows)
+    assert got[0] and got[1] and got[0] != got[1]

@@ -256,3 +256,54 @@ def test_pq_and_rabitq_self_match_property(spark, seed, n):
     assert hits and hits[0].id == 3
     hits = ann.rabitq_1bit_labeled(emb, q, k=1, rerank_top=max(5, len(rows) // 2)).collect()
     assert hits and hits[0].id == 3
+
+
+def _find_requests():
+    """Dataclass-only FindRequests over a small value domain, so equal
+    and nearly-equal pairs are common."""
+    from nucliadb_spark.api import FindRequest
+    from nucliadb_spark.operators.filters import And, Facet, Not, Or
+
+    words = st.sampled_from(["a", "b", "a b", "'a'"])
+    weights = st.sampled_from([1, 1.0, 0.5, 0.0, -0.0, True])
+    trees = st.recursive(
+        st.builds(Facet, st.sampled_from(["/l/x", "/l/y"])),
+        lambda kids: st.one_of(
+            st.builds(And, st.lists(kids, min_size=1, max_size=2)),
+            st.builds(Or, st.lists(kids, min_size=1, max_size=2)),
+            st.builds(Not, kids),
+        ),
+        max_leaves=3,
+    )
+
+    def request(prequeries):
+        return st.builds(
+            FindRequest,
+            query=words,
+            features=st.lists(st.sampled_from(["keyword", "semantic", "graph"]), max_size=2),
+            top_k=st.sampled_from([5, 10]),
+            filters=st.none() | trees,
+            fusion_weights=st.none()
+            | st.dictionaries(st.sampled_from(["keyword", "semantic"]), weights, max_size=2),
+            prequeries=prequeries,
+        )
+
+    inner = request(st.none())
+    return request(st.none() | st.lists(st.tuples(inner, weights), max_size=2))
+
+
+@settings(max_examples=300, deadline=None)
+@given(_find_requests(), _find_requests())
+def test_request_key_equal_exactly_when_repr_equal(a, b):
+    """The plan-memo key keeps every hit the old repr key had and
+    adds no alias: equal keys iff equal reprs (types, list/tuple
+    order and dict insertion order included)."""
+    import copy
+
+    from nucliadb_spark.cache import request_key
+
+    ka, kb = request_key("sf", a), request_key("sf", b)
+    assert ka is not None and kb is not None
+    assert (ka == kb) == (repr(a) == repr(b))
+    assert hash(ka) == hash(request_key("sf", copy.deepcopy(a)))
+    assert ka == request_key("sf", copy.deepcopy(a))
