@@ -2,25 +2,37 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...}, "sf": ...}
+   "method": "min-of-n", "queries": {...}, "sf": ..., ...}
 
 Each query executes to completion (collect) so the timing covers the
 full DAG including shuffles and top-k merges. The session is warmed
-with one trivial action first so JVM startup isn't attributed to q1.
+with one trivial action first so JVM startup isn't attributed to q1,
+and the serving indexes are prebuilt before the first seat.
 
-Steal-robustness (r15, additions-only): this box suffers hypervisor
-CPU-steal waves invisible to loadavg (measured ~46% cumulative steal
-in r14; five same-binary runs spanned 77-291 s). Each query is now
-timed best-of-N (two timed runs after the untimed warm-up, a third
-only when the first two disagree by >1.5x — i.e. a wave hit one), and
-the JSON line additionally records:
-  - "steal_pct": %CPU stolen across the whole bench (from /proc/stat),
-  - "query_runs": every raw timed run per query (run 1 is the old
-    single-run methodology, kept for comparability),
-  - "query_steal_pct": %CPU stolen during each query's timed runs.
-The "queries"/"value" keys keep their meaning (seconds per seat /
-total), just computed from the per-query minimum, which is the only
-honest estimator under asymmetric contamination noise.
+Every seat (``time_seat``) runs its query once cold, then
+TIMED_RUNS = 2 times warm, plus a third warm run when the first two
+disagree by more than DISAGREE (a wave of hypervisor CPU steal,
+which loadavg does not show, hit one). A run is timed from the
+query call through ``collect()``; the construct part (building the
+DataFrame: planning, index and sidecar builds, Catalyst analysis) is
+timed separately. The keys per seat:
+  - "queries": the minimum warm run; "value" is their sum, and
+    "method": "min-of-n" marks it as such, so it is never compared
+    with a single-run total by mistake;
+  - "query_runs": every warm run, in order;
+  - "query_steal_pct": %CPU stolen during the warm runs ("steal_pct":
+    across the whole bench, from /proc/stat);
+  - "query_cold": the cold run: construct_s, wall_s, the Spark stage
+    metrics of its jobs (jobs, stages, tasks, task_cpu_ms, gc_ms,
+    deser_ms, shuffle read/write bytes, fetch_wait_ms) and the cache
+    evictions it caused;
+  - "query_layers": the warm runs: construct_s per run (next to
+    query_runs), stage metrics and evictions divided by the number of
+    warm runs.
+The cold and warm runs carry the job groups bench-<seat>-cold and
+bench-<seat>-warm; their stage metrics are summed from the in-process
+status store (perfbench.layers.StageMetrics) after the seat's last
+timed run, outside every timed interval.
 """
 
 from __future__ import annotations
@@ -32,15 +44,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from nucliadb_spark import registry  # noqa: E402
+from nucliadb_spark import cache, registry  # noqa: E402
 from nucliadb_spark.session import get_session  # noqa: E402
+from perfbench.layers import STAGE_FIELDS, StageMetrics  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # timed runs per query: min of N is the reported seat time. N=2 with
 # an adaptive third when the pair disagrees (a steal wave hit one).
-TIMED_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
+TIMED_RUNS = 2
 DISAGREE = 1.5  # ratio that triggers the extra run
+# the stage metrics of a layer record, zero when a run launched no job
+LAYER_FIELDS = ("jobs", "stages", *STAGE_FIELDS)
 
 
 def _read_steal() -> tuple[float, float]:
@@ -58,6 +73,66 @@ def _read_steal() -> tuple[float, float]:
 def _steal_pct(before: tuple[float, float], after: tuple[float, float]) -> float:
     ds, dt = after[0] - before[0], after[1] - before[1]
     return round(100.0 * ds / dt, 2) if dt > 0 else 0.0
+
+
+def _run(spark, sf_dir, query) -> tuple[float, float]:
+    """(construct_s, wall_s) of one request: build the DataFrame,
+    then collect it; wall_s covers both."""
+    t0 = time.perf_counter()
+    df = query(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.collect()
+    t2 = time.perf_counter()
+    return round(t1 - t0, 3), round(t2 - t0, 3)
+
+
+def time_seat(spark, sf_dir: str, name: str, query) -> dict:
+    """One seat: a cold run, then the timed warm runs, then their
+    layer records. Returns the seat's value for each per-seat key of
+    the JSON line (queries, query_runs, query_steal_pct, query_cold,
+    query_layers)."""
+    sc = spark.sparkContext
+    # the untimed warm-up (codegen compile, broadcast and sidecar
+    # builds) — matching the reference's pytest-benchmark warm-round
+    # methodology — is the cold record
+    sc.setJobGroup(f"bench-{name}-cold", f"bench-{name}-cold")
+    ev0 = cache.EVICTIONS
+    cold_construct, cold_wall = _run(spark, sf_dir, query)
+    ev1 = cache.EVICTIONS
+
+    sc.setJobGroup(f"bench-{name}-warm", f"bench-{name}-warm")
+    q0 = _read_steal()
+    runs = [_run(spark, sf_dir, query) for _ in range(TIMED_RUNS)]
+    walls = [w for _, w in runs]
+    if max(walls) > DISAGREE * max(min(walls), 1e-9):
+        runs.append(_run(spark, sf_dir, query))
+    constructs, walls = zip(*runs)
+    steal = _steal_pct(q0, _read_steal())
+    ev2 = cache.EVICTIONS
+    sc.setJobGroup("bench-idle", "bench-idle")
+
+    # stage metrics only now, outside every timed interval
+    stages = StageMetrics(spark)
+    cold = stages.collect(f"bench-{name}-cold")
+    warm = stages.collect(f"bench-{name}-warm")
+    n = len(runs)
+    return {
+        "queries": min(walls),
+        "query_runs": list(walls),
+        "query_steal_pct": steal,
+        "query_cold": {
+            "construct_s": cold_construct,
+            "wall_s": cold_wall,
+            **{k: round(cold[k], 3) for k in LAYER_FIELDS},
+            "evictions": ev1 - ev0,
+        },
+        "query_layers": {
+            "construct_s": list(constructs),
+            **{k: round(warm[k] / n, 3) for k in LAYER_FIELDS},
+            "evictions": round((ev2 - ev1) / n, 3),
+        },
+    }
+
 
 # Headline set: one per operator family (catalog SQL, filter compile,
 # BM25 exact + fuzzy, prefiltered hybrid, KNN exact + filtered +
@@ -246,48 +321,34 @@ def main() -> None:
     if "stream_windowed_counts" in queries:
         names.append("stream_windowed_counts")
 
-    timings: dict[str, float] = {}
-    runs: dict[str, list[float]] = {}
-    q_steal: dict[str, float] = {}
+    per_seat: dict[str, dict] = {
+        k: {} for k in ("queries", "query_runs", "query_steal_pct", "query_cold", "query_layers")
+    }
     errors: dict[str, str] = {}
     bench_steal0 = _read_steal()
     for name in names:
-        # one untimed warm-up run (codegen compile, broadcast build),
-        # then the measured runs — matching the reference's
-        # pytest-benchmark warm-round methodology. A failing query is
-        # recorded and skipped rather than sinking the whole bench
-        # (r2 lost its bench line to one testdata schema change).
+        # A failing query is recorded and skipped rather than sinking
+        # the whole bench (r2 lost its bench line to one testdata
+        # schema change).
         try:
-            queries[name](spark, SF_DIR).collect()
-            q0 = _read_steal()
-            samples: list[float] = []
-            for _ in range(max(TIMED_RUNS, 1)):
-                t0 = time.perf_counter()
-                queries[name](spark, SF_DIR).collect()
-                samples.append(round(time.perf_counter() - t0, 3))
-            if (
-                len(samples) >= 2
-                and max(samples) > DISAGREE * max(min(samples), 1e-9)
-            ):
-                t0 = time.perf_counter()
-                queries[name](spark, SF_DIR).collect()
-                samples.append(round(time.perf_counter() - t0, 3))
-            q_steal[name] = _steal_pct(q0, _read_steal())
-            runs[name] = samples
-            timings[name] = min(samples)
+            for key, val in time_seat(spark, SF_DIR, name, queries[name]).items():
+                per_seat[key][name] = val
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_query_wall_time",
-        "value": round(sum(timings.values()), 3),
+        "value": round(sum(per_seat["queries"].values()), 3),
         "unit": "sec",
-        "queries": timings,
+        "method": "min-of-n",
+        "queries": per_seat["queries"],
         "sf": float(sf) if sf.replace(".", "").isdigit() else SF_DIR,
         "steal_pct": _steal_pct(bench_steal0, _read_steal()),
-        "query_runs": runs,
-        "query_steal_pct": q_steal,
+        "query_runs": per_seat["query_runs"],
+        "query_steal_pct": per_seat["query_steal_pct"],
+        "query_cold": per_seat["query_cold"],
+        "query_layers": per_seat["query_layers"],
     }
     if errors:
         out["errors"] = errors

@@ -208,9 +208,10 @@ def multimodal_real_decode(spark, sf_dir):
 
     r14: an earlier optimization attempt repartitioned the (doc_id,
     text) input to defaultParallelism so the Python chain would use
-    all cores — measured SLOWER and reverted (quiet A/B,
-    scripts/r14_multimodal_probe.py: no-repartition 0.80-0.98 s warm
-    vs 1.9-2.0 s at 32 partitions vs 1.1-1.3 s at 8): at bench scale
+    all cores — measured SLOWER and reverted (quiet A/B in
+    OPTIMIZATION_r14.md, "multimodal_real_decode: forced repartition
+    reverted": no-repartition 0.80-0.98 s warm vs 1.9-2.0 s at 32
+    partitions vs 1.1-1.3 s at 8): at bench scale
     the corpus is 5000 tiny files, so the forced exchange plus
     per-task Arrow/worker overhead exceeds the decode work it
     parallelizes (guide §1.2 — per-task work only AFTER the job
