@@ -14,6 +14,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nucliadb_spark import serving
 from nucliadb_spark.cache import cached_df, cached_names, memo, request_key
 from nucliadb_spark.functions import frames, models
 from nucliadb_spark.operators import bm25, fusion, knn
@@ -251,182 +252,97 @@ class FindRequest:
 
 
 def asof_text_index(
-    spark: SparkSession, sf_dir: str, fields: DataFrame, as_of: int
+    spark: SparkSession, sf_dir: str, as_of: int, key: str | None = None
 ):
-    """(post, stats, corpus) — the text index AS OF a log seq,
-    session-cached per snapshot. The first request at a NEW snapshot
-    does not rebuild from scratch: if any EARLIER snapshot's postings
-    are cached, the nearest one advances with only the ops in
-    (S1, as_of] (ingest.advance_text_index — untouched rids keep
-    their postings via an rid anti-join, touched rids re-tokenize
-    from their final delta version). Measured at a 100× corpus the
-    advance costs 0.13× of the from-scratch build (SCALE.md r11
-    addendum), and a session touring snapshots pays
-    delta-proportional cold per seq. Falls back to the from-scratch
-    build when no earlier snapshot is cached (the first snapshot of
-    the session)."""
-    import re
+    """(post, stats, corpus) — the text index AS OF a log seq, over the
+    whole content corpus or, given a field ``key`` ("/u/link"), over
+    that one field family, session-cached per (snapshot, family). The
+    corpus is the family's durable as-of state (serving.state_as_of,
+    vacuum-aware: below-horizon raises); the postings chain at session
+    level: the first request at a NEW snapshot advances the nearest
+    cached earlier snapshot's postings (serving.nearest_prior) with
+    only the ops in (S1, as_of] (ingest.advance_text_index — untouched
+    rids keep their postings via an rid anti-join, touched rids
+    re-tokenize from their final delta version), and builds from the
+    state when no earlier snapshot is cached. Measured at a 100×
+    corpus the advance costs 0.13× of the from-scratch build (SCALE.md
+    r11 addendum). Within one field family the fielded op log is
+    rid-keyed (one field of that family per resource), so the advance
+    applies verbatim to the family-filtered state and log."""
+    if key is None:
+        family, log_name, tag = "content_text", "content_text", "text"
+        oplog = ingest.CONTENT
 
-    from nucliadb_spark import serving
+        def log_builder() -> DataFrame:
+            return ingest.cdc_log(tpch.fields(spark, sf_dir))
 
-    def log_builder() -> DataFrame:
-        return ingest.cdc_log(fields)
+    else:
+        family, log_name, oplog = "fielded_live", "fielded", ingest.FIELDED
+        tag = "f" + key.strip("/").replace("/", "_")
 
-    def corpus_at(seq: int) -> DataFrame:
-        # the content family's DURABLE as-of state on the physical
-        # substrate — the same artifact the text filter plane and the
-        # graph membership read, vacuum-aware (below-horizon raises)
-        return serving.state_as_of(
-            spark,
+        def log_builder() -> DataFrame:
+            return ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir))
+
+    def only(df: DataFrame) -> DataFrame:
+        # within one family a field's key never changes, so filtering
+        # the resolved state by field_key equals resolving the
+        # family-filtered log
+        return df if key is None else df.filter(F.col("field_key") == key)
+
+    def postings_at(seq: int) -> DataFrame:
+        return bm25.postings(only(serving.state_as_of(
+            spark, sf_dir, family, log_builder, oplog.resolve, oplog.keys, seq,
+            log_name=log_name,
+        )))
+
+    serving.check_horizon(spark, sf_dir, family, as_of)
+    advanced: dict[str, DataFrame] = {}
+
+    def build_post() -> DataFrame:
+        tail = f"_{tag}_post"
+        s1 = serving.nearest_prior(
+            [
+                int(s)
+                for n in cached_names(sf_dir)
+                if (s := n.removeprefix("asof").removesuffix(tail)).isdigit()
+            ],
+            as_of,
+            serving.horizon(spark, sf_dir, family),
+            serving.purge_floor(spark, sf_dir, log_name),
+        )
+        if s1 is None:
+            return postings_at(as_of)
+        prior_post = cached_df(
+            sf_dir, f"asof{s1}_{tag}_post", lambda: postings_at(s1)
+        )
+        prior_stats = cached_df(
             sf_dir,
-            "content_text",
-            log_builder,
-            ingest.CONTENT.resolve,
-            ingest.CONTENT.keys,
-            seq,
+            f"asof{s1}_{tag}_stats",
+            lambda: bm25.doc_stats_from_postings(prior_post),
         )
+        post2, stats2 = ingest.advance_text_index(
+            prior_post,
+            prior_stats,
+            # both ends of the delta prune on the physical log
+            only(serving.log_between(
+                spark, sf_dir, log_name, log_builder, s1, as_of
+            )),
+        )
+        # the advance derives stats incrementally too (kept rows
+        # verbatim + delta stats) — hand them to the stats sidecar
+        # instead of re-deriving from the advanced postings
+        advanced["stats"] = stats2
+        return post2
 
-    serving.check_horizon(spark, sf_dir, "content_text", as_of)
-    hzn = serving.horizon(spark, sf_dir, "content_text")
-    advanced: dict[str, DataFrame] = {}
-
-    def build_post() -> DataFrame:
-        priors = [
-            int(m.group(1))
-            for n in cached_names(sf_dir)
-            if (m := re.fullmatch(r"asof(\d+)_text_post", n))
-            and hzn <= int(m.group(1)) < as_of
-        ]
-        if priors:
-            s1 = max(priors)  # nearest earlier snapshot → smallest delta
-            prior_post = cached_df(
-                sf_dir,
-                f"asof{s1}_text_post",
-                lambda: bm25.postings(corpus_at(s1)),
-            )
-            prior_stats = cached_df(
-                sf_dir,
-                f"asof{s1}_text_stats",
-                lambda: bm25.doc_stats_from_postings(prior_post),
-            )
-            post2, stats2 = ingest.advance_text_index(
-                prior_post,
-                prior_stats,
-                # both ends of the delta prune on the physical log
-                serving.log_between(
-                    spark, sf_dir, "content_text", log_builder, s1, as_of
-                ),
-            )
-            # the advance derives stats incrementally too (kept rows
-            # verbatim + delta stats) — hand them to the stats sidecar
-            # instead of re-deriving from the advanced postings
-            advanced["stats"] = stats2
-            return post2
-        return bm25.postings(corpus_at(as_of))
-
-    post = cached_df(sf_dir, f"asof{as_of}_text_post", build_post)
+    post = cached_df(sf_dir, f"asof{as_of}_{tag}_post", build_post)
     stats = cached_df(
         sf_dir,
-        f"asof{as_of}_text_stats",
+        f"asof{as_of}_{tag}_stats",
         lambda: advanced.get("stats") or bm25.doc_stats_from_postings(post),
     )
     corpus = cached_df(
         sf_dir,
-        f"asof{as_of}_text_corpus",
-        lambda: bm25.corpus_stats(stats),
-    )
-    return post, stats, corpus
-
-
-def asof_family_text_index(
-    spark: SparkSession, sf_dir: str, key: str, as_of: int
-):
-    """(post, stats, corpus) for ONE field family AS OF a log seq —
-    the per-(snapshot, family) sidecars the scoped snapshot flagship
-    serves from, with the same chain-from-the-nearest-cached-snapshot
-    advance :func:`asof_text_index` gives the unscoped path. Within
-    one family the fielded op log is rid-keyed (one field of that
-    family per resource), so advance_text_index applies verbatim to
-    the family-filtered log: untouched resources keep their S1
-    family postings, touched ones re-tokenize from their final delta
-    version."""
-    import re
-
-    from nucliadb_spark import serving
-
-    slug = key.strip("/").replace("/", "_")
-
-    def log_builder() -> DataFrame:
-        return ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir))
-
-    def fam_at(seq: int) -> DataFrame:
-        # the fielded family's DURABLE as-of state (shared with the
-        # scope-resolution path — same (family, seq) artifact),
-        # filtered to this field family. Within one family a field's
-        # key never changes, so filtering the resolved state by
-        # field_key equals resolving the family-filtered log.
-        return (
-            serving.state_as_of(
-                spark,
-                sf_dir,
-                "fielded_live",
-                log_builder,
-                ingest.FIELDED.resolve,
-                ingest.FIELDED.keys,
-                seq,
-                log_name="fielded",
-            )
-            .filter(F.col("field_key") == key)
-            .select("rid", "text")
-        )
-
-    serving.check_horizon(spark, sf_dir, "fielded_live", as_of)
-    hzn = serving.horizon(spark, sf_dir, "fielded_live")
-
-    def fam_delta(lo: int, hi: int) -> DataFrame:
-        return serving.log_between(
-            spark, sf_dir, "fielded", log_builder, lo, hi
-        ).filter(F.col("field_key") == key)
-
-    advanced: dict[str, DataFrame] = {}
-
-    def build_post() -> DataFrame:
-        pat = re.compile(rf"asof(\d+)_f{re.escape(slug)}_post")
-        priors = [
-            int(m.group(1))
-            for n in cached_names(sf_dir)
-            if (m := pat.fullmatch(n)) and hzn <= int(m.group(1)) < as_of
-        ]
-        if priors:
-            s1 = max(priors)
-            prior_post = cached_df(
-                sf_dir,
-                f"asof{s1}_f{slug}_post",
-                lambda: bm25.postings(fam_at(s1)),
-            )
-            prior_stats = cached_df(
-                sf_dir,
-                f"asof{s1}_f{slug}_stats",
-                lambda: bm25.doc_stats_from_postings(prior_post),
-            )
-            post2, stats2 = ingest.advance_text_index(
-                prior_post,
-                prior_stats,
-                fam_delta(s1, as_of),
-            )
-            advanced["stats"] = stats2
-            return post2
-        return bm25.postings(fam_at(as_of))
-
-    post = cached_df(sf_dir, f"asof{as_of}_f{slug}_post", build_post)
-    stats = cached_df(
-        sf_dir,
-        f"asof{as_of}_f{slug}_stats",
-        lambda: advanced.get("stats") or bm25.doc_stats_from_postings(post),
-    )
-    corpus = cached_df(
-        sf_dir,
-        f"asof{as_of}_f{slug}_corpus",
+        f"asof{as_of}_{tag}_corpus",
         lambda: bm25.corpus_stats(stats),
     )
     return post, stats, corpus
@@ -455,63 +371,26 @@ def asof_live_state(
     keys: tuple[str, ...],
     log_name: str | None = None,
 ) -> DataFrame:
-    """A CDC family's live state AS OF a log seq, session-cached as
-    ``asof{seq}_{family}`` and CHAINED like the text index: the first
-    read at a NEW snapshot advances the nearest cached earlier
-    snapshot with only the delta ops (ingest.advance_live_state —
-    prior-state anti-join on touched keys ∪ the delta's own
-    latest-op-wins resolution) instead of re-resolving the full log.
-    This extends the delta-proportional cold-cost contract from the
-    text family to EVERY latest-op-wins plane the find API reads at a
-    snapshot — vectors, relations, labels, the fielded corpus — so a
-    session touring snapshots pays full-log cost once, not once per
-    (seq, family).
-
-    r14: the cold path serves from the PHYSICAL substrate
-    (nucliadb_spark.serving): the family's op log is seq-bucket-
-    partitioned parquet (every cut is partition pruning), the state
-    resolves vacuum-aware from (base at the horizon, retained
-    partitions) via asof_from_vacuum, and the result is the family's
-    durable per-snapshot serving artifact. Reads below the family's
-    vacuum horizon raise the pinned-snapshot error — surfaced through
-    FindRequest because every as-of entry point routes here.
-    `log_name` names the physical log when families share one (the
-    embedding sidecar reads the content log)."""
-    import re
-
-    from nucliadb_spark import serving
-
-    lname = log_name or family
+    """A CDC family's live state AS OF a log seq: the family's durable
+    serving state (serving.state_as_of — a new snapshot advances the
+    nearest earlier durable state with only the delta ops, so a
+    session touring snapshots pays full-log cost once per family, not
+    once per seq), session-cached as ``asof{seq}_{family}``. The
+    horizon check runs before the cache lookup, so a cached state
+    never answers a seq below the family's vacuum horizon — the
+    pinned-snapshot error surfaces through FindRequest because every
+    as-of entry point routes here. `log_name` names the physical log
+    when families share one (the embedding sidecar reads the content
+    log)."""
     serving.check_horizon(spark, sf_dir, family, as_of)
-    pat = re.compile(rf"asof(\d+)_{re.escape(family)}")
-
-    def state_at(seq: int) -> DataFrame:
-        return serving.state_as_of(
-            spark, sf_dir, family, log_builder, resolve, keys, seq,
-            log_name=lname,
-        )
-
-    def build() -> DataFrame:
-        hzn = serving.horizon(spark, sf_dir, family)
-        priors = [
-            int(m.group(1))
-            for n in cached_names(sf_dir)
-            if (m := pat.fullmatch(n)) and hzn <= int(m.group(1)) < as_of
-        ]
-        if priors:
-            s1 = max(priors)  # nearest earlier snapshot → smallest delta
-            prior = cached_df(sf_dir, f"asof{s1}_{family}", lambda: state_at(s1))
-            return ingest.advance_live_state(
-                prior,
-                serving.log_between(
-                    spark, sf_dir, lname, log_builder, s1, as_of
-                ),
-                keys,
-                resolve,
-            )
-        return state_at(as_of)
-
-    return cached_df(sf_dir, f"asof{as_of}_{family}", build)
+    return cached_df(
+        sf_dir,
+        f"asof{as_of}_{family}",
+        lambda: serving.state_as_of(
+            spark, sf_dir, family, log_builder, resolve, keys, as_of,
+            log_name=log_name,
+        ),
+    )
 
 
 def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFrame:
@@ -520,13 +399,23 @@ def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFram
     Building a flagship request's plan costs 50-200 ms of pure driver
     work (plane classification, scope resolution, leg assembly,
     analysis), so the built plan handle is memoized per session on the
-    request's value (``cache.request_key``); a repeat re-executes it."""
-    return memo(
+    request's value (``cache.request_key``); a repeat re-executes it.
+    The handle is stored with the vacuum-horizon checks its build made
+    (nested prequery builds included), and every hit repeats them: a
+    vacuum after the first request must still fail a repeat below its
+    horizon. The checks read driver-side state only, so a hit runs no
+    Spark job."""
+    checks, df = memo(
         "find_request",
         request_key(sf_dir, req),
-        lambda: _build_find_request(spark, sf_dir, req),
+        lambda: serving.recorded_checks(
+            lambda: _build_find_request(spark, sf_dir, req)
+        ),
         bound=256,
     )
+    for check_dir, family, seq in checks:
+        serving.check_horizon(spark, check_dir, family, seq)
+    return df
 
 
 def _build_find_request(
@@ -790,15 +679,13 @@ def _build_find_request(
         # serve from built sidecars exactly like the live fielded
         # path, and the FIRST request at a new snapshot chains from
         # the nearest cached earlier snapshot of the same family
-        # (asof_family_text_index advances it with only the family's
-        # delta ops). Multi-family scopes sum per-field scores per
+        # (asof_text_index advances it with only the family's delta
+        # ops). Multi-family scopes sum per-field scores per
         # resource (tantivy's multi-field Occur::Should), each family
         # ranking against its OWN as-of stats.
         legs = []
         for key in scoped_keys:
-            post, stats, corpus = asof_family_text_index(
-                spark, sf_dir, key, as_of
-            )
+            post, stats, corpus = asof_text_index(spark, sf_dir, as_of, key)
             legs.append(
                 bm25.bm25_search(
                     None,
@@ -838,7 +725,7 @@ def _build_find_request(
         # advances it with only the delta ops), so a session touring
         # snapshots pays delta-proportional cold cost, not a full
         # rebuild per seq.
-        post, stats, corpus = asof_text_index(spark, sf_dir, fields, as_of)
+        post, stats, corpus = asof_text_index(spark, sf_dir, as_of)
         sources["keyword"] = bm25.bm25_search(
             None,
             req.query,
@@ -1000,7 +887,7 @@ def _build_find_request(
         else:
             if as_of is not None:
                 # the vector set AS OF the same seq: a new snapshot
-                # chains from the nearest cached one (delta advance),
+                # chains from the nearest durable one (delta advance),
                 # the first pays the seq-pruned scan + the same max_by
                 # the live vector CDC read pays
                 vectors = asof_live_state(
@@ -1047,7 +934,7 @@ def _build_find_request(
             # values. Both served through asof_live_state like every
             # other as-of plane: repeated requests at the snapshot
             # read the cached sidecars, a new snapshot chains from
-            # the nearest cached one — full-log cost once per
+            # the nearest durable one — full-log cost once per
             # (seq, family), not once per request
             # membership rides the SAME 'content_text' family the
             # text filter plane resolves — one content-log resolution
@@ -1104,7 +991,7 @@ def _build_find_request(
             if as_of is not None:
                 # the relation set AS OF the same seq — edge-keyed
                 # max_by over the seq-cut edge op log; a new snapshot
-                # chains from the nearest cached one (delta advance)
+                # chains from the nearest durable one (delta advance)
                 rel = asof_live_state(
                     spark,
                     sf_dir,

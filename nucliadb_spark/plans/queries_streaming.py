@@ -1532,24 +1532,27 @@ def search_as_of_incremental(spark, sf_dir):
 )
 def knn_as_of_incremental(spark, sf_dir):
     """The live-state advance generalized past text: snapshot S2's
-    VECTOR set derives FROM snapshot S1's cached set plus only the
-    ops in (S1, S2] (ingest.advance_live_state — untouched rids keep
-    their S1 rows via a key anti-join, touched rids resolve
-    latest-op-wins over the delta alone). search_as_of_incremental
-    proved the shape for the text index, where re-tokenization
-    dominates; here the win is the log itself — a from-scratch S2
-    read scans and shuffles EVERY version ever written, the advance
-    scans the already-materialized S1 state plus a seq-pruned delta
-    (partition pruning on the seq-ranged op log at 100 TB). The find
-    API's as-of legs chain this way automatically for all four
-    latest-op-wins families (api.asof_live_state: vectors, relations,
-    labels, fielded corpus); this query walks the vector path
-    end-to-end: S1 = base inserts only, the delta carries both the
-    re-embed (rid%6) and delete (rid%9) waves, and KNN at S2 over the
-    advanced set must equal KNN over the from-scratch S2 resolution
-    (the oracle). Same advance contract as the reference's indexer —
-    new segment + deletion list over prior segments,
-    nidx/src/indexer.rs:121-253 — applied to snapshot derivation."""
+    VECTOR set derives FROM snapshot S1's durable state artifact plus
+    only the ops in (S1, S2] (serving.state_as_of chains through
+    ingest.advance_live_state — untouched rids keep their S1 rows via
+    a key anti-join, touched rids resolve latest-op-wins over the
+    delta alone — and writes S2 as its own artifact).
+    search_as_of_incremental proved the shape for the text index,
+    where re-tokenization dominates; here the win is the log itself —
+    a from-scratch S2 read scans and shuffles EVERY version ever
+    written, the advance scans the S1 artifact plus a seq-pruned delta
+    (partition pruning on the seq-ranged op log at 100 TB). Every
+    as-of leg of the find API chains this way (api.asof_live_state is
+    a session-cache wrapper over the durable chain); this query walks
+    the vector path end-to-end: S1 = base inserts only, the delta
+    carries both the re-embed (rid%6) and delete (rid%9) waves, and
+    KNN at S2 over the advanced set must equal KNN over the
+    from-scratch S2 resolution (the oracle). The plan reads S2's
+    artifact back, so it shows the advance only in the artifact's
+    provenance, not in its own shape. Same advance contract as the
+    reference's indexer — new segment + deletion list over prior
+    segments, nidx/src/indexer.rs:121-253 — applied to snapshot
+    derivation."""
     from nucliadb_spark import api
     from pyspark.sql import functions as F
 
@@ -1795,9 +1798,7 @@ def suggest_as_of(spark, sf_dir):
     from nucliadb_spark import api
     from nucliadb_spark.cache import cached_df
 
-    post, stats, corpus = api.asof_text_index(
-        spark, sf_dir, tpch.fields(spark, sf_dir), _AS_OF_SEQ
-    )
+    post, stats, corpus = api.asof_text_index(spark, sf_dir, _AS_OF_SEQ)
     vocab = cached_df(
         sf_dir,
         f"asof{_AS_OF_SEQ}_text_vocab",
@@ -1843,9 +1844,7 @@ def suggest_as_of_filtered(spark, sf_dir):
     from nucliadb_spark import api
     from nucliadb_spark.cache import cached_df
 
-    post, stats, corpus = api.asof_text_index(
-        spark, sf_dir, tpch.fields(spark, sf_dir), _AS_OF_SEQ
-    )
+    post, stats, corpus = api.asof_text_index(spark, sf_dir, _AS_OF_SEQ)
     vocab = cached_df(
         sf_dir,
         f"asof{_AS_OF_SEQ}_text_vocab",
@@ -2427,7 +2426,7 @@ def find_secured_as_of_prelock(spark, sf_dir):
     pins both directions at the driver level (tests pin them locally,
     tests/test_meta_plane.py). Same serving shape: one rid-keyed
     max_by over the seq-pruned metadata log, session-cached per
-    snapshot, chained from the nearest cached earlier snapshot."""
+    snapshot, chained from the nearest earlier durable state."""
     return _asof_filtered_find(
         spark,
         sf_dir,

@@ -21,10 +21,11 @@ history:
   artifact, never the history that produced it. This is what makes
   PHYSICAL vacuum safe: nothing re-derives a state from partitions
   the vacuum may have deleted. A NEW snapshot chains: it advances
-  from the nearest existing artifact with only the (prior, seq]
-  pruned delta (the durable twin of the session-cache chained
-  advance), so a sequence of snapshot reads is delta-proportional,
-  never repeatedly horizon-proportional.
+  from the nearest existing artifact (:func:`nearest_prior`) with
+  only the (prior, seq] pruned delta, so a sequence of snapshot reads
+  is delta-proportional, never repeatedly horizon-proportional. This
+  is the engine's only live-state chain: ``api.asof_live_state`` is
+  a session-cache wrapper over it.
 - **Vacuum**: :func:`vacuum_family` folds a family's history at or
   below a horizon into a durable base state (the
   :class:`~nucliadb_spark.streaming.ingest.VacuumedLog` algebra,
@@ -34,7 +35,8 @@ history:
   :func:`~nucliadb_spark.streaming.ingest.asof_from_vacuum`; reads
   below the horizon raise the pinned-snapshot error — surfaced
   through ``FindRequest`` because ``api.asof_live_state`` /
-  ``api.asof_text_index`` route here (tests/test_serving_substrate.py
+  ``api.asof_text_index`` route here, and a memoized plan re-runs the
+  horizon checks its build made (tests/test_serving_substrate.py
   pins both).
 
 Reference anchors: segment purge nidx/src/scheduler/purge_tasks.rs:
@@ -61,6 +63,7 @@ import atexit
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from nucliadb_spark.streaming import ingest
 
@@ -72,6 +75,10 @@ NO_HORIZON = -1
 
 # (app_id, sf_dir, log_name) -> materialized log directory
 _LOG_DIRS: dict[tuple[str, str, str], str] = {}
+# (app_id, sf_dir, log_name) -> the log's schema, recorded when it is
+# first materialized or drained: a purge can delete every partition,
+# and a read that inferred the schema from the files would then fail
+_LOG_SCHEMAS: dict[tuple[str, str, str], StructType] = {}
 # (app_id, sf_dir, family) -> vacuum horizon (NO_HORIZON = none)
 _HORIZONS: dict[tuple[str, str, str], int] = {}
 # (app_id, sf_dir, family) -> family state/base directory
@@ -84,6 +91,10 @@ _LOG_FAMILIES: dict[tuple[str, str, str], set[str]] = {}
 # no base covering the deleted range — resolving it from the gappy
 # log would be silently wrong, so computation guards on this floor.
 _PURGE_FLOORS: dict[tuple[str, str, str], int] = {}
+# one set of (sf_dir, family, seq) per plan build in progress: every
+# horizon check lands in each enclosing build's set (see
+# recorded_checks), so a memoized plan can repeat its checks on a hit
+_CHECKS: list[set[tuple[str, str, int]]] = []
 
 
 # every temp dir this module (or a substrate consumer, via
@@ -138,7 +149,17 @@ def physical_log(
             f"{d}/log"
         )
         _LOG_DIRS[key] = d
-    return spark.read.parquet(f"{d}/log")
+    return _read_log(spark, key)
+
+
+def _read_log(spark: SparkSession, key: tuple[str, str, str]) -> DataFrame:
+    """The materialized log read with its recorded schema (recorded
+    by the first read, while partitions exist), so a log the purge
+    emptied reads as an empty frame."""
+    log_dir = f"{_LOG_DIRS[key]}/log"
+    if key not in _LOG_SCHEMAS:
+        _LOG_SCHEMAS[key] = spark.read.parquet(log_dir).schema
+    return spark.read.schema(_LOG_SCHEMAS[key]).parquet(log_dir)
 
 
 def stream_maintained_log(
@@ -184,7 +205,7 @@ def stream_maintained_log(
     if fresh:
         d = tracked_mkdtemp(prefix=f"serving_{log_name}_")
     log_dir = f"{d}/log"
-    floor = _PURGE_FLOORS.get(key, NO_HORIZON)
+    floor = purge_floor(spark, sf_dir, log_name)
     try:
         schema = spark.read.parquet(arrival_dir).schema
         stream = spark.readStream.schema(schema).parquet(arrival_dir)
@@ -214,7 +235,7 @@ def stream_maintained_log(
             _LOG_DIRS[key] = d
         raise
     _LOG_DIRS[key] = d
-    return spark.read.parquet(log_dir)
+    return _read_log(spark, key)
 
 
 def log_upto(
@@ -252,13 +273,45 @@ def horizon(spark: SparkSession, sf_dir: str, family: str) -> int:
     return _HORIZONS.get(_key(spark, sf_dir, family), NO_HORIZON)
 
 
+def purge_floor(spark: SparkSession, sf_dir: str, log_name: str) -> int:
+    return _PURGE_FLOORS.get(_key(spark, sf_dir, log_name), NO_HORIZON)
+
+
+def nearest_prior(
+    seqs: list[int], seq: int, horizon: int, purge_floor: int
+) -> int | None:
+    """The snapshot a NEW read at ``seq`` chains from: the nearest of
+    ``seqs`` strictly below it (the smallest delta) that sits at or
+    above both the family's vacuum horizon and its log's purge floor,
+    so the (prior, seq] delta reads only partitions the purge left in
+    place (deleted partitions all end at or below the floor). None
+    when no snapshot qualifies: build without a chain."""
+    lo = max(horizon, purge_floor)
+    return max((s for s in seqs if lo <= s < seq), default=None)
+
+
+def recorded_checks(build):
+    """``(checks, build())``: the ``(sf_dir, family, seq)`` horizon
+    checks the build made, nested builds included."""
+    checks: set[tuple[str, str, int]] = set()
+    _CHECKS.append(checks)
+    try:
+        out = build()
+    finally:
+        _CHECKS.pop()
+    return frozenset(checks), out
+
+
 def check_horizon(
     spark: SparkSession, sf_dir: str, family: str, seq: int
 ) -> None:
     """Raise the pinned-snapshot error for a read below the family's
     vacuum horizon — the same contract asof_from_vacuum enforces,
     checked up-front so even a session-cached serving path cannot
-    answer a seq whose history the vacuum discarded."""
+    answer a seq whose history the vacuum discarded. Driver-side
+    state only: no Spark job."""
+    for checks in _CHECKS:
+        checks.add((sf_dir, family, seq))
     h = horizon(spark, sf_dir, family)
     if seq < h:
         raise ValueError(
@@ -282,7 +335,7 @@ def _check_purge_floor(
     already-materialized state artifact is always safe (it was
     written from pre-purge data); only log-reading computation
     guards here."""
-    floor = _PURGE_FLOORS.get(_key(spark, sf_dir, log_name), NO_HORIZON)
+    floor = purge_floor(spark, sf_dir, log_name)
     if horizon(spark, sf_dir, family) < floor:
         raise ValueError(
             f"log '{log_name}' was physically purged up to seq {floor} "
@@ -318,21 +371,15 @@ def _base_state(
     )
 
 
-def _nearest_state(spark: SparkSession, sf_dir: str, family: str, seq: int):
-    """Seq of the family's nearest durable state artifact strictly
-    below ``seq`` — the chained-advance starting point. Only complete
-    artifacts (``_SUCCESS``) count."""
-    d = _fam_dir(spark, sf_dir, family)
-    best = None
-    for name in os.listdir(d):
-        if not name.startswith("state_s"):
-            continue
-        if not os.path.exists(os.path.join(d, name, "_SUCCESS")):
-            continue
-        s = int(name[len("state_s"):])
-        if s < seq and (best is None or s > best):
-            best = s
-    return best
+def _state_seqs(d: str) -> list[int]:
+    """Seqs of the family's complete (``_SUCCESS``) durable state
+    artifacts in its directory ``d``."""
+    return [
+        int(name[len("state_s"):])
+        for name in os.listdir(d)
+        if name.startswith("state_s")
+        and os.path.exists(os.path.join(d, name, "_SUCCESS"))
+    ]
 
 
 def state_as_of(
@@ -347,20 +394,16 @@ def state_as_of(
 ) -> DataFrame:
     """A family's live state AS OF ``seq``, served from the physical
     substrate. A NEW snapshot never re-resolves history it already
-    folded: it advances from the family's NEAREST durable state at or
-    above the vacuum horizon and the log's purge floor (the durable
-    twin of the session-cache chaining graded since r12 —
-    :func:`ingest.advance_live_state` over only the (prior, seq]
-    partition-pruned delta), falling back to (base at the vacuum
-    horizon) + retained ops via :func:`ingest.asof_from_vacuum` when
-    no artifact can chain. The chain start must sit at or above the
-    purge floor so the delta reads only partitions the purge left in
-    place (deleted partitions all end at or below the floor). The
-    result
-    is MATERIALIZED as the family's durable per-snapshot serving
-    artifact and read back, so later reads (and cache-evicted plan
-    recomputes) never touch the history again — the property that
-    makes physical vacuum safe."""
+    folded: it advances from the family's nearest durable state
+    (:func:`nearest_prior`, at or above the vacuum horizon and the
+    log's purge floor) with :func:`ingest.advance_live_state` over
+    only the (prior, seq] partition-pruned delta, falling back to
+    (base at the vacuum horizon) + retained ops via
+    :func:`ingest.asof_from_vacuum` when no artifact can chain. The
+    result is MATERIALIZED as the family's durable per-snapshot
+    serving artifact and read back, so later reads (and cache-evicted
+    plan recomputes) never touch the history again — the property
+    that makes physical vacuum safe."""
     log_name = log_name or family
     check_horizon(spark, sf_dir, family, seq)
     _LOG_FAMILIES.setdefault(_key(spark, sf_dir, log_name), set()).add(family)
@@ -368,12 +411,11 @@ def state_as_of(
     state_path = os.path.join(d, f"state_s{seq}")
     if not os.path.exists(os.path.join(state_path, "_SUCCESS")):
         h = horizon(spark, sf_dir, family)
-        floor = _PURGE_FLOORS.get(_key(spark, sf_dir, log_name), NO_HORIZON)
-        prior_seq = _nearest_state(spark, sf_dir, family, seq)
-        if prior_seq is not None and prior_seq >= max(h, floor):
-            # durable chained advance: prior state + the pruned delta.
-            # Deleted partitions all end at or below the floor <=
-            # prior_seq, and the delta reads only seqs above it.
+        prior_seq = nearest_prior(
+            _state_seqs(d), seq, h, purge_floor(spark, sf_dir, log_name)
+        )
+        if prior_seq is not None:
+            # durable chained advance: prior state + the pruned delta
             prior = spark.read.parquet(
                 os.path.join(d, f"state_s{prior_seq}")
             )

@@ -627,7 +627,7 @@ def test_asof_text_index_chains_from_nearest_cached_snapshot(spark, sf_dir):
 
     fields = tpch.fields(spark, sf_dir)
     s1, s2 = 800_000, 1_200_000
-    api.asof_text_index(spark, sf_dir, fields, s1)  # seed the chain
+    api.asof_text_index(spark, sf_dir, s1)  # seed the chain
     # the chain picks the NEAREST cached earlier snapshot — other
     # tests in the session may have cached one between s1 and s2
     # (e.g. the mid-wave keyword query's 1,000,030), which is an even
@@ -639,7 +639,7 @@ def test_asof_text_index_chains_from_nearest_cached_snapshot(spark, sf_dir):
     ]
     nearest = max(priors)
     assert nearest >= s1  # the seed guarantees at least one prior
-    post2, stats2, _ = api.asof_text_index(spark, sf_dir, fields, s2)
+    post2, stats2, _ = api.asof_text_index(spark, sf_dir, s2)
     # the advance engaged: the S2 plan carries the nearest watermark
     analyzed = post2._jdf.queryExecution().analyzed().toString()
     assert str(nearest) in analyzed, analyzed[:1500]
@@ -713,14 +713,14 @@ def test_asof_family_index_chains_from_nearest_cached_snapshot(spark, sf_dir):
     from nucliadb_spark.cache import cached_names
 
     s1, s2 = 900_000, 1_300_000
-    api.asof_family_text_index(spark, sf_dir, "/u/link", s1)  # seed
+    api.asof_text_index(spark, sf_dir, s1, "/u/link")  # seed
     nearest = max(
         int(m.group(1))
         for n in cached_names(sf_dir)
         if (m := re.fullmatch(r"asof(\d+)_fu_link_post", n))
         and int(m.group(1)) < s2
     )
-    post2, _, _ = api.asof_family_text_index(spark, sf_dir, "/u/link", s2)
+    post2, _, _ = api.asof_text_index(spark, sf_dir, s2, "/u/link")
     analyzed = post2._jdf.queryExecution().analyzed().toString()
     assert str(nearest) in analyzed, analyzed[:1500]
     flog = ingest.cdc_field_log(tpch.fields_multi(spark, sf_dir)).filter(
@@ -737,14 +737,18 @@ def test_asof_family_index_chains_from_nearest_cached_snapshot(spark, sf_dir):
 
 
 @pytest.mark.slow  # r15 slow tier: multi-cut as-of behavior sweep
-def test_asof_live_state_chains_for_every_family(spark, sf_dir):
+def test_asof_live_state_chains_for_every_family(spark, sf_dir, monkeypatch):
     """api.asof_live_state: the vector/relation/label/fielded live
-    states chain from the nearest cached earlier snapshot (the plan
-    carries the S1 watermark) and equal the from-scratch seq-cut
-    resolution exactly — the text-index advance contract extended to
-    every latest-op-wins plane the find API reads at a snapshot."""
+    states are durable per-snapshot artifacts, a new snapshot advances
+    the nearest earlier one (exactly one ingest.advance_live_state),
+    and the result equals the from-scratch seq-cut resolution exactly
+    — the text-index advance contract extended to every
+    latest-op-wins plane the find API reads at a snapshot."""
+    import os
+
     from pyspark.sql import functions as F
 
+    from nucliadb_spark import serving
     from nucliadb_spark.functions import models
     from nucliadb_spark.streaming import ingest
 
@@ -787,28 +791,29 @@ def test_asof_live_state_chains_for_every_family(spark, sf_dir):
             ingest.META.keys,
         ),
     }
-    import re
-
-    from nucliadb_spark.cache import cached_names
-
     s1, s2 = 850_000, 1_250_000
+    real_advance = ingest.advance_live_state
     for fam, (log_builder, resolve, keys) in fams.items():
         api.asof_live_state(
             spark, sf_dir, fam, s1, log_builder, resolve, keys
         )  # seed the chain
-        # the chain picks the NEAREST cached earlier snapshot; other
-        # tests/queries in the session may have cached one between
-        nearest = max(
-            int(m.group(1))
-            for n in cached_names(sf_dir)
-            if (m := re.fullmatch(rf"asof(\d+)_{re.escape(fam)}", n))
-            and int(m.group(1)) < s2
-        )
+        advances = []
+
+        def counting_advance(*a, **kw):
+            advances.append(a)
+            return real_advance(*a, **kw)
+
+        monkeypatch.setattr(ingest, "advance_live_state", counting_advance)
         state2 = api.asof_live_state(
             spark, sf_dir, fam, s2, log_builder, resolve, keys
         )
-        analyzed = state2._jdf.queryExecution().analyzed().toString()
-        assert str(nearest) in analyzed, (fam, analyzed[:1500])
+        monkeypatch.undo()
+        assert len(advances) == 1, fam
+        d = serving._FAM_DIRS[serving._key(spark, sf_dir, fam)]
+        for s in (s1, s2):
+            assert os.path.exists(
+                os.path.join(d, f"state_s{s}", "_SUCCESS")
+            ), (fam, s)
         scratch = resolve(log_builder().filter(F.col("seq") <= s2))
         assert {tuple(map(str, r)) for r in state2.collect()} == {
             tuple(map(str, r)) for r in scratch.collect()

@@ -25,13 +25,24 @@ from nucliadb_spark.streaming import ingest
 H = 499_999  # folds the whole insert wave (rids < 250k)
 
 
-@pytest.fixture(scope="module")
-def iso_dir(tmp_path_factory, sf_dir):
-    d = tmp_path_factory.mktemp("iso_sf")
+def _iso_copy(tmp_path_factory, sf_dir, name):
+    d = tmp_path_factory.mktemp(name)
     for f in os.listdir(sf_dir):
         if f.endswith(".parquet"):
             shutil.copy(os.path.join(sf_dir, f), os.path.join(str(d), f))
     return str(d)
+
+
+@pytest.fixture(scope="module")
+def iso_dir(tmp_path_factory, sf_dir):
+    return _iso_copy(tmp_path_factory, sf_dir, "iso_sf")
+
+
+@pytest.fixture(scope="module")
+def fresh_dir(tmp_path_factory, sf_dir):
+    """A second isolated copy for the memo and full-purge lifecycle at
+    the end of the file: iso_dir's late family blocks later purges."""
+    return _iso_copy(tmp_path_factory, sf_dir, "fresh_sf")
 
 
 def _content(spark, sf):
@@ -422,3 +433,89 @@ def test_stream_log_vacuum_purge_and_late_arrival_guard(spark, tmp_path):
     assert _rows(live) == [
         (1, "alpha revised"), (2, "beta two"), (3, "gamma three")
     ]
+
+
+# --- memoized plans and fully purged logs ---------------------------------
+
+_MEMO_REQ = api.FindRequest(
+    query="refreshed revision stream",
+    features=["keyword"],
+    top_k=5,
+    as_of=1_000_030,
+)
+
+
+def _vacuum_content(spark, sf, h):
+    """Fold both content-log families to ``h`` and purge the log."""
+    lb, res = _content(spark, sf)
+    serving.vacuum_family(
+        spark, sf, "content_text", lb, res, ingest.CONTENT.keys, h
+    )
+    serving.vacuum_family(
+        spark, sf, "stub_embeddings", lb, api.stub_embed_live,
+        ingest.CONTENT.keys, h, log_name="content_text",
+    )
+    serving.purge_log(spark, sf, "content_text", h)
+
+
+def test_memo_hit_rechecks_the_vacuum_horizon(spark, fresh_dir):
+    """A repeated request is a plan-memo hit: the same handle, no
+    Spark job. After a vacuum past its snapshot, the repeat must
+    raise the pinned-snapshot error like a fresh request, not serve
+    the memoized plan."""
+    first = api.find_request(spark, fresh_dir, _MEMO_REQ)
+    assert len(first.collect()) == 5
+    sc = spark.sparkContext
+    sc.setJobGroup("memo-hit", "memo-hit")
+    try:
+        assert api.find_request(spark, fresh_dir, _MEMO_REQ) is first
+    finally:
+        sc.setJobGroup("idle", "idle")
+    assert list(sc.statusTracker().getJobIdsForGroup("memo-hit")) == []
+    _vacuum_content(spark, fresh_dir, 1_200_000)
+    with pytest.raises(ValueError, match="below the vacuum horizon"):
+        api.find_request(spark, fresh_dir, _MEMO_REQ)
+
+
+def test_fully_purged_log_serves_new_snapshots(spark, fresh_dir, monkeypatch):
+    """Once every content-log partition is purged, a new snapshot
+    above the horizon still serves: from the base alone when no
+    durable state sits at or above the purge floor, and by chaining
+    from a durable state once one does. Both equal the full-history
+    resolution."""
+    lb, res = _content(spark, fresh_dir)
+    log = lb()
+    _vacuum_content(spark, fresh_dir, 2_249_999)
+    key = serving._key(spark, fresh_dir, "content_text")
+    log_dir = os.path.join(serving._LOG_DIRS[key], "log")
+    assert not [p for p in os.listdir(log_dir) if p.startswith("seq_bucket=")]
+
+    calls = {"advance": 0, "vacuum": 0}
+    real_advance = ingest.advance_live_state
+    real_vacuum = ingest.asof_from_vacuum
+
+    def counting_advance(*a, **kw):
+        calls["advance"] += 1
+        return real_advance(*a, **kw)
+
+    def counting_vacuum(*a, **kw):
+        calls["vacuum"] += 1
+        return real_vacuum(*a, **kw)
+
+    monkeypatch.setattr(ingest, "advance_live_state", counting_advance)
+    monkeypatch.setattr(ingest, "asof_from_vacuum", counting_vacuum)
+    for seq, path in ((2_500_000, "vacuum"), (3_000_000, "advance")):
+        calls.update(advance=0, vacuum=0)
+        served = serving.state_as_of(
+            spark, fresh_dir, "content_text", lb, res, ingest.CONTENT.keys, seq
+        )
+        assert calls[path] == 1 and calls["vacuum"] == (path == "vacuum"), calls
+        assert _rows(served) == _rows(ingest.cdc_live_as_of(log, seq)), seq
+    monkeypatch.undo()
+    req = api.FindRequest(
+        query="refreshed revision stream",
+        features=["keyword"],
+        top_k=5,
+        as_of=2_750_000,
+    )
+    assert len(api.find_request(spark, fresh_dir, req).collect()) == 5
