@@ -10,7 +10,7 @@ fusion skip R3, legacy filter translation F8, reranker R5).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -62,8 +62,6 @@ def normalize_fields(fields: list[str]) -> list[str]:
 
 
 def _without_prequeries(req: "FindRequest") -> "FindRequest":
-    from dataclasses import replace
-
     return replace(req, prequeries=None)
 
 
@@ -398,20 +396,42 @@ def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFram
 
     Building a flagship request's plan costs 50-200 ms of pure driver
     work (plane classification, scope resolution, leg assembly,
-    analysis), so the built plan handle is memoized per session on the
-    request's value (``cache.request_key``); a repeat re-executes it.
-    The handle is stored with the vacuum-horizon checks its build made
-    (nested prequery builds included), and every hit repeats them: a
-    vacuum after the first request must still fail a repeat below its
-    horizon. The checks read driver-side state only, so a hit runs no
-    Spark job."""
-    checks, df = memo(
+    analysis), so the plan is memoized per session in two layers,
+    each keyed on request values (``cache.request_key``):
+
+    - the window plan (region ``find_window``): every leg plus the
+      fusion, cut at the rank-fusion window ``win =
+      planner.fusion_window(window, top_k)`` (at ``top_k`` itself
+      past the window's 500 cap). Legs and fusion never
+      read ``top_k`` beyond ``win`` (O6), nor the cursor or the
+      reranker, so requests that differ only there share one entry:
+      a "show more" or a next page builds no leg again;
+    - the request plan (region ``find_request``): the window plan's
+      per-request tail — the O7 cursor filter, the R5 rerank and the
+      cut to ``top_k``. A repeat gets its own handle back, whose
+      already-materialized adaptive stages make it re-run cheaply.
+
+    Both layers hold plan handles, never results: every collect()
+    re-executes against the inputs. Each entry is stored with the
+    vacuum-horizon checks its build made (nested window and prequery
+    builds included), and every hit repeats them: a vacuum after the
+    first request must still fail a repeat, or a ``top_k`` variant,
+    below its horizon. The checks read driver-side state only, so a
+    hit runs no Spark job."""
+    return _checked_memo(
+        spark,
         "find_request",
         request_key(sf_dir, req),
-        lambda: serving.recorded_checks(
-            lambda: _build_find_request(spark, sf_dir, req)
-        ),
-        bound=256,
+        lambda: _build_find_request(spark, sf_dir, req, memoize=True),
+    )
+
+
+def _checked_memo(spark: SparkSession, region: str, key, build) -> DataFrame:
+    """``build()``'s plan memoized in ``region`` under ``key`` with the
+    horizon checks the build recorded; a hit repeats them, and inside
+    an enclosing build the repeats land in its record too."""
+    checks, df = memo(
+        region, key, lambda: serving.recorded_checks(build), bound=256
     )
     for check_dir, family, seq in checks:
         serving.check_horizon(spark, check_dir, family, seq)
@@ -419,32 +439,115 @@ def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFram
 
 
 def _build_find_request(
+    spark: SparkSession, sf_dir: str, req: FindRequest, memoize: bool = False
+) -> DataFrame:
+    """The request's plan: its window plan (from the ``find_window``
+    memo when ``memoize``, else built fresh) and the per-request
+    tail."""
+    if req.prequeries:
+        return _fuse_prequeries(spark, sf_dir, req)
+    wreq = _window_request(req)
+    if memoize:
+        window = _checked_memo(
+            spark,
+            "find_window",
+            request_key(sf_dir, wreq),
+            lambda: _build_window(spark, sf_dir, wreq),
+        )
+    else:
+        window = _build_window(spark, sf_dir, wreq)
+    return _page(spark, sf_dir, req, window)
+
+
+def _window_request(req: FindRequest) -> FindRequest:
+    """The request whose plan is ``req``'s window plan: no cursor, no
+    reranker, and as ``top_k`` the depth the fusion cuts at — the
+    fusion window, or ``top_k`` itself past the window's 500 cap."""
+    return replace(
+        req,
+        top_k=max(planner.fusion_window(req.window, req.top_k), req.top_k),
+        search_after=None,
+        reranker="noop",
+    )
+
+
+def _fuse_prequeries(
     spark: SparkSession, sf_dir: str, req: FindRequest
 ) -> DataFrame:
-    if req.prequeries:
-        # the cursor would otherwise be applied to the INNER main-leg
-        # ranking and then re-ranked by the outer weighted RRF — page
-        # 2 would not tile the fused ranking, so the combination is
-        # rejected (same contract as search_after + reranker below)
-        if req.search_after is not None:
-            raise ValueError(
-                "search_after pages a single fused ranking; prequeries "
-                "re-fuse results after the cursor would apply"
-            )
-        # each prequery retrieves independently; a final weighted RRF
-        # fuses the main result with every prequery result
-        main = find_request(
-            spark, sf_dir, _without_prequeries(req)
+    # the cursor would otherwise be applied to the INNER main-leg
+    # ranking and then re-ranked by the outer weighted RRF — page
+    # 2 would not tile the fused ranking, so the combination is
+    # rejected (same contract as search_after + reranker in _page)
+    if req.search_after is not None:
+        raise ValueError(
+            "search_after pages a single fused ranking; prequeries "
+            "re-fuse results after the cursor would apply"
+        )
+    # each prequery retrieves independently; a final weighted RRF
+    # fuses the main result with every prequery result
+    main = find_request(
+        spark, sf_dir, _without_prequeries(req)
+    ).select("id", "score")
+    sources = {"main": main}
+    weights = {"main": 1.0}
+    for i, (pre, w) in enumerate(req.prequeries):
+        name = f"pre_{i}"
+        sources[name] = find_request(
+            spark, sf_dir, _without_prequeries(pre)
         ).select("id", "score")
-        sources = {"main": main}
-        weights = {"main": 1.0}
-        for i, (pre, w) in enumerate(req.prequeries):
-            name = f"pre_{i}"
-            sources[name] = find_request(
-                spark, sf_dir, _without_prequeries(pre)
-            ).select("id", "score")
-            weights[name] = w
-        return fusion.rrf(sources, weights=weights, top_k=req.top_k)
+        weights[name] = w
+    return fusion.rrf(sources, weights=weights, top_k=req.top_k)
+
+
+def _page(
+    spark: SparkSession, sf_dir: str, req: FindRequest, window: DataFrame
+) -> DataFrame:
+    """The per-request tail over the window plan (the fused ranking cut
+    at the fusion window): the O7 cursor filter, the R5 rerank, the
+    cut to ``top_k``. Limits combine in the optimizer, so a plain
+    request plans exactly like fusion cut at ``top_k`` directly."""
+    # keyset pagination needs the fused ranking to the window depth
+    # (the pageable horizon); a reranked list has page-dependent
+    # scores, so the combination is rejected
+    if req.search_after is not None and req.reranker != "noop":
+        raise ValueError("search_after pages the fused ranking; rerankers re-score pages")
+    if req.search_after is not None:
+        c_score, c_id = req.search_after
+        return (
+            window.filter(
+                (F.col("score") < c_score)
+                | ((F.col("score") == c_score) & (F.col("id") > c_id))
+            )
+            .orderBy(F.col("score").desc(), F.col("id").asc())
+            .limit(req.top_k)
+        )
+    if req.reranker != "stub":
+        return window.limit(req.top_k)
+    # R5: optional cross-encoder rerank over the fused top min(2k, 200)
+    # (the window plan holds at most the fusion window of them)
+    docs = tpch.table(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("long").alias("id"), "text"
+    )
+    rerank = models.make_stub_reranker(req.query)
+    return (
+        window.limit(planner.reranker_window(req.top_k))
+        .join(docs, "id")
+        .select(
+            "id",
+            F.round(rerank(F.col("text")), 8).cast("double").alias("score"),
+            "matched_sources",
+        )
+        .orderBy(F.col("score").desc(), F.col("id").asc())
+        .limit(req.top_k)
+    )
+
+
+def _build_window(
+    spark: SparkSession, sf_dir: str, req: FindRequest
+) -> DataFrame:
+    """Every leg of a request without prequeries, each cut at the
+    fusion window ``win``, fused and cut at the window request's
+    ``top_k``."""
     # F8: legacy filters fold into the filter tree
     filters = req.filters
     legacy = planner.translate_old_filters(req.legacy_filters) if req.legacy_filters else None
@@ -1035,51 +1138,12 @@ def _build_find_request(
     if not sources:
         raise ValueError("request selects no retrievers")
 
-    # keyset pagination needs the fused ranking to the window depth
-    # (the pageable horizon); a reranked list has page-dependent
-    # scores, so the combination is rejected
-    if req.search_after is not None and req.reranker != "noop":
-        raise ValueError("search_after pages the fused ranking; rerankers re-score pages")
-    cut = win if req.search_after is not None else req.top_k
-
     # R3: single source skips fusion entirely
     if len(sources) == 1:
         name, df = next(iter(sources.items()))
-        fused = df.select(
+        return df.select(
             "id",
             F.col("score").cast("double").alias("score"),
             F.array(F.lit(name)).alias("matched_sources"),
-        ).orderBy(F.col("score").desc(), F.col("id").asc()).limit(cut)
-    else:
-        fused = fusion.rrf(sources, weights=req.fusion_weights, top_k=cut)
-
-    if req.search_after is not None:
-        c_score, c_id = req.search_after
-        fused = (
-            fused.filter(
-                (F.col("score") < c_score)
-                | ((F.col("score") == c_score) & (F.col("id") > c_id))
-            )
-            .orderBy(F.col("score").desc(), F.col("id").asc())
-            .limit(req.top_k)
-        )
-
-    # R5: optional cross-encoder rerank over min(2k, 200) candidates
-    if req.reranker == "stub":
-        docs = tpch.table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long").alias("id"), "text"
-        )
-        rerank = models.make_stub_reranker(req.query)
-        rerank_win = planner.reranker_window(req.top_k)
-        fused = (
-            fused.limit(rerank_win)
-            .join(docs, "id")
-            .select(
-                "id",
-                F.round(rerank(F.col("text")), 8).cast("double").alias("score"),
-                "matched_sources",
-            )
-            .orderBy(F.col("score").desc(), F.col("id").asc())
-            .limit(req.top_k)
-        )
-    return fused
+        ).orderBy(F.col("score").desc(), F.col("id").asc()).limit(req.top_k)
+    return fusion.rrf(sources, weights=req.fusion_weights, top_k=req.top_k)

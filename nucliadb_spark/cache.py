@@ -28,9 +28,13 @@ Regions.
   and never evicted; the unbounded families (per-snapshot as-of
   sidecars keyed by seq) are unpinned and age out.
 - ``memo(region, key, build, bound)``: one LRU dict per named region.
-  The two plan memos (``api.find_request``, ``find.find``) hold built
-  plan handles — never results: every collect() re-executes against
-  the parquet inputs — and keep their 256 most recent requests. The
+  The plan memos hold built plan handles — never results: every
+  collect() re-executes against the parquet inputs — and keep their
+  256 most recent requests: ``find_window`` (``api.find_request``'s
+  legs and fusion cut at the fusion window, shared by requests that
+  differ only in ``top_k``, cursor or reranker), ``find_request``
+  (each request's cursor, rerank and ``top_k`` cut over its window
+  plan) and ``find`` (``find.find``). The
   other regions are unbounded, since their keys are table names,
   paths and fixed sidecar names: ``cached_scalar``'s index-build
   statistics, ``tpch.table``'s parquet reader frames, the streaming

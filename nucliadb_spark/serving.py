@@ -406,7 +406,6 @@ def state_as_of(
     that makes physical vacuum safe."""
     log_name = log_name or family
     check_horizon(spark, sf_dir, family, seq)
-    _LOG_FAMILIES.setdefault(_key(spark, sf_dir, log_name), set()).add(family)
     d = _fam_dir(spark, sf_dir, family)
     state_path = os.path.join(d, f"state_s{seq}")
     if not os.path.exists(os.path.join(state_path, "_SUCCESS")):
@@ -435,6 +434,9 @@ def state_as_of(
             vac = ingest.VacuumedLog(base, retained, max(h, 0))
             state = ingest.asof_from_vacuum(vac, seq, keys, resolve)
         state.write.mode("overwrite").parquet(state_path)
+    # registered once served, never by a read the purge floor refused:
+    # a registered family at NO_HORIZON blocks every later purge_log
+    _LOG_FAMILIES.setdefault(_key(spark, sf_dir, log_name), set()).add(family)
     return spark.read.parquet(state_path)
 
 
@@ -456,11 +458,11 @@ def vacuum_family(
     :func:`purge_log` afterwards to physically delete the folded
     partitions once every family on the log has moved past them."""
     log_name = log_name or family
-    _LOG_FAMILIES.setdefault(_key(spark, sf_dir, log_name), set()).add(family)
     old = horizon(spark, sf_dir, family)
     if new_horizon <= old:
         return
     _check_purge_floor(spark, sf_dir, log_name, family)
+    _LOG_FAMILIES.setdefault(_key(spark, sf_dir, log_name), set()).add(family)
     d = _fam_dir(spark, sf_dir, family)
     full = physical_log(spark, sf_dir, log_name, log_builder)
     prior = _base_state(spark, sf_dir, family, full.drop("seq_bucket"), resolve)

@@ -38,5 +38,11 @@ def get_session(app_name: str = "nucliadb_spark", shuffle_partitions: int | None
         # heap GC-thrashes once postings+vectors are cached)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
+        # PySpark 4 records the Python call site of every wrapped
+        # pyspark.sql.functions call for analysis error messages: extra
+        # py4j round trips per call (active session, a conf read,
+        # origin set and clear) plus an IPython import probe, paid on
+        # every plan build
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

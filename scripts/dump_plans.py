@@ -10,10 +10,15 @@ its ``explain("formatted")`` is written to ``plans/<tag>/<name>.txt``.
 Expression ids (``#N``), plan ids (``plan_id=N``), the numeric
 suffix of higher-order-function lambda variables (``lambda x_N``,
 drawn from a process-wide counter, so it moves with every lambda
-column built earlier in the process), the corpus directory
+column built earlier in the process), RDD ids (``MapPartitionsRDD[N]
+at localCheckpoint``, also process-wide), the random ``attr_<hash>``
+struct names of the streaming joins, the corpus directory
 (``<sf_dir>``) and the random suffix of temp directories
 (``tempfile.mkdtemp``, 8 characters) are normalized, so dumps taken
 from two checkouts compare with a plain ``diff -r``.
+One seat stays unstable after normalization: ``stream_stream_join``'s
+distinct-aggregate Expand lists ``click_id`` and ``purchase_id`` in
+either order, so two dumps of the same commit can differ there.
 Seats are built in sorted name order, so session caches are in the
 same state for the same glob set. A seat that fails to build is
 written as a one-line ``# FAILED`` record and reported on stderr.
@@ -34,6 +39,8 @@ _NORMALIZE = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"(lambda [A-Za-z]\w*?)_\d+#"), r"\1_N#"),
+    (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[N]"),
+    (re.compile(r"\battr_[0-9a-f]{10}\b"), "attr_<hash>"),
     (
         re.compile(re.escape(tempfile.gettempdir()) + r"/([^/\s\],]*)[a-z0-9_]{8}(?=[/\]\s,])"),
         r"<tmp>/\1XXXXXXXX",

@@ -1094,3 +1094,149 @@ def test_request_memo_keys_cannot_alias_equal_repr_filters(spark, sf_dir):
         assert rows == [(r.id, r.score) for r in fresh]
         got.append(rows)
     assert got[0] and got[1] and got[0] != got[1]
+
+
+# --- the window plan layer ----------------------------------------------------
+
+
+def _window_keys(sf_dir, req):
+    """Keys of ``find_window`` entries for this application, and the
+    one ``req``'s window plan would take."""
+    from nucliadb_spark import cache
+
+    app = cache._app()
+    keys = {k for k in cache._REGIONS.get("find_window", {}) if k[0] == app}
+    return keys, (app, cache.request_key(sf_dir, api._window_request(req)))
+
+
+def test_top_k_variants_share_one_window_plan(spark, sf_dir):
+    """Requests that differ only in top_k (both within the window) build
+    one window plan and keep two request handles: each repeat returns
+    its own handle, and each equals a fresh build."""
+    reqs = [
+        api.FindRequest(query="window plan shared topk", top_k=k, window=50)
+        for k in (4, 9)
+    ]
+    before, wkey = _window_keys(sf_dir, reqs[0])
+    assert wkey not in before
+    a = api.find_request(spark, sf_dir, reqs[0])
+    b = api.find_request(spark, sf_dir, reqs[1])
+    after, _ = _window_keys(sf_dir, reqs[1])
+    assert after - before == {wkey}
+    assert a is not b
+    assert api.find_request(spark, sf_dir, reqs[0]) is a
+    assert api.find_request(spark, sf_dir, reqs[1]) is b
+    for req, df in zip(reqs, (a, b)):
+        rows = df.collect()
+        assert len(rows) == req.top_k
+        assert rows == api._build_find_request(spark, sf_dir, req).collect()
+
+
+def test_search_after_page_shares_the_window_plan(spark, sf_dir):
+    """A next page (cursor = the first page's last row) reuses the
+    first page's window plan and tiles the fused ranking."""
+    from dataclasses import replace
+
+    first = api.FindRequest(query="cursor page shared window", top_k=5)
+    page1 = api.find_request(spark, sf_dir, first).collect()
+    before, wkey = _window_keys(sf_dir, first)
+    assert wkey in before
+    last = page1[-1]
+    nxt = replace(first, search_after=(last.score, last.id))
+    page2 = api.find_request(spark, sf_dir, nxt).collect()
+    assert _window_keys(sf_dir, nxt)[0] == before
+    deep = api.find_request(spark, sf_dir, replace(first, top_k=10)).collect()
+    assert page1 + page2 == deep
+
+
+def test_window_hit_replays_horizon_checks(spark, tmp_path_factory, sf_dir):
+    """After a vacuum past a request's snapshot, a top_k variant that
+    hits the window plan (its own request plan is new) raises the
+    pinned-snapshot error instead of paging the memoized window."""
+    import os
+    import shutil
+    from dataclasses import replace
+
+    from nucliadb_spark import serving
+    from nucliadb_spark.streaming import ingest
+
+    iso = str(tmp_path_factory.mktemp("window_vacuum_sf"))
+    for f in os.listdir(sf_dir):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(sf_dir, f), os.path.join(iso, f))
+    req = api.FindRequest(
+        query="refreshed revision stream",
+        features=["keyword"],
+        top_k=5,
+        as_of=1_000_030,
+    )
+    assert len(api.find_request(spark, iso, req).collect()) == 5
+    fields = tpch.fields(spark, iso)
+    serving.vacuum_family(
+        spark, iso, "content_text", lambda: ingest.cdc_log(fields),
+        ingest.CONTENT.resolve, ingest.CONTENT.keys, 1_200_000,
+    )
+    variant = replace(req, top_k=7)
+    keys, wkey = _window_keys(iso, variant)
+    assert wkey in keys
+    with pytest.raises(ValueError, match="below the vacuum horizon"):
+        api.find_request(spark, iso, variant)
+
+
+def test_unkeyable_request_builds_fresh_at_both_layers(spark, sf_dir):
+    """A request without a canonical key (a non-dataclass filter node)
+    stores nothing in either plan memo and builds a new handle on
+    every call."""
+    from nucliadb_spark import cache
+
+    req = api.FindRequest(
+        query="unkeyable fresh build", top_k=5, filters=_RidParity(1)
+    )
+    sizes = lambda: {  # noqa: E731
+        r: len(cache._REGIONS.get(r, {})) for r in ("find_request", "find_window")
+    }
+    before = sizes()
+    a = api.find_request(spark, sf_dir, req)
+    b = api.find_request(spark, sf_dir, req)
+    assert sizes() == before
+    assert a is not b
+    assert a.collect() == b.collect()
+
+
+def test_stub_reranker_scores_the_reranker_window(spark, sf_dir):
+    """R5: the cross-encoder re-scores the fused top min(2·top_k, 200)
+    (capped at the fusion window), not just the top_k it returns."""
+    from dataclasses import replace
+
+    from nucliadb_spark.functions import models
+
+    req = api.FindRequest(
+        query="spark join window", top_k=5, window=50, reranker="stub"
+    )
+    got = [(r.id, r.score) for r in api.find_request(spark, sf_dir, req).collect()]
+    depth = min(planner.reranker_window(req.top_k), 50)
+    fused = api.find_request(
+        spark, sf_dir, replace(req, reranker="noop", top_k=depth)
+    ).collect()
+    assert len(fused) == depth
+    text = {
+        r.doc_id: r.text
+        for r in tpch.table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id").isin([r.id for r in fused]))
+        .collect()
+    }
+    manual = sorted(
+        ((r.id, round(models._rerank_score(req.query, text[r.id]), 8)) for r in fused),
+        key=lambda t: (-t[1], t[0]),
+    )[: req.top_k]
+    assert got == manual
+    # the widened window matters for this query: a candidate from
+    # below the fused top_k reranks into the result
+    assert {i for i, _ in got} - {r.id for r in fused[: req.top_k]}
+
+
+def test_session_turns_off_call_site_capture(spark):
+    """Per-call Python call-site capture costs py4j round trips on
+    every pyspark.sql.functions call; the engine's session turns it
+    off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

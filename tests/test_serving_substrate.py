@@ -41,7 +41,7 @@ def iso_dir(tmp_path_factory, sf_dir):
 @pytest.fixture(scope="module")
 def fresh_dir(tmp_path_factory, sf_dir):
     """A second isolated copy for the memo and full-purge lifecycle at
-    the end of the file: iso_dir's late family blocks later purges."""
+    the end of the file, whose content log starts unvacuumed."""
     return _iso_copy(tmp_path_factory, sf_dir, "fresh_sf")
 
 
@@ -191,6 +191,29 @@ def test_late_family_on_purged_log_raises(spark, iso_dir):
             1_500_000,
             log_name="content_text",
         )
+
+
+def test_refused_late_read_does_not_block_later_purges(
+    spark, tmp_path_factory, sf_dir
+):
+    """A read the purge floor refuses must not register its family on
+    the log: registered at no horizon, it would make every later
+    purge_log of that log refuse."""
+    sf = _iso_copy(tmp_path_factory, sf_dir, "late_purge_sf")
+    lb, res = _content(spark, sf)
+    serving.vacuum_family(
+        spark, sf, "content_text", lb, res, ingest.CONTENT.keys, 249_999
+    )
+    assert serving.purge_log(spark, sf, "content_text", 249_999) == 1
+    with pytest.raises(ValueError, match="physically purged"):
+        serving.state_as_of(
+            spark, sf, "late", lb, ingest.cdc_live_derived,
+            ingest.CONTENT.keys, 1_500_000, log_name="content_text",
+        )
+    serving.vacuum_family(
+        spark, sf, "content_text", lb, res, ingest.CONTENT.keys, 499_999
+    )
+    serving.purge_log(spark, sf, "content_text", 499_999)  # must not refuse
 
 
 def test_vacuumed_base_is_durable_parquet(spark, iso_dir):
