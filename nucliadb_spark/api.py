@@ -394,10 +394,13 @@ def asof_live_state(
 def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFrame:
     """Execute a FindRequest → (id, score, matched_sources).
 
-    Building a flagship request's plan costs 50-200 ms of pure driver
-    work (plane classification, scope resolution, leg assembly,
-    analysis), so the plan is memoized per session in two layers,
-    each keyed on request values (``cache.request_key``):
+    Building a request's plan is pure driver work (plane
+    classification, scope resolution, leg assembly, analysis): on the
+    benchmark's find_live mix (4 cores) a first-seen request spends
+    130-470 ms and 350-1,300 py4j round trips in it, with the corpus
+    frames already memoized (``tpch.fields``). So the plan is memoized
+    per session in two layers, each keyed on request values
+    (``cache.request_key``):
 
     - the window plan (region ``find_window``): every leg plus the
       fusion, cut at the rank-fusion window ``win =
@@ -484,9 +487,10 @@ def _fuse_prequeries(
             "re-fuse results after the cursor would apply"
         )
     # each prequery retrieves independently; a final weighted RRF
-    # fuses the main result with every prequery result
+    # fuses the main result with every prequery result, and the
+    # request's reranker scores the fused ranking, not the main leg
     main = find_request(
-        spark, sf_dir, _without_prequeries(req)
+        spark, sf_dir, replace(req, prequeries=None, reranker="noop")
     ).select("id", "score")
     sources = {"main": main}
     weights = {"main": 1.0}
@@ -496,7 +500,11 @@ def _fuse_prequeries(
             spark, sf_dir, _without_prequeries(pre)
         ).select("id", "score")
         weights[name] = w
-    return fusion.rrf(sources, weights=weights, top_k=req.top_k)
+    # fused at the window request's depth, so the R5 rerank sees the
+    # fused top min(2k, 200); unreranked, the page's limit combines
+    # with this one and the plan is the RRF cut at top_k
+    fused = fusion.rrf(sources, weights=weights, top_k=_window_request(req).top_k)
+    return _page(spark, sf_dir, req, fused)
 
 
 def _page(

@@ -26,7 +26,9 @@ Regions.
   change results. Hot shared index artifacts (the live text index,
   centroids, the relations index) are inserted with ``pinned=True``
   and never evicted; the unbounded families (per-snapshot as-of
-  sidecars keyed by seq) are unpinned and age out.
+  sidecars keyed by seq) are unpinned and age out. Sorted sidecars
+  take their layout from ``sorted_sidecar``: one range partition per
+  task slot of the session.
 - ``memo(region, key, build, bound)``: one LRU dict per named region.
   The plan memos hold built plan handles — never results: every
   collect() re-executes against the parquet inputs — and keep their
@@ -37,8 +39,10 @@ Regions.
   plan) and ``find`` (``find.find``). The
   other regions are unbounded, since their keys are table names,
   paths and fixed sidecar names: ``cached_scalar``'s index-build
-  statistics, ``tpch.table``'s parquet reader frames, the streaming
-  readStream schemas and the package-zip registration.
+  statistics, ``readers`` (``tpch.table``'s parquet reader frames
+  and the corpus frames derived from them, ``tpch.fields`` and
+  ``tpch.fields_multi``: plan handles holding no rows), the
+  streaming readStream schemas and the package-zip registration.
 
 Plan memos key a request with ``request_key``, built from canonical
 values only, so two different requests can never share a key.
@@ -155,6 +159,17 @@ def cached_df(
         entry.pinned = entry.pinned or pinned
         _CACHE.move_to_end(key)
     return entry.df
+
+
+def sorted_sidecar(df: DataFrame, *cols: str) -> DataFrame:
+    """``df`` range-partitioned and sorted by ``cols`` — the layout of
+    a sorted index sidecar, whose cached batches' min/max statistics
+    prune scans on ``cols``. It has one partition per task slot of the
+    session (``defaultParallelism``): every scan of a cached sidecar
+    launches one task per partition, so a fixed count would pay for
+    idle slots on a small machine and leave cores idle on a big one."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
 
 
 def _enforce_budget() -> None:

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nucliadb_spark.cache import cached_df
+from nucliadb_spark.cache import cached_df, sorted_sidecar
 from nucliadb_spark.operators import advanced, augment, bm25, suggest
 from nucliadb_spark.operators import filters as fx
 from nucliadb_spark.registry import register
@@ -16,21 +16,21 @@ def _text_index(spark, sf_dir):
     """Cached text index for the unfiltered documents corpus (the
     serving path — built once per session, reused by every query).
     Postings are range-partitioned + sorted by TERM before caching
-    (the r12 sorted-triple-index treatment applied to the text
-    sidecar): the non-fuzzy search's literal `term IN (...)`
-    predicate then prunes cached batches via min/max stats — the
-    reference's term dictionary is likewise sorted (tantivy fst).
-    Measured 0.84x on term-match scans at sf0.1
-    (scripts/sorted_sidecar_probe.py); at 100 TB the same layout is
-    the term-sorted/bucketed parquet postings table with row-group
-    pruning. Row order is an index property only — every consumer
-    aggregates, so results are unchanged."""
+    (``cache.sorted_sidecar``, one partition per task slot; the
+    vocabulary aggregates without a shuffle and keeps that count):
+    each partition stays sorted, so the non-fuzzy search's literal
+    `term IN (...)` predicate prunes cached batches via min/max
+    stats — the reference's term dictionary is likewise sorted
+    (tantivy fst). Measured 0.84x on term-match scans at sf0.1 with
+    32 partitions (the probe is `git show
+    a2235d5:scripts/sorted_sidecar_probe.py`); at 100 TB the same
+    layout is the term-sorted/bucketed parquet postings table with
+    row-group pruning. Row order is an index property only — every
+    consumer aggregates, so results are unchanged."""
     post = cached_df(
         sf_dir,
         "postings",
-        lambda: bm25.postings(tpch.fields(spark, sf_dir))
-        .repartitionByRange(32, "term")
-        .sortWithinPartitions("term"),
+        lambda: sorted_sidecar(bm25.postings(tpch.fields(spark, sf_dir)), "term"),
         pinned=True,
     )
     stats = cached_df(
@@ -69,16 +69,17 @@ def _fielded_text_index(spark, sf_dir):
     post = cached_df(
         sf_dir,
         "ff_postings",
-        lambda: (
+        # sorted-sidecar layout: each partition stays sorted, so the
+        # scoped family literal AND the query's term IN (...) both
+        # prune cached batches via min/max stats (0.84x at 32
+        # partitions; `git show a2235d5:scripts/sorted_sidecar_probe.py`)
+        lambda: sorted_sidecar(
             tpch.fields_multi(spark, sf_dir)
             .select("field_key", "rid", F.explode(tokenize("text")).alias("term"))
             .groupBy("field_key", "rid", "term")
-            .agg(F.count("*").cast("double").alias("tf"))
-            # sorted-sidecar layout: the scoped family literal AND the
-            # query's term IN (...) both prune cached batches via
-            # min/max stats (scripts/sorted_sidecar_probe.py, 0.84x)
-            .repartitionByRange(32, "field_key", "term")
-            .sortWithinPartitions("field_key", "term")
+            .agg(F.count("*").cast("double").alias("tf")),
+            "field_key",
+            "term",
         ),
         pinned=True,
     )

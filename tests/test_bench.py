@@ -1,5 +1,6 @@
-"""bench.py's per-seat record, and the rule that keeps measurement in
-bench.py and perfbench/ rather than in one-off scripts.
+"""bench.py's per-seat record, the rule that keeps measurement in
+bench.py and perfbench/ rather than in one-off scripts, and the rule
+that sizes range partitions by the session rather than by a literal.
 
 The seat test runs one cheap seat through ``bench.time_seat``: its
 seat time is the minimum warm run, and its cold and warm layer
@@ -8,6 +9,7 @@ records carry the stage metrics perfbench's StageMetrics sums."""
 from __future__ import annotations
 
 import os
+import pathlib
 import re
 
 import bench
@@ -38,3 +40,15 @@ def test_no_round_stamped_scripts():
     # bench.py's; a script named for one round is a copy of one of them
     stamped = sorted(n for n in os.listdir(SCRIPTS) if ROUND_STAMP.search(n))
     assert stamped == []
+
+
+def test_no_fixed_range_partition_counts():
+    # a sorted sidecar takes its partition count from the session
+    # (cache.sorted_sidecar); a literal count is wrong on every machine
+    # but the one it was tuned on
+    pkg = pathlib.Path(SCRIPTS).parent / "nucliadb_spark"
+    fixed = re.compile(r"repartitionByRange\(\s*\d")
+    offenders = sorted(
+        str(p.relative_to(pkg)) for p in pkg.rglob("*.py") if fixed.search(p.read_text())
+    )
+    assert offenders == []

@@ -121,3 +121,37 @@ def test_app_keying_lives_in_the_session_store():
         and "applicationId" in p.read_text()
     )
     assert offenders == []
+
+
+def test_sorted_sidecars_have_one_partition_per_task_slot(spark, sf_dir):
+    """The range-partitioned serving sidecars (and the vocabulary,
+    which aggregates without a shuffle) take the session's task-slot
+    count, so a scan of one runs a task per core."""
+    from nucliadb_spark.plans import queries_text
+    from nucliadb_spark.sources import tpch
+
+    post, _ = queries_text._text_index(spark, sf_dir)
+    sidecars = {
+        "postings": post,
+        "vocab": queries_text._vocab(sf_dir, post),
+        "ff_postings": queries_text._fielded_text_index(spark, sf_dir)[0],
+        "relations": tpch.relations_index(spark, sf_dir),
+    }
+    slots = spark.sparkContext.defaultParallelism
+    assert {n: df.rdd.getNumPartitions() for n, df in sidecars.items()} == {
+        n: slots for n in sidecars
+    }
+
+
+def test_corpus_frames_are_memoized_with_the_readers(spark, sf_dir):
+    """tpch.fields and tpch.fields_multi are plan handles kept in the
+    readers region: the same handle on every call of a session, a new
+    one after clear()."""
+    from nucliadb_spark.sources import tpch
+
+    for frame in (tpch.fields, tpch.fields_multi):
+        first = frame(spark, sf_dir)
+        assert frame(spark, sf_dir) is first
+        cache.clear()
+        assert frame(spark, sf_dir) is not first
+    assert tpch.fields(spark, sf_dir) is not tpch.fields_multi(spark, sf_dir)

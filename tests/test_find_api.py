@@ -1235,6 +1235,76 @@ def test_stub_reranker_scores_the_reranker_window(spark, sf_dir):
     assert {i for i, _ in got} - {r.id for r in fused[: req.top_k]}
 
 
+def test_stub_reranked_prequeries_rerank_the_fused_window(spark, sf_dir):
+    """R5 with prequeries: the stub re-scores the fused top
+    min(2·top_k, 200) of the weighted RRF (main leg unreranked) and
+    cuts to top_k."""
+    from dataclasses import replace
+
+    from nucliadb_spark.functions import models
+    from nucliadb_spark.operators import fusion
+
+    pre = api.FindRequest(query="merge sort key", features=["keyword"], top_k=10)
+    req = api.FindRequest(
+        query="spark join window",
+        features=["keyword"],
+        top_k=5,
+        reranker="stub",
+        prequeries=[(pre, 2.0)],
+    )
+    got = [(r.id, r.score) for r in api.find_request(spark, sf_dir, req).collect()]
+    main = replace(req, prequeries=None, reranker="noop")
+    fused = fusion.rrf(
+        {
+            "main": api.find_request(spark, sf_dir, main).select("id", "score"),
+            "pre_0": api.find_request(spark, sf_dir, pre).select("id", "score"),
+        },
+        weights={"main": 1.0, "pre_0": 2.0},
+        top_k=planner.reranker_window(req.top_k),
+    ).collect()
+    text = {
+        r.doc_id: r.text
+        for r in tpch.table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id").isin([r.id for r in fused]))
+        .collect()
+    }
+    manual = sorted(
+        ((r.id, round(models._rerank_score(req.query, text[r.id]), 8)) for r in fused),
+        key=lambda t: (-t[1], t[0]),
+    )[: req.top_k]
+    assert got == manual
+    plain = api.find_request(spark, sf_dir, replace(req, reranker="noop")).collect()
+    assert got != [(r.id, r.score) for r in plain]
+
+
+@pytest.mark.parametrize("scope", [None, "a/title"])
+def test_served_bm25_request_equals_its_sql_twin(spark, sf_dir, scope):
+    """A keyword-only find request, served from the sorted sidecars
+    (the live postings, or the fielded postings pruned to one family),
+    ranks exactly like bm25_sql over the corpus in DuckDB."""
+    from tests.oracle import duckdb_conn
+
+    query, top_k = "merge stream window", 10
+    req = api.FindRequest(
+        query=query,
+        features=["keyword"],
+        top_k=top_k,
+        fields=[scope] if scope else None,
+    )
+    got = [(r.id, r.score) for r in api.find_request(spark, sf_dir, req).collect()]
+    if scope:
+        corpus = f"SELECT * FROM ({tpch.SQL_FIELDS_MULTI}) WHERE field_key = '/{scope}'"
+        sql = bm25.bm25_sql(corpus, query, top_k=top_k)
+    else:
+        sql = bm25.bm25_sql(tpch.SQL_FIELDS, query, top_k=top_k, mode="any")
+    want = duckdb_conn(sf_dir).execute(
+        f"SELECT rid, score FROM ({sql}) ORDER BY score DESC, rid ASC"
+    ).fetchall()
+    assert len(got) == top_k
+    assert [i for i, _ in got] == [i for i, _ in want]
+    assert [s for _, s in got] == pytest.approx([s for _, s in want])
+
+
 def test_session_turns_off_call_site_capture(spark):
     """Per-call Python call-site capture costs py4j round trips on
     every pyspark.sql.functions call; the engine's session turns it
