@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from nucliadb_spark import serving
 from nucliadb_spark.cache import cached_df, cached_names, memo, request_key
@@ -188,6 +188,49 @@ def _filter_planes(expr: Expr) -> set[str]:
     if all(c in _STATIC_COLS | _DERIVED_COLS for c in cols):
         return {"derived"}
     return {"versioned"}
+
+
+def _mixed_allowed(
+    fields: DataFrame, states: dict[str, DataFrame], filters: Expr
+) -> DataFrame:
+    """The rids a mixed-plane filter tree admits at a snapshot.
+
+    The frame it filters holds the immutable identity columns of
+    ``fields`` with each versioned plane's state LEFT-joined by rid:
+    an Or across planes must stay answerable for a rid one plane's
+    state lacks, and an inner join would silently turn Or into
+    And-with-membership whenever plane logs diverge. (This corpus
+    model's logs share one write schedule — pinned by
+    test_meta_plane.py's shared-membership invariant — so today the
+    joins are equal; the left join encodes the semantics, not the
+    fixture.)
+
+    The rule for a rid a plane lacks: it has no state there at the
+    seq, so each leaf over that plane is false. The leaf itself reads
+    null, and every ``Not`` evaluates as ``IS NOT TRUE``
+    (``_not_is_not_true``), which makes a null leaf count as false
+    under And, Or and Not alike: ``Not(Facet(x))`` admits a rid the
+    label plane lacks."""
+    snap = fields.select(*[c for c in fields.columns if c in _STATIC_COLS])
+    for st in states.values():
+        snap = snap.join(st, "rid", "left")
+    return snap.filter(_not_is_not_true(filters)).select("rid")
+
+
+def _not_is_not_true(expr: Expr) -> Column:
+    """``expr`` compiled with every ``Not`` as ``IS NOT TRUE``: a Not
+    over a null operand is true, not null."""
+    from nucliadb_spark.operators.filters import And, Not, Or
+
+    if isinstance(expr, Not):
+        return ~F.coalesce(_not_is_not_true(expr.operand), F.lit(False))
+    if isinstance(expr, (And, Or)):
+        cols = [_not_is_not_true(e) for e in expr.operands]
+        out = cols[0]
+        for col in cols[1:]:
+            out = out & col if isinstance(expr, And) else out | col
+        return out
+    return expr.to_column()
 
 
 @dataclass
@@ -402,25 +445,32 @@ def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFram
     per session in two layers, each keyed on request values
     (``cache.request_key``):
 
-    - the window plan (region ``find_window``): every leg plus the
-      fusion, cut at the rank-fusion window ``win =
+    - the window (region ``find_window``): every leg plus the fusion,
+      cut at the rank-fusion window ``win =
       planner.fusion_window(window, top_k)`` (at ``top_k`` itself
-      past the window's 500 cap). Legs and fusion never
-      read ``top_k`` beyond ``win`` (O6), nor the cursor or the
-      reranker, so requests that differ only there share one entry:
-      a "show more" or a next page builds no leg again;
-    - the request plan (region ``find_request``): the window plan's
+      past the window's 500 cap). Legs and fusion never read
+      ``top_k`` beyond ``win`` (O6), nor the cursor or the reranker,
+      so requests that differ only there share one entry;
+    - the request plan (region ``find_request``): the window's
       per-request tail — the O7 cursor filter, the R5 rerank and the
       cut to ``top_k``. A repeat gets its own handle back, whose
       already-materialized adaptive stages make it re-run cheaply.
 
-    Both layers hold plan handles, never results: every collect()
-    re-executes against the inputs. Each entry is stored with the
-    vacuum-horizon checks its build made (nested window and prequery
-    builds included), and every hit repeats them: a vacuum after the
-    first request must still fail a repeat, or a ``top_k`` variant,
-    below its horizon. The checks read driver-side state only, so a
-    hit runs no Spark job."""
+    The window layer holds a persisted RESULT, not just a plan: a
+    window ranks an immutable input (a snapshot, or the session's
+    pinned live index), so the first request's collect fills it and
+    every later ``top_k`` variant, next page, reranked tail or repeat
+    over it reads at most ``win`` rows in one Spark job — a "show
+    more" or a next page builds no leg again. Only windows at most
+    the fusion window's 500 rows deep are persisted (a deeper,
+    user-chosen ``top_k`` keeps a plan handle), so the region's 256
+    entries hold at most 256 × 500 rows, and evicting a window
+    unpersists it. Each entry is stored with the vacuum-horizon
+    checks its build made (nested window and prequery builds
+    included), and every hit repeats them: a vacuum after the first
+    request must still fail a repeat, or a ``top_k`` variant, below
+    its horizon. The checks read driver-side state only, so a hit
+    runs no Spark job."""
     return _checked_memo(
         spark,
         "find_request",
@@ -444,21 +494,25 @@ def _checked_memo(spark: SparkSession, region: str, key, build) -> DataFrame:
 def _build_find_request(
     spark: SparkSession, sf_dir: str, req: FindRequest, memoize: bool = False
 ) -> DataFrame:
-    """The request's plan: its window plan (from the ``find_window``
-    memo when ``memoize``, else built fresh) and the per-request
+    """The request's plan: its window (from the ``find_window`` memo,
+    persisted, when ``memoize``, else built fresh) and the per-request
     tail."""
     if req.prequeries:
         return _fuse_prequeries(spark, sf_dir, req)
     wreq = _window_request(req)
-    if memoize:
-        window = _checked_memo(
-            spark,
-            "find_window",
-            request_key(sf_dir, wreq),
-            lambda: _build_window(spark, sf_dir, wreq),
-        )
-    else:
+    if not memoize:
+        return _page(spark, sf_dir, req, _build_window(spark, sf_dir, wreq))
+    key = request_key(sf_dir, wreq)
+
+    def build() -> DataFrame:
         window = _build_window(spark, sf_dir, wreq)
+        # an unkeyed window is never stored, so nothing would
+        # unpersist it
+        if key is not None and wreq.top_k <= planner.MAX_RANK_FUSION_WINDOW:
+            window = window.persist()
+        return window
+
+    window = _checked_memo(spark, "find_window", key, build)
     return _page(spark, sf_dir, req, window)
 
 
@@ -510,10 +564,11 @@ def _fuse_prequeries(
 def _page(
     spark: SparkSession, sf_dir: str, req: FindRequest, window: DataFrame
 ) -> DataFrame:
-    """The per-request tail over the window plan (the fused ranking cut
-    at the fusion window): the O7 cursor filter, the R5 rerank, the
-    cut to ``top_k``. Limits combine in the optimizer, so a plain
-    request plans exactly like fusion cut at ``top_k`` directly."""
+    """The per-request tail over the window (the fused ranking cut at
+    the fusion window): the O7 cursor filter, the R5 rerank, the cut
+    to ``top_k``. Each cut sorts by (score desc, id asc) first, so a
+    page does not depend on the order a persisted window is scanned
+    in."""
     # keyset pagination needs the fused ranking to the window depth
     # (the pageable horizon); a reranked list has page-dependent
     # scores, so the combination is rejected
@@ -521,16 +576,13 @@ def _page(
         raise ValueError("search_after pages the fused ranking; rerankers re-score pages")
     if req.search_after is not None:
         c_score, c_id = req.search_after
-        return (
-            window.filter(
-                (F.col("score") < c_score)
-                | ((F.col("score") == c_score) & (F.col("id") > c_id))
-            )
-            .orderBy(F.col("score").desc(), F.col("id").asc())
-            .limit(req.top_k)
+        window = window.filter(
+            (F.col("score") < c_score)
+            | ((F.col("score") == c_score) & (F.col("id") > c_id))
         )
+    ranked = window.orderBy(F.col("score").desc(), F.col("id").asc())
     if req.reranker != "stub":
-        return window.limit(req.top_k)
+        return ranked.limit(req.top_k)
     # R5: optional cross-encoder rerank over the fused top min(2k, 200)
     # (the window plan holds at most the fusion window of them)
     docs = tpch.table(spark, sf_dir, "documents").select(
@@ -538,7 +590,7 @@ def _page(
     )
     rerank = models.make_stub_reranker(req.query)
     return (
-        window.limit(planner.reranker_window(req.top_k))
+        ranked.limit(planner.reranker_window(req.top_k))
         .join(docs, "id")
         .select(
             "id",
@@ -640,9 +692,9 @@ def _build_window(
     # resolution entirely (one filter over the fields frame;
     # membership at the seq is enforced by each leg's as-of corpus),
     # a single-plane tree filters that plane's state directly, and a
-    # mixed tree joins the planes' states by rid before the unchanged
-    # filter compiler evaluates the WHOLE tree — And/Or/Not across
-    # planes need no decomposition.
+    # mixed tree joins the planes' states by rid before the filter
+    # compiler evaluates the WHOLE tree (_mixed_allowed) — And/Or/Not
+    # across planes need no decomposition.
     asof_allowed = None
     if as_of is not None and filters is not None:
         if planes == {"static"}:
@@ -651,9 +703,7 @@ def _build_window(
             # each versioned plane the tree reads resolves AS OF the
             # same seq from ITS op log (session-cached + chained via
             # asof_live_state); a mixed tree joins the planes' states
-            # by rid into ONE frame and the unchanged filter compiler
-            # evaluates the whole tree over it — And/Or/Not across
-            # planes need no decomposition.
+            # by rid into ONE frame (_mixed_allowed).
             states: dict[str, DataFrame] = {}
             if "label" in planes:
                 states["label"] = asof_live_state(
@@ -703,34 +753,13 @@ def _build_window(
                 )
             if len(states) == 1 and "static" not in planes:
                 # single-plane tree: filter the plane's state directly
-                snap = next(iter(states.values()))
-            else:
-                # mixed tree: immutable identity columns from the
-                # fields frame, each versioned plane LEFT-joined by
-                # rid — an Or across planes must stay answerable for
-                # a rid one plane's state lacks (its leaf evaluates
-                # null → that branch can't admit, the other still
-                # can); an inner join would silently turn Or into
-                # And-with-membership whenever plane logs diverge.
-                # (This corpus model's logs share one write schedule
-                # — pinned by test_meta_plane.py's shared-membership
-                # invariant — so today the joins are equal; the left
-                # join encodes the semantics, not the fixture.)
-                # CAVEAT (r13 advice): the Or-stays-answerable
-                # rationale does NOT extend to Not — a Not() wrapping
-                # a leaf over a plane a rid is absent from evaluates
-                # NOT(null) = null and the filter drops the row,
-                # where three-valued Not-semantics arguably should
-                # admit it. If plane logs are ever allowed to diverge
-                # in membership, evaluate Not-wrapped planes with an
-                # explicit IS NOT TRUE (or coalesce plane membership)
-                # before trusting mixed trees containing Not.
-                snap = fields.select(
-                    *[c for c in fields.columns if c in _STATIC_COLS]
+                asof_allowed = (
+                    next(iter(states.values()))
+                    .filter(filters.to_column())
+                    .select("rid")
                 )
-                for st in states.values():
-                    snap = snap.join(st, "rid", "left")
-            asof_allowed = snap.filter(filters.to_column()).select("rid")
+            else:
+                asof_allowed = _mixed_allowed(fields, states, filters)
 
     # `fields` scope: validate, then resolve the scoped field-key set
     # and the owning-resource frame once (both reused across legs).
@@ -759,23 +788,22 @@ def _build_window(
             scope_name = f"asof{as_of}_scope_rids:" + ",".join(
                 sorted(scoped_keys)
             )
-            scope_pinned = False  # snapshot-keyed: ages out with its seq
         else:
             scoped_fields = tpch.fields_multi(spark, sf_dir).filter(
                 F.col("field_key").isin(scoped_keys)
             )
             scope_name = "scope_rids:" + ",".join(sorted(scoped_keys))
-            scope_pinned = True  # live index membership, finite families
         # the owning-resource set of a field family is INDEX state
         # (the fielded postings sidecar's membership list), not
         # per-request work: without the sidecar every scoped request
         # re-ran the fields_multi scan + distinct once per leg that
-        # broadcasts it (r15, guide §2.4)
+        # broadcasts it (r15, guide §2.4). Unpinned: the key carries
+        # request-chosen field names (and a seq under as_of), so the
+        # family is unbounded and ages out under the byte budget
         scope_rids = cached_df(
             sf_dir,
             scope_name,
             lambda: scoped_fields.select("rid").distinct(),
-            pinned=scope_pinned,
         )
 
     if (

@@ -17,39 +17,46 @@ context.
 Regions.
 
 - ``cached_df``: persisted index sidecars (``_CACHE``, keys
-  ``(app, sf_dir, name)``), bounded in BYTES. Each entry's size is
-  probed once from the optimizer's statistics after it has had a
-  chance to materialize; when the known unpinned total exceeds
+  ``(app, sf_dir, name)``), bounded in BYTES. An entry is billed its
+  cached bytes once every partition of it is materialized, and not
+  before: an optimizer estimate is never billed, so it can never evict
+  the working set. When the billed unpinned total exceeds
   ``MAX_BYTES`` the least-recently-used unpinned entries are evicted.
   Eviction unpersists the entry — dropping storage only; any plan
   still holding the frame recomputes it lazily, so eviction can never
   change results. Hot shared index artifacts (the live text index,
   centroids, the relations index) are inserted with ``pinned=True``
-  and never evicted; the unbounded families (per-snapshot as-of
-  sidecars keyed by seq) are unpinned and age out. Sorted sidecars
-  take their layout from ``sorted_sidecar``: one range partition per
-  task slot of the session.
+  and never evicted; the families keyed by request or snapshot values
+  (per-snapshot as-of sidecars, field-scope rid sets) are unpinned
+  and age out. Sorted sidecars take their layout from
+  ``sorted_sidecar``: one range partition per task slot of the
+  session.
 - ``memo(region, key, build, bound)``: one LRU dict per named region.
-  The plan memos hold built plan handles — never results: every
-  collect() re-executes against the parquet inputs — and keep their
-  256 most recent requests: ``find_window`` (``api.find_request``'s
-  legs and fusion cut at the fusion window, shared by requests that
-  differ only in ``top_k``, cursor or reranker), ``find_request``
-  (each request's cursor, rerank and ``top_k`` cut over its window
-  plan) and ``find`` (``find.find``). The
-  other regions are unbounded, since their keys are table names,
-  paths and fixed sidecar names: ``cached_scalar``'s index-build
-  statistics, ``readers`` (``tpch.table``'s parquet reader frames
-  and the corpus frames derived from them, ``tpch.fields`` and
-  ``tpch.fields_multi``: plan handles holding no rows), the
-  streaming readStream schemas and the package-zip registration.
+  The find memos keep their 256 most recent requests: ``find_window``
+  (``api.find_request``'s legs and fusion cut at the fusion window,
+  shared by requests that differ only in ``top_k``, cursor or
+  reranker), ``find_request`` (each request's cursor, rerank and
+  ``top_k`` cut over its window) and ``find`` (``find.find``). The
+  window layer holds a persisted RESULT: a window ranks an immutable
+  input (a snapshot, or the session's pinned live index), so its
+  first collect fills it and every later page reads it. Only windows
+  at most the fusion window's 500 rows deep are persisted (a deeper,
+  user-chosen ``top_k`` keeps a plan handle), so the region holds at
+  most 256 × 500 rows. The other two layers hold plan handles.
+  Evicting a value unpersists every frame it persisted. The other
+  regions are unbounded, since their keys are table names, paths and
+  fixed sidecar names: ``cached_scalar``'s index-build statistics,
+  ``readers`` (``tpch.table``'s parquet reader frames and the corpus
+  frames derived from them, ``tpch.fields`` and
+  ``tpch.fields_multi``: plan handles holding no rows), the streaming
+  readStream schemas and the package-zip registration.
 
 Plan memos key a request with ``request_key``, built from canonical
 values only, so two different requests can never share a key.
 
-``clear()`` empties every region. Single-threaded by design: Spark
-driver-side query construction in this engine happens on one thread;
-the counters are plain ints.
+``clear()`` empties every region and unpersists every frame held in
+one. Single-threaded by design: Spark driver-side query construction
+in this engine happens on one thread; the counters are plain ints.
 """
 
 from __future__ import annotations
@@ -72,14 +79,6 @@ from pyspark.storagelevel import StorageLevel
 # rather than guarding the heap.
 MAX_BYTES = int(os.environ.get("NUCLIADB_SPARK_CACHE_MAX_BYTES", str(8 << 30)))
 
-# Size probes read the optimizer's statistics. Before an entry is
-# materialized those statistics are the child-plan ESTIMATE, which for
-# an un-analyzed derived frame can be absurd; anything above the clamp
-# is treated as "unknown" and billed at the default. A mis-billed
-# entry costs at worst an unnecessary eviction (storage-only drop).
-_SIZE_CLAMP = 1 << 40  # 1 TiB
-_SIZE_DEFAULT = 1 << 20  # 1 MiB
-
 
 class _Entry:
     __slots__ = ("df", "pinned", "size", "born")
@@ -87,7 +86,7 @@ class _Entry:
     def __init__(self, df: DataFrame, pinned: bool, born: int):
         self.df = df
         self.pinned = pinned
-        self.size: int | None = None  # probed lazily, once
+        self.size: int | None = None  # probed once materialized
         self.born = born
 
 
@@ -114,19 +113,24 @@ def reset_stats() -> None:
     EVICTIONS = 0
 
 
-def _probe_size(df: DataFrame) -> int:
-    """Entry size in bytes from the optimized plan's statistics —
-    actual cached bytes once the InMemoryRelation materialized, the
-    child estimate before that (clamped to the default when absurd)."""
+def _probe_size(df: DataFrame) -> int | None:
+    """Entry size in bytes: the cached bytes once every partition of
+    the entry is materialized, else None (not billed yet; probed again
+    at the next insert)."""
     try:
-        raw = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        builder = (
+            df.sparkSession._jsparkSession.sharedState()
+            .cacheManager()
+            .lookupCachedData(df._jdf)
+            .get()
+            .cachedRepresentation()
+            .cacheBuilder()
         )
-    except Exception:  # noqa: BLE001
-        return _SIZE_DEFAULT
-    if raw <= 0 or raw > _SIZE_CLAMP:
-        return _SIZE_DEFAULT
-    return raw
+        if not builder.isCachedColumnBuffersLoaded():
+            return None
+        return int(builder.sizeInBytesStats().value())
+    except Exception:  # noqa: BLE001 — unpersisted, or a dead context
+        return None
 
 
 def cached_names(sf_dir: str) -> list[str]:
@@ -173,10 +177,9 @@ def sorted_sidecar(df: DataFrame, *cols: str) -> DataFrame:
 
 
 def _enforce_budget() -> None:
-    """Probe sizes of entries that have aged one insert (a query ran
-    between the inserts, so their storage is normally materialized by
-    now), then evict unpinned LRU entries while the unpinned total
-    exceeds MAX_BYTES."""
+    """Probe the sizes of entries that have aged one insert and are not
+    billed yet, then evict unpinned LRU entries while the billed
+    unpinned total exceeds MAX_BYTES."""
     for e in _CACHE.values():
         if e.size is None and e.born < _INSERTS:
             e.size = _probe_size(e.df)
@@ -193,10 +196,20 @@ def _enforce_budget() -> None:
         del _CACHE[key]
         total -= e.size or 0
         EVICTIONS += 1
-        try:
-            e.df.unpersist()
-        except Exception:
-            pass  # dead context — storage is already gone
+        _unpersist(e.df)
+
+
+def _unpersist(value) -> None:
+    """Drop the storage of every frame ``value`` persisted: ``value``
+    itself, or the items of a tuple ``value``. Frames it did not
+    persist are left alone (an unpersist matches by plan, so it could
+    drop another frame's storage)."""
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame) and v.is_cached:
+            try:
+                v.unpersist()
+            except Exception:  # noqa: BLE001
+                pass  # dead context — storage is already gone
 
 
 def memo(
@@ -209,7 +222,8 @@ def memo(
     application, built (and stored) only on a miss. A ``None`` key —
     a request ``request_key`` cannot canonicalize — is built fresh and
     not stored. With a ``bound`` the region keeps that many most
-    recently used entries."""
+    recently used entries; evicting one unpersists the frames it
+    persisted."""
     if key is None:
         return build()
     store = _REGIONS.setdefault(region, OrderedDict())
@@ -218,7 +232,7 @@ def memo(
     if value is _MISSING:
         value = store[key] = build()
         while bound is not None and len(store) > bound:
-            store.popitem(last=False)
+            _unpersist(store.popitem(last=False)[1])
     else:
         store.move_to_end(key)
     return value
@@ -271,11 +285,11 @@ def request_key(*values) -> Hashable | None:
 
 
 def clear() -> None:
-    """Empty every region (unpersisting the cached frames)."""
+    """Empty every region, unpersisting the frames held in them."""
     for e in _CACHE.values():
-        try:
-            e.df.unpersist()
-        except Exception:
-            pass
+        _unpersist(e.df)
+    for store in _REGIONS.values():
+        for value in store.values():
+            _unpersist(value)
     _CACHE.clear()
     _REGIONS.clear()

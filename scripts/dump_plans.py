@@ -16,9 +16,10 @@ struct names of the streaming joins, the corpus directory
 (``<sf_dir>``) and the random suffix of temp directories
 (``tempfile.mkdtemp``, 8 characters) are normalized, so dumps taken
 from two checkouts compare with a plain ``diff -r``.
-One seat stays unstable after normalization: ``stream_stream_join``'s
-distinct-aggregate Expand lists ``click_id`` and ``purchase_id`` in
-either order, so two dumps of the same commit can differ there.
+Two seats stay unstable after normalization: the distinct-aggregate
+Expand of ``stream_stream_join`` (``click_id``, ``purchase_id``) and
+of ``kb_labelsets`` (``rid``, ``label``) lists its columns in either
+order, so two dumps of the same commit can differ there.
 Seats are built in sorted name order, so session caches are in the
 same state for the same glob set. A seat that fails to build is
 written as a one-line ``# FAILED`` record and reported on stderr.

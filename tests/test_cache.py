@@ -57,14 +57,19 @@ def test_cache_byte_budget_lru_eviction_unpersists(spark, sf_dir, monkeypatch):
     assert len(calls) == 1
 
     # one reset: clear() empties every region, the request-plan memo
-    # included, so a repeated request builds a new plan
+    # included, so a repeated request builds a new plan, and
+    # unpersists every window the find_window memo held
     req = lambda: api.FindRequest(  # noqa: E731 — fresh object each call
         query="europe asia shipment", features=["keyword"], top_k=5
     )
     first = api.find_request(spark, sf_dir, req())
     assert api.find_request(spark, sf_dir, req()) is first
+    first.collect()
+    windows = [v[1] for v in cache._REGIONS["find_window"].values()]
+    assert windows and all(w.is_cached for w in windows)
     cache.clear()
     assert not cache._CACHE
+    assert not any(w.is_cached or w.storageLevel.useMemory for w in windows)
     assert api.find_request(spark, sf_dir, req()) is not first
     cache.clear()
 
@@ -96,6 +101,68 @@ def test_cache_pinned_entries_survive_eviction(spark, monkeypatch):
     key = (spark.sparkContext.applicationId, "sf", "live_index")
     assert cache._CACHE[key].pinned
 
+    cache.clear()
+
+
+def test_size_probe_bills_only_materialized_entries(spark):
+    """An entry has no size until every partition of it is cached: an
+    unmaterialized or partly scanned entry is not billed."""
+    df = spark.range(0, 1000, 1, 4).persist()
+    assert cache._probe_size(df) is None
+    df.limit(1).collect()  # caches the first partition only
+    assert cache._probe_size(df) is None
+    df.count()
+    assert cache._probe_size(df) > 0
+    df.unpersist()
+
+
+def test_memo_eviction_unpersists_the_evicted_value(spark):
+    """A bounded memo region that evicts a value drops the storage of
+    the frames the value persisted, and leaves alone a frame it holds
+    but never persisted (an unpersist matches by plan, so that one
+    would drop an equal-plan frame persisted elsewhere)."""
+    cache.clear()
+    elsewhere = spark.range(7).persist()
+    held = spark.range(3).persist()
+    cache.memo("eviction", "a", lambda: ((), held, spark.range(7)), bound=1)
+    cache.memo("eviction", "b", lambda: ((), spark.range(4).persist()), bound=1)
+    assert not held.is_cached
+    assert not held.storageLevel.useMemory
+    assert elsewhere.storageLevel.useMemory
+    elsewhere.unpersist()
+    cache.clear()
+
+
+def test_scope_sidecars_of_request_chosen_fields_stay_in_budget(
+    spark, sf_dir, monkeypatch
+):
+    """Each scoped request over a new (here nonexistent) field name
+    inserts a live ``scope_rids`` sidecar keyed on that name. Those
+    are unpinned and billed once materialized: the pinned entries and
+    their bytes do not change, and the billed unpinned bytes stay
+    within MAX_BYTES."""
+    cache.clear()
+    cache.reset_stats()
+    monkeypatch.setattr(cache, "MAX_BYTES", 1)
+
+    def scoped(name):
+        req = api.FindRequest(
+            query="europe asia shipment", top_k=5, fields=["a/title", f"a/{name}"]
+        )
+        api.find_request(spark, sf_dir, req).collect()
+
+    def pinned():
+        return {k: e.size for k, e in cache._CACHE.items() if e.pinned}
+
+    scoped("warmup0")
+    scoped("warmup1")
+    before = pinned()
+    for i in range(6):
+        scoped(f"nope{i}")
+        billed = sum(e.size or 0 for e in cache._CACHE.values() if not e.pinned)
+        assert billed <= cache.MAX_BYTES
+    assert pinned() == before
+    assert cache.EVICTIONS >= 5
     cache.clear()
 
 

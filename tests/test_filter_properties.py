@@ -6,7 +6,7 @@ NotHidden must select the identical row set in Spark and DuckDB
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from nucliadb_spark.operators import filters as fx
@@ -75,3 +75,111 @@ def test_filter_tree_equivalence(harness, e):
         ).fetchall()
     }
     assert spark_ids == duck_ids, e.to_sql()
+
+
+# --- as-of mixed-plane trees over diverging plane logs ------------------------
+#
+# api._mixed_allowed evaluates an as-of filter tree whose leaves read
+# more than one plane over the planes' states LEFT-joined by rid. When
+# the plane logs diverge in membership, a rid can lack state in one
+# plane: each leaf over that plane is then false, so a Not over it
+# admits the rid (Not evaluates as IS NOT TRUE).
+
+_ABSENT = object()
+_RIDS = list(range(6))
+_LABELS = ["/l/a", "/l/a/x", "/l/b"]
+_LANGS = ["en", "de"]
+
+mixed_leaf = st.one_of(
+    st.sampled_from(["/l/a", "/l/a/x", "/l/b"]).map(fx.Facet),
+    st.sampled_from(_LANGS).map(lambda v: fx.FieldEquals("language", v)),
+    st.sampled_from(_RIDS).map(fx.ResourceIs),
+)
+mixed_expr = st.recursive(
+    mixed_leaf,
+    lambda children: st.one_of(
+        st.lists(children, min_size=2, max_size=3).map(fx.And),
+        st.lists(children, min_size=2, max_size=3).map(fx.Or),
+        children.map(fx.Not),
+    ),
+    max_leaves=5,
+)
+# per rid: no state in the plane, a null value, or a value
+label_states = st.lists(
+    st.one_of(
+        st.just(_ABSENT),
+        st.none(),
+        st.lists(st.sampled_from(_LABELS), max_size=2, unique=True),
+    ),
+    min_size=len(_RIDS),
+    max_size=len(_RIDS),
+)
+lang_states = st.lists(
+    st.one_of(st.just(_ABSENT), st.none(), st.sampled_from(_LANGS)),
+    min_size=len(_RIDS),
+    max_size=len(_RIDS),
+)
+
+
+def _admits(e, rid, labels, lang) -> bool:
+    """Reference: a leaf over state the rid lacks (absent or null) is
+    false; And/Or/Not are two-valued."""
+    if isinstance(e, fx.And):
+        return all(_admits(x, rid, labels, lang) for x in e.operands)
+    if isinstance(e, fx.Or):
+        return any(_admits(x, rid, labels, lang) for x in e.operands)
+    if isinstance(e, fx.Not):
+        return not _admits(e.operand, rid, labels, lang)
+    if isinstance(e, fx.Facet):
+        return labels not in (_ABSENT, None) and any(
+            lb == e.facet or lb.startswith(e.facet + "/") for lb in labels
+        )
+    if isinstance(e, fx.FieldEquals):
+        return lang not in (_ABSENT, None) and lang == e.value
+    return rid == e.rid
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(trees=st.lists(mixed_expr, min_size=1, max_size=4), labels=label_states, langs=lang_states)
+@example(
+    trees=[fx.Not(fx.Facet("/l/a")), fx.Or([fx.Facet("/l/b"), fx.Not(fx.FieldEquals("language", "en"))])],
+    labels=[_ABSENT] * len(_RIDS),
+    langs=["en", _ABSENT, None, "de", "en", _ABSENT],
+)
+def test_mixed_tree_over_diverging_planes(spark, trees, labels, langs):
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from nucliadb_spark import api
+
+    fields = spark.createDataFrame([(r,) for r in _RIDS], "rid long")
+    states = {
+        "label": spark.createDataFrame(
+            [(r, v) for r, v in zip(_RIDS, labels) if v is not _ABSENT],
+            "rid long, labels array<string>",
+        ),
+        "meta": spark.createDataFrame(
+            [(r, v) for r, v in zip(_RIDS, langs) if v is not _ABSENT],
+            "rid long, language string",
+        ),
+    }
+    allowed = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            api._mixed_allowed(fields, states, t).withColumn("tree", F.lit(i))
+            for i, t in enumerate(trees)
+        ],
+    )
+    got = {(r.tree, r.rid) for r in allowed.collect()}
+    want = {
+        (i, rid)
+        for i, t in enumerate(trees)
+        for rid, lb, lang in zip(_RIDS, labels, langs)
+        if _admits(t, rid, lb, lang)
+    }
+    assert got == want, [t.to_sql() for t in trees]

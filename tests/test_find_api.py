@@ -1053,7 +1053,8 @@ def test_request_plan_memo_reuses_plan_not_results(spark, sf_dir):
                                        features=["keyword"], top_k=7)
     )
     assert other is not a
-    # plan handle reuse is NOT result caching: collect re-executes
+    # the handle pages the persisted window; its rows equal a fresh
+    # build's, which shares nothing with the memo
     assert a.collect() == api._build_find_request(
         spark, sf_dir, req()
     ).collect()
@@ -1109,6 +1110,13 @@ def _window_keys(sf_dir, req):
     return keys, (app, cache.request_key(sf_dir, api._window_request(req)))
 
 
+def _window_frame(sf_dir, req):
+    """The frame the ``find_window`` memo holds for ``req``'s window."""
+    from nucliadb_spark import cache
+
+    return cache._REGIONS["find_window"][_window_keys(sf_dir, req)[1]][1]
+
+
 def test_top_k_variants_share_one_window_plan(spark, sf_dir):
     """Requests that differ only in top_k (both within the window) build
     one window plan and keep two request handles: each repeat returns
@@ -1134,7 +1142,7 @@ def test_top_k_variants_share_one_window_plan(spark, sf_dir):
 
 def test_search_after_page_shares_the_window_plan(spark, sf_dir):
     """A next page (cursor = the first page's last row) reuses the
-    first page's window plan and tiles the fused ranking."""
+    first page's persisted window and tiles the fused ranking."""
     from dataclasses import replace
 
     first = api.FindRequest(query="cursor page shared window", top_k=5)
@@ -1145,8 +1153,47 @@ def test_search_after_page_shares_the_window_plan(spark, sf_dir):
     nxt = replace(first, search_after=(last.score, last.id))
     page2 = api.find_request(spark, sf_dir, nxt).collect()
     assert _window_keys(sf_dir, nxt)[0] == before
+    assert _window_frame(sf_dir, first).is_cached
     deep = api.find_request(spark, sf_dir, replace(first, top_k=10)).collect()
     assert page1 + page2 == deep
+    assert deep == api._build_find_request(
+        spark, sf_dir, replace(first, top_k=10), memoize=False
+    ).collect()
+
+
+def test_top_k_variant_reads_the_persisted_window_in_one_job(spark, sf_dir):
+    """Once a request's collect fills its window, a top_k variant
+    builds and runs in one Spark job, and its rows equal a fresh
+    build's."""
+    from dataclasses import replace
+
+    first = api.FindRequest(query="persisted window variant", top_k=5)
+    assert len(api.find_request(spark, sf_dir, first).collect()) == 5
+    assert _window_frame(sf_dir, first).is_cached
+    variant = replace(first, top_k=12)
+    sc = spark.sparkContext
+    sc.setJobGroup("window-variant", "window-variant")
+    try:
+        rows = api.find_request(spark, sf_dir, variant).collect()
+    finally:
+        sc.setJobGroup("idle", "idle")
+    assert len(sc.statusTracker().getJobIdsForGroup("window-variant")) == 1
+    assert len(rows) == 12
+    assert rows == api._build_find_request(
+        spark, sf_dir, variant, memoize=False
+    ).collect()
+
+
+def test_only_fusion_deep_windows_are_persisted(spark, sf_dir):
+    """A window at most the fusion window's 500 rows deep is persisted;
+    a deeper, user-chosen top_k keeps an unpersisted plan handle."""
+    reqs = [
+        api.FindRequest(query="deep window depth", features=["keyword"], top_k=k)
+        for k in (planner.MAX_RANK_FUSION_WINDOW, planner.MAX_RANK_FUSION_WINDOW + 1)
+    ]
+    for req in reqs:
+        api.find_request(spark, sf_dir, req)
+    assert [_window_frame(sf_dir, r).is_cached for r in reqs] == [True, False]
 
 
 def test_window_hit_replays_horizon_checks(spark, tmp_path_factory, sf_dir):
