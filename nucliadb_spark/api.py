@@ -12,10 +12,17 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from nucliadb_spark import serving
-from nucliadb_spark.cache import cached_df, cached_names, memo, request_key
+from nucliadb_spark.cache import (
+    cached_df,
+    cached_names,
+    forget,
+    memo,
+    request_key,
+    touch,
+)
 from nucliadb_spark.functions import frames, models
 from nucliadb_spark.operators import bm25, fusion, knn
 from nucliadb_spark.operators.filters import Expr
@@ -206,31 +213,32 @@ def _mixed_allowed(
     fixture.)
 
     The rule for a rid a plane lacks: it has no state there at the
-    seq, so each leaf over that plane is false. The leaf itself reads
-    null, and every ``Not`` evaluates as ``IS NOT TRUE``
-    (``_not_is_not_true``), which makes a null leaf count as false
-    under And, Or and Not alike: ``Not(Facet(x))`` admits a rid the
-    label plane lacks."""
+    seq, so each leaf over that plane is false, and a ``Not`` over
+    such a leaf is true. Each state carries a membership flag
+    ``_in_<plane>`` into the join and each leaf over the plane is
+    guarded by it (``filters.Present``); everything else compiles as
+    the live path does, so a null VALUE in a row the plane has (a
+    missing ``extra`` key, a null language) keeps the leaf's three-
+    valued result and the tree admits the rows a live filter
+    admits."""
     snap = fields.select(*[c for c in fields.columns if c in _STATIC_COLS])
-    for st in states.values():
-        snap = snap.join(st, "rid", "left")
-    return snap.filter(_not_is_not_true(filters)).select("rid")
+    for plane, st in states.items():
+        flagged = st.withColumn(f"_in_{plane}", F.lit(True))
+        snap = snap.join(flagged, "rid", "left")
+    return snap.filter(_plane_guarded(filters).to_column()).select("rid")
 
 
-def _not_is_not_true(expr: Expr) -> Column:
-    """``expr`` compiled with every ``Not`` as ``IS NOT TRUE``: a Not
-    over a null operand is true, not null."""
-    from nucliadb_spark.operators.filters import And, Not, Or
+def _plane_guarded(expr: Expr) -> Expr:
+    """``expr`` with each leaf over a versioned plane wrapped in
+    ``Present`` on that plane's membership flag."""
+    from nucliadb_spark.operators.filters import And, Not, Or, Present
 
-    if isinstance(expr, Not):
-        return ~F.coalesce(_not_is_not_true(expr.operand), F.lit(False))
     if isinstance(expr, (And, Or)):
-        cols = [_not_is_not_true(e) for e in expr.operands]
-        out = cols[0]
-        for col in cols[1:]:
-            out = out & col if isinstance(expr, And) else out | col
-        return out
-    return expr.to_column()
+        return type(expr)([_plane_guarded(e) for e in expr.operands])
+    if isinstance(expr, Not):
+        return Not(_plane_guarded(expr.operand))
+    (plane,) = _filter_planes(expr)
+    return expr if plane == "static" else Present(expr, f"_in_{plane}")
 
 
 @dataclass
@@ -470,25 +478,46 @@ def find_request(spark: SparkSession, sf_dir: str, req: FindRequest) -> DataFram
     included), and every hit repeats them: a vacuum after the first
     request must still fail a repeat, or a ``top_k`` variant, below
     its horizon. The checks read driver-side state only, so a hit
-    runs no Spark job."""
-    return _checked_memo(
-        spark,
-        "find_request",
-        request_key(sf_dir, req),
-        lambda: _build_find_request(spark, sf_dir, req, memoize=True),
-    )
+    runs no Spark job. A request entry also records the windows its
+    page reads: a hit marks them recently used, so a hot request's
+    window is not the one evicted, and a hit whose window was evicted
+    builds the page anew, since the old page would recompute every
+    leg."""
+    key = request_key(sf_dir, req)
+
+    def build() -> tuple[frozenset, DataFrame]:
+        reads: set = set()
+        _WINDOW_READS.append(reads)
+        try:
+            df = _build_find_request(spark, sf_dir, req, memoize=True)
+        finally:
+            _WINDOW_READS.pop()
+        return frozenset(reads), df
+
+    windows, df = _checked_memo(spark, "find_request", key, build)
+    if not all(touch("find_window", w) for w in windows):
+        forget("find_request", key)
+        windows, df = _checked_memo(spark, "find_request", key, build)
+    for reads in _WINDOW_READS:
+        reads.update(windows)
+    return df
 
 
-def _checked_memo(spark: SparkSession, region: str, key, build) -> DataFrame:
-    """``build()``'s plan memoized in ``region`` under ``key`` with the
+# the find_window keys each enclosing find_request build reads (a
+# prequery request's page reads its main and prequery windows)
+_WINDOW_READS: list[set] = []
+
+
+def _checked_memo(spark: SparkSession, region: str, key, build):
+    """``build()``'s value memoized in ``region`` under ``key`` with the
     horizon checks the build recorded; a hit repeats them, and inside
     an enclosing build the repeats land in its record too."""
-    checks, df = memo(
+    checks, value = memo(
         region, key, lambda: serving.recorded_checks(build), bound=256
     )
     for check_dir, family, seq in checks:
         serving.check_horizon(spark, check_dir, family, seq)
-    return df
+    return value
 
 
 def _build_find_request(
@@ -513,6 +542,9 @@ def _build_find_request(
         return window
 
     window = _checked_memo(spark, "find_window", key, build)
+    if key is not None:
+        for reads in _WINDOW_READS:
+            reads.add(key)
     return _page(spark, sf_dir, req, window)
 
 

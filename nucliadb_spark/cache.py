@@ -18,9 +18,10 @@ Regions.
 
 - ``cached_df``: persisted index sidecars (``_CACHE``, keys
   ``(app, sf_dir, name)``), bounded in BYTES. An entry is billed its
-  cached bytes once every partition of it is materialized, and not
-  before: an optimizer estimate is never billed, so it can never evict
-  the working set. When the billed unpinned total exceeds
+  cached bytes once every partition of it is materialized; one only
+  partly materialized after three probes is billed a fixed 1 MiB. An
+  optimizer estimate is never billed, so it can never evict the
+  working set. When the billed unpinned total exceeds
   ``MAX_BYTES`` the least-recently-used unpinned entries are evicted.
   Eviction unpersists the entry — dropping storage only; any plan
   still holding the frame recomputes it lazily, so eviction can never
@@ -42,8 +43,11 @@ Regions.
   first collect fills it and every later page reads it. Only windows
   at most the fusion window's 500 rows deep are persisted (a deeper,
   user-chosen ``top_k`` keeps a plan handle), so the region holds at
-  most 256 × 500 rows. The other two layers hold plan handles.
-  Evicting a value unpersists every frame it persisted. The other
+  most 256 × 500 rows. The other two layers hold plan handles. A
+  ``find_request`` hit marks the windows its page reads most recently
+  used (``touch``); a page whose window was evicted is built anew
+  over a new window. Evicting a value unpersists every frame it
+  persisted. The other
   regions are unbounded, since their keys are table names, paths and
   fixed sidecar names: ``cached_scalar``'s index-build statistics,
   ``readers`` (``tpch.table``'s parquet reader frames and the corpus
@@ -80,14 +84,25 @@ from pyspark.storagelevel import StorageLevel
 MAX_BYTES = int(os.environ.get("NUCLIADB_SPARK_CACHE_MAX_BYTES", str(8 << 30)))
 
 
+# An entry is billed its cached bytes once every partition of it is
+# materialized. One still not fully materialized after _PROBES probes
+# (one per later insert) was only partly scanned, by an unordered
+# limit or a take, and may never fill: it is billed _SIZE_DEFAULT and
+# not probed again. Each probe looks the plan up among every cached
+# plan, so the cap also bounds that work.
+_PROBES = 3
+_SIZE_DEFAULT = 1 << 20  # 1 MiB
+
+
 class _Entry:
-    __slots__ = ("df", "pinned", "size", "born")
+    __slots__ = ("df", "pinned", "size", "born", "probes")
 
     def __init__(self, df: DataFrame, pinned: bool, born: int):
         self.df = df
         self.pinned = pinned
-        self.size: int | None = None  # probed once materialized
+        self.size: int | None = None  # billed once probed materialized
         self.born = born
+        self.probes = 0
 
 
 _CACHE: OrderedDict[tuple[str, str, str], _Entry] = OrderedDict()
@@ -115,8 +130,7 @@ def reset_stats() -> None:
 
 def _probe_size(df: DataFrame) -> int | None:
     """Entry size in bytes: the cached bytes once every partition of
-    the entry is materialized, else None (not billed yet; probed again
-    at the next insert)."""
+    the entry is materialized, else None."""
     try:
         builder = (
             df.sparkSession._jsparkSession.sharedState()
@@ -183,6 +197,9 @@ def _enforce_budget() -> None:
     for e in _CACHE.values():
         if e.size is None and e.born < _INSERTS:
             e.size = _probe_size(e.df)
+            e.probes += 1
+            if e.size is None and e.probes >= _PROBES:
+                e.size = _SIZE_DEFAULT
     total = sum(e.size or 0 for e in _CACHE.values() if not e.pinned)
     if total <= MAX_BYTES:
         return
@@ -200,10 +217,12 @@ def _enforce_budget() -> None:
 
 
 def _unpersist(value) -> None:
-    """Drop the storage of every frame ``value`` persisted: ``value``
-    itself, or the items of a tuple ``value``. Frames it did not
-    persist are left alone (an unpersist matches by plan, so it could
-    drop another frame's storage)."""
+    """Unpersist every frame ``value`` persisted: ``value`` itself, or
+    the items of a tuple ``value``. A frame it holds but never
+    persisted is left alone. Unpersisting drops the cache entry of the
+    frame's plan, which every frame with an equal plan shares: such a
+    frame, persisted under another key, loses its storage too, and its
+    next collect recomputes it."""
     for v in value if isinstance(value, tuple) else (value,):
         if isinstance(v, DataFrame) and v.is_cached:
             try:
@@ -236,6 +255,22 @@ def memo(
     else:
         store.move_to_end(key)
     return value
+
+
+def touch(region: str, key: Hashable) -> bool:
+    """Whether ``region`` holds ``key`` for the live application; if
+    so, mark it the most recently used."""
+    store = _REGIONS.get(region, {})
+    key = (_app(), key)
+    if key not in store:
+        return False
+    store.move_to_end(key)
+    return True
+
+
+def forget(region: str, key: Hashable) -> None:
+    """Drop ``key`` from ``region`` without unpersisting its value."""
+    _REGIONS.get(region, {}).pop((_app(), key), None)
 
 
 def cached_scalar(sf_dir: str, name: str, compute: Callable[[], object]):

@@ -93,6 +93,32 @@ class Not(Expr):
 
 
 @dataclass
+class Present(Expr):
+    """``operand`` over a row whose ``column`` is non-null, false over
+    one whose ``column`` is null.
+
+    Guards a leaf over a LEFT-joined plane: the join leaves ``column``
+    (a membership flag) null exactly where the plane has no row, and
+    there the leaf is false, so a ``Not`` over it is true. A null
+    value in a row the plane does have keeps the leaf's own three-
+    valued result."""
+
+    operand: Expr
+    column: str
+
+    def to_column(self) -> Column:
+        return F.when(
+            F.col(self.column).isNotNull(), self.operand.to_column()
+        ).otherwise(F.lit(False))
+
+    def to_sql(self) -> str:
+        return (
+            f"(CASE WHEN {self.column} IS NOT NULL "
+            f"THEN {self.operand.to_sql()} ELSE FALSE END)"
+        )
+
+
+@dataclass
 class Facet(Expr):
     """Label/facet path filter with hierarchical prefix semantics.
 

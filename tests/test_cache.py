@@ -116,6 +116,27 @@ def test_size_probe_bills_only_materialized_entries(spark):
     df.unpersist()
 
 
+def test_partly_scanned_entry_is_billed_the_default_after_capped_probes(
+    spark, monkeypatch
+):
+    """An entry whose partitions are never all cached (an unordered
+    limit scans one) is probed once per later insert; after the last
+    allowed probe it is billed the fixed default and not probed
+    again."""
+    cache.clear()
+    monkeypatch.setattr(cache, "MAX_BYTES", 1 << 40)
+    part = cache.cached_df("sf", "partly", lambda: spark.range(0, 1000, 1, 4))
+    part.limit(1).collect()
+    entry = cache._CACHE[(spark.sparkContext.applicationId, "sf", "partly")]
+    for i in range(cache._PROBES):
+        assert entry.size is None
+        cache.cached_df("sf", f"later{i}", lambda i=i: spark.range(i, i + 10))
+    assert entry.size == cache._SIZE_DEFAULT
+    cache.cached_df("sf", "one_more", lambda: spark.range(50, 60))
+    assert entry.probes == cache._PROBES
+    cache.clear()
+
+
 def test_memo_eviction_unpersists_the_evicted_value(spark):
     """A bounded memo region that evicts a value drops the storage of
     the frames the value persisted, and leaves alone a frame it holds

@@ -1053,11 +1053,9 @@ def test_request_plan_memo_reuses_plan_not_results(spark, sf_dir):
                                        features=["keyword"], top_k=7)
     )
     assert other is not a
-    # the handle pages the persisted window; its rows equal a fresh
-    # build's, which shares nothing with the memo
-    assert a.collect() == api._build_find_request(
-        spark, sf_dir, req()
-    ).collect()
+    # the handle pages the persisted window; its rows equal a build
+    # recomputed from the inputs
+    assert a.collect() == _fresh_rows(spark, sf_dir, req())
 
 
 class _RidParity(Expr):
@@ -1091,7 +1089,7 @@ def test_request_memo_keys_cannot_alias_equal_repr_filters(spark, sf_dir):
     got = []
     for req in reqs:
         rows = [(r.id, r.score) for r in api.find_request(spark, sf_dir, req).collect()]
-        fresh = api._build_find_request(spark, sf_dir, req).collect()
+        fresh = _fresh_rows(spark, sf_dir, req)
         assert rows == [(r.id, r.score) for r in fresh]
         got.append(rows)
     assert got[0] and got[1] and got[0] != got[1]
@@ -1117,6 +1115,26 @@ def _window_frame(sf_dir, req):
     return cache._REGIONS["find_window"][_window_keys(sf_dir, req)[1]][1]
 
 
+def _fresh_rows(spark, sf_dir, req):
+    """The rows of ``req`` built fresh and recomputed from the inputs.
+    Spark's cache manager swaps a persisted frame in for any plan equal
+    to it, so a fresh build of a memoized window would read the
+    persisted rows: the memoized window is unpersisted for the fresh
+    collect and persisted again after it."""
+    from nucliadb_spark import cache
+
+    key = _window_keys(sf_dir, req)[1]
+    window = cache._REGIONS.get("find_window", {}).get(key, (None, None))[1]
+    held = window is not None and window.is_cached
+    if held:
+        window.unpersist(blocking=True)
+    try:
+        return api._build_find_request(spark, sf_dir, req).collect()
+    finally:
+        if held:
+            window.persist()
+
+
 def test_top_k_variants_share_one_window_plan(spark, sf_dir):
     """Requests that differ only in top_k (both within the window) build
     one window plan and keep two request handles: each repeat returns
@@ -1137,7 +1155,7 @@ def test_top_k_variants_share_one_window_plan(spark, sf_dir):
     for req, df in zip(reqs, (a, b)):
         rows = df.collect()
         assert len(rows) == req.top_k
-        assert rows == api._build_find_request(spark, sf_dir, req).collect()
+        assert rows == _fresh_rows(spark, sf_dir, req)
 
 
 def test_search_after_page_shares_the_window_plan(spark, sf_dir):
@@ -1156,9 +1174,7 @@ def test_search_after_page_shares_the_window_plan(spark, sf_dir):
     assert _window_frame(sf_dir, first).is_cached
     deep = api.find_request(spark, sf_dir, replace(first, top_k=10)).collect()
     assert page1 + page2 == deep
-    assert deep == api._build_find_request(
-        spark, sf_dir, replace(first, top_k=10), memoize=False
-    ).collect()
+    assert deep == _fresh_rows(spark, sf_dir, replace(first, top_k=10))
 
 
 def test_top_k_variant_reads_the_persisted_window_in_one_job(spark, sf_dir):
@@ -1179,9 +1195,7 @@ def test_top_k_variant_reads_the_persisted_window_in_one_job(spark, sf_dir):
         sc.setJobGroup("idle", "idle")
     assert len(sc.statusTracker().getJobIdsForGroup("window-variant")) == 1
     assert len(rows) == 12
-    assert rows == api._build_find_request(
-        spark, sf_dir, variant, memoize=False
-    ).collect()
+    assert rows == _fresh_rows(spark, sf_dir, variant)
 
 
 def test_only_fusion_deep_windows_are_persisted(spark, sf_dir):
@@ -1194,6 +1208,32 @@ def test_only_fusion_deep_windows_are_persisted(spark, sf_dir):
     for req in reqs:
         api.find_request(spark, sf_dir, req)
     assert [_window_frame(sf_dir, r).is_cached for r in reqs] == [True, False]
+
+
+def test_request_hit_keeps_its_window_recent(spark, sf_dir):
+    """A find_request hit marks the window its page reads most recently
+    used; a hit whose window was evicted (and so unpersisted) builds
+    its page anew over a new window."""
+    from nucliadb_spark import cache
+
+    reqs = [
+        api.FindRequest(query=f"window recency {q}", features=["keyword"], top_k=5)
+        for q in ("first", "second")
+    ]
+    pages = [api.find_request(spark, sf_dir, r) for r in reqs]
+    wkeys = [_window_keys(sf_dir, r)[1] for r in reqs]
+    order = lambda: [k for k in cache._REGIONS["find_window"] if k in wkeys]  # noqa: E731
+    assert order() == wkeys
+    assert api.find_request(spark, sf_dir, reqs[0]) is pages[0]
+    assert order() == wkeys[::-1]
+
+    evicted = cache._REGIONS["find_window"].pop(wkeys[0])
+    cache._unpersist(evicted)
+    again = api.find_request(spark, sf_dir, reqs[0])
+    assert again is not pages[0]
+    assert wkeys[0] in cache._REGIONS["find_window"]
+    assert _window_frame(sf_dir, reqs[0]).is_cached
+    assert again.collect() == _fresh_rows(spark, sf_dir, reqs[0])
 
 
 def test_window_hit_replays_horizon_checks(spark, tmp_path_factory, sf_dir):
