@@ -17,11 +17,12 @@ context.
 Regions.
 
 - ``cached_df``: persisted index sidecars (``_CACHE``, keys
-  ``(app, sf_dir, name)``), bounded in BYTES. An entry is billed its
-  cached bytes once every partition of it is materialized; one only
-  partly materialized after three probes is billed a fixed 1 MiB. An
-  optimizer estimate is never billed, so it can never evict the
-  working set. When the billed unpinned total exceeds
+  ``(app, sf_dir, name)``), bounded in BYTES. An entry is billed the
+  bytes its cached buffers hold, probed at every later insert until
+  all of its partitions are materialized, so a partly scanned entry
+  is billed what it holds. An optimizer estimate is never billed, so
+  it can never evict the working set. When the billed unpinned total
+  exceeds
   ``MAX_BYTES`` the least-recently-used unpinned entries are evicted.
   Eviction unpersists the entry — dropping storage only; any plan
   still holding the frame recomputes it lazily, so eviction can never
@@ -47,13 +48,13 @@ Regions.
   ``find_request`` hit marks the windows its page reads most recently
   used (``touch``); a page whose window was evicted is built anew
   over a new window. Evicting a value unpersists every frame it
-  persisted. The other
-  regions are unbounded, since their keys are table names, paths and
-  fixed sidecar names: ``cached_scalar``'s index-build statistics,
-  ``readers`` (``tpch.table``'s parquet reader frames and the corpus
-  frames derived from them, ``tpch.fields`` and
-  ``tpch.fields_multi``: plan handles holding no rows), the streaming
-  readStream schemas and the package-zip registration.
+  persisted. The other regions are unbounded, since their keys are
+  table names, paths and fixed sidecar names: ``cached_scalar``'s
+  index-build statistics, ``readers`` (``tpch.table``'s parquet
+  reader frames and the corpus frames derived from them,
+  ``tpch.fields`` and ``tpch.fields_multi``: plan handles holding no
+  rows), the streaming readStream schemas and the package-zip
+  registration.
 
 Plan memos key a request with ``request_key``, built from canonical
 values only, so two different requests can never share a key.
@@ -84,25 +85,16 @@ from pyspark.storagelevel import StorageLevel
 MAX_BYTES = int(os.environ.get("NUCLIADB_SPARK_CACHE_MAX_BYTES", str(8 << 30)))
 
 
-# An entry is billed its cached bytes once every partition of it is
-# materialized. One still not fully materialized after _PROBES probes
-# (one per later insert) was only partly scanned, by an unordered
-# limit or a take, and may never fill: it is billed _SIZE_DEFAULT and
-# not probed again. Each probe looks the plan up among every cached
-# plan, so the cap also bounds that work.
-_PROBES = 3
-_SIZE_DEFAULT = 1 << 20  # 1 MiB
-
-
 class _Entry:
-    __slots__ = ("df", "pinned", "size", "born", "probes")
+    __slots__ = ("df", "pinned", "size", "loaded", "born", "builder")
 
     def __init__(self, df: DataFrame, pinned: bool, born: int):
         self.df = df
         self.pinned = pinned
-        self.size: int | None = None  # billed once probed materialized
+        self.size: int | None = None  # cached bytes at the last probe
+        self.loaded = False  # all partitions materialized: size is final
         self.born = born
-        self.probes = 0
+        self.builder = None  # the JVM cache builder, looked up once
 
 
 _CACHE: OrderedDict[tuple[str, str, str], _Entry] = OrderedDict()
@@ -128,21 +120,25 @@ def reset_stats() -> None:
     EVICTIONS = 0
 
 
-def _probe_size(df: DataFrame) -> int | None:
-    """Entry size in bytes: the cached bytes once every partition of
-    the entry is materialized, else None."""
+def _probe_size(e: _Entry) -> tuple[int, bool] | None:
+    """``(bytes, loaded)``: the bytes the entry's cached buffers hold
+    now and whether all of its partitions are materialized, or None
+    while it has no cache entry. Only the first probe looks the plan
+    up among the cached plans."""
     try:
-        builder = (
-            df.sparkSession._jsparkSession.sharedState()
-            .cacheManager()
-            .lookupCachedData(df._jdf)
-            .get()
-            .cachedRepresentation()
-            .cacheBuilder()
+        if e.builder is None:
+            e.builder = (
+                e.df.sparkSession._jsparkSession.sharedState()
+                .cacheManager()
+                .lookupCachedData(e.df._jdf)
+                .get()
+                .cachedRepresentation()
+                .cacheBuilder()
+            )
+        return (
+            int(e.builder.sizeInBytesStats().value()),
+            bool(e.builder.isCachedColumnBuffersLoaded()),
         )
-        if not builder.isCachedColumnBuffersLoaded():
-            return None
-        return int(builder.sizeInBytesStats().value())
     except Exception:  # noqa: BLE001 — unpersisted, or a dead context
         return None
 
@@ -192,14 +188,13 @@ def sorted_sidecar(df: DataFrame, *cols: str) -> DataFrame:
 
 def _enforce_budget() -> None:
     """Probe the sizes of entries that have aged one insert and are not
-    billed yet, then evict unpinned LRU entries while the billed
-    unpinned total exceeds MAX_BYTES."""
+    fully materialized yet, then evict unpinned LRU entries while the
+    billed unpinned total exceeds MAX_BYTES."""
     for e in _CACHE.values():
-        if e.size is None and e.born < _INSERTS:
-            e.size = _probe_size(e.df)
-            e.probes += 1
-            if e.size is None and e.probes >= _PROBES:
-                e.size = _SIZE_DEFAULT
+        if not e.loaded and e.born < _INSERTS:
+            probed = _probe_size(e)
+            if probed is not None:
+                e.size, e.loaded = probed
     total = sum(e.size or 0 for e in _CACHE.values() if not e.pinned)
     if total <= MAX_BYTES:
         return

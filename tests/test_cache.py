@@ -16,7 +16,7 @@ def test_cache_byte_budget_lru_eviction_unpersists(spark, sf_dir, monkeypatch):
     # deterministic sizing: every entry bills 100 bytes, budget 250 —
     # so at most two aged (probed) entries plus the newcomer survive
     monkeypatch.setattr(cache, "MAX_BYTES", 250)
-    monkeypatch.setattr(cache, "_probe_size", lambda df: 100)
+    monkeypatch.setattr(cache, "_probe_size", lambda e: (100, True))
 
     frames = {}
     for i in range(5):
@@ -78,7 +78,7 @@ def test_cache_pinned_entries_survive_eviction(spark, monkeypatch):
     cache.clear()
     cache.reset_stats()
     monkeypatch.setattr(cache, "MAX_BYTES", 100)
-    monkeypatch.setattr(cache, "_probe_size", lambda df: 100)
+    monkeypatch.setattr(cache, "_probe_size", lambda e: (100, True))
 
     # NB: distinct plans per entry — unpersist matches by logical
     # plan, so two entries over identical plans share storage
@@ -104,36 +104,37 @@ def test_cache_pinned_entries_survive_eviction(spark, monkeypatch):
     cache.clear()
 
 
-def test_size_probe_bills_only_materialized_entries(spark):
-    """An entry has no size until every partition of it is cached: an
-    unmaterialized or partly scanned entry is not billed."""
-    df = spark.range(0, 1000, 1, 4).persist()
-    assert cache._probe_size(df) is None
-    df.limit(1).collect()  # caches the first partition only
-    assert cache._probe_size(df) is None
-    df.count()
-    assert cache._probe_size(df) > 0
-    df.unpersist()
+def test_size_probe_reads_the_bytes_an_entry_holds(spark):
+    """A probe reads the bytes an entry's cache holds, never an
+    estimate: nothing before any scan, the first partition's bytes
+    after a partial scan, and every partition's bytes, loaded, after
+    a full one."""
+    e = cache._Entry(spark.range(0, 1000, 1, 4).persist(), False, 0)
+    assert cache._probe_size(e) == (0, False)
+    e.df.limit(1).collect()  # caches the first partition only
+    part, loaded = cache._probe_size(e)
+    assert part > 0 and not loaded
+    e.df.count()
+    full, loaded = cache._probe_size(e)
+    assert full > part and loaded
+    e.df.unpersist()
 
 
-def test_partly_scanned_entry_is_billed_the_default_after_capped_probes(
-    spark, monkeypatch
-):
-    """An entry whose partitions are never all cached (an unordered
-    limit scans one) is probed once per later insert; after the last
-    allowed probe it is billed the fixed default and not probed
-    again."""
+def test_partly_scanned_entry_is_billed_what_it_holds(spark, monkeypatch):
+    """An entry whose partitions are not all cached (an unordered limit
+    scans one) is billed the bytes it holds, and probed again at each
+    later insert until it is fully materialized."""
     cache.clear()
     monkeypatch.setattr(cache, "MAX_BYTES", 1 << 40)
     part = cache.cached_df("sf", "partly", lambda: spark.range(0, 1000, 1, 4))
     part.limit(1).collect()
     entry = cache._CACHE[(spark.sparkContext.applicationId, "sf", "partly")]
-    for i in range(cache._PROBES):
-        assert entry.size is None
-        cache.cached_df("sf", f"later{i}", lambda i=i: spark.range(i, i + 10))
-    assert entry.size == cache._SIZE_DEFAULT
-    cache.cached_df("sf", "one_more", lambda: spark.range(50, 60))
-    assert entry.probes == cache._PROBES
+    cache.cached_df("sf", "later0", lambda: spark.range(0, 10))
+    assert entry.size > 0 and not entry.loaded
+    partial = entry.size
+    part.count()
+    cache.cached_df("sf", "later1", lambda: spark.range(1, 11))
+    assert entry.size > partial and entry.loaded
     cache.clear()
 
 
